@@ -16,14 +16,18 @@ standard shuffle-native formulation:
 * ``small-star``: every node connects its smaller-or-equal neighbors
   (and itself) to the minimum of that set.
 
-Each operation is one shuffle on node id (a groupBy-min plus an
-equi-join that AQE plans as a broadcast when the min-table is small);
-the pair provably converges in O(log n) rounds regardless of graph
-diameter — unlike naive label propagation, whose round count is the
-component diameter (fatal for chain-shaped graphs at 100 TB). Rounds
-``localCheckpoint`` eagerly: without lineage truncation the plan tree
-doubles per iteration and the driver, not the data, becomes the
-bottleneck.
+Each operation takes its neighborhood minimum with a window over the
+edge relation partitioned by node id, so a round (large-star then
+small-star) is one pass of the edges per step and plans at most three
+exchanges, with no join. The window gives up the map-side partial
+minimum a groupBy would compute, so a hub vertex sends its whole
+adjacency to one task; that skew case (power-law or single-hub graphs)
+is untested. The pair provably converges in O(log n) rounds regardless
+of graph diameter — unlike naive label propagation, whose round count
+is the component diameter (fatal for chain-shaped graphs at 100 TB).
+Rounds ``localCheckpoint`` eagerly: without lineage truncation the
+plan tree doubles per iteration and the driver, not the data, becomes
+the bottleneck.
 """
 
 from __future__ import annotations

@@ -16,22 +16,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
 from covid_data_pipeline_spark.plans.curation import CurationConfig, curate_documents
+from covid_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("curate-corpus")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="curate-corpus")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")

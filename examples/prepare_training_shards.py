@@ -25,7 +25,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.text import token_count
@@ -36,19 +35,13 @@ from covid_data_pipeline_spark.operators.sampling import (
     pack_greedy_bins,
 )
 from covid_data_pipeline_spark.operators.similarity import quantize_int8
+from covid_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/training_shards"
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("prepare-training-shards")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app_name="prepare-training-shards")
 
     docs = table(spark, sf_dir, "documents")
     sources = [r[0] for r in docs.select("source").distinct().collect()]

@@ -16,7 +16,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
@@ -25,18 +24,13 @@ from covid_data_pipeline_spark.operators.tokenizer import (
     bpe_compression_curve,
     learn_bpe_merges,
 )
+from covid_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     num_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("train-tokenizer")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="train-tokenizer")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = table(spark, sf_dir, "documents")

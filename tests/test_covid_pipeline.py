@@ -5,12 +5,6 @@ idempotent re-runs, incremental-vs-history mart equality."""
 from __future__ import annotations
 
 import pytest
-
-# r11 fast-tier marking (VERDICT r10 ask #3): the full suite runs ~52
-# min, which times out the driver's verify window; this module's tests
-# are in the SLOW tier (fast tier = `pytest tests/` with the default
-# addopts, full suite = `pytest tests/ -m ""` — run per round).
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.plans import schemas as S

@@ -1,9 +1,10 @@
 """Idle A/B bench over a subset of registry queries.
 
-Usage: PYTHONPATH=<tree> python tools/bench_subset.py q1,q2,... [runs]
-Prints one JSON line {name: median_sec}. Methodology matches bench.py:
-untimed warmup pass, N timed runs (noop sink), median, cache cleared
-between runs.
+Usage: python <tree>/tools/bench_subset.py q1,q2,... [runs]
+Prints one JSON line {name: median_sec}. Methodology is bench.py's
+(its session and ``run_once``): untimed warmup pass, N timed runs
+(noop sink), median, cache cleared between runs. For an A/B, run each
+tree's own copy of this script.
 """
 from __future__ import annotations
 
@@ -11,55 +12,28 @@ import json
 import os
 import statistics
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_spark, run_once  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1].split(",")
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("bench_subset")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            "org.apache.spark.scheduler.DAGScheduler",
-            jvm.org.apache.logging.log4j.Level.FATAL,
-        )
-    except Exception:
-        pass
+    spark = bench_spark("bench_subset")
 
     from covid_data_pipeline_spark.harness.registry import QUERIES
 
-    def run_once(n: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[n].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return el
+    def sample(n: str) -> float:
+        return round(sum(run_once(spark, QUERIES[n].fn, sf_dir)), 3)
 
     for n in names:
-        run_once(n)  # warmup
-    spark.catalog.clearCache()
+        sample(n)  # warmup
     out = {}
     for n in names:
-        samples = [round(run_once(n), 3) for _ in range(runs)]
+        samples = [sample(n) for _ in range(runs)]
         out[n] = round(statistics.median(samples), 3)
         print(f"# {n}: {out[n]} (runs {samples})", file=sys.stderr)
     spark.stop()

@@ -2,35 +2,23 @@
 
 Usage: python tools/capture_plans.py <suffix> [query ...]
 Writes plans/$SPARK_GRAFT_PLAN_ROUND/<query>_<suffix>.txt for each bench
-query (default all; round dir defaults to r11).
+query (default all; round dir defaults to r11), in bench.py's session.
 """
 from __future__ import annotations
 
 import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_spark  # noqa: E402
+
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     only = set(sys.argv[2:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("capture_plans")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark("capture_plans")
 
     from covid_data_pipeline_spark.harness.registry import QUERIES
 

@@ -11,24 +11,15 @@ Usage: python tools/cc_round_plan.py <out_file>
 """
 from __future__ import annotations
 
-import os
 import sys
 
 
 def main() -> None:
     out = sys.argv[1]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from covid_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("cc_round_plan")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="cc_round_plan")
     spark.sparkContext.setLogLevel("ERROR")
 
     from pyspark.sql import functions as F

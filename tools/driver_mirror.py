@@ -80,6 +80,8 @@ def main() -> int:
     else:
         names = list(WINDOW_PRIORITY)
 
+    # Bare builder on purpose, not session.get_spark: this mirrors the
+    # external driver's vanilla session, which sets none of our defaults.
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("driver-mirror")

@@ -1,6 +1,7 @@
 """Per-query profile: build time (Python/py4j), execution time, job and
 stage counts. Usage: python tools/profile_queries.py [query ...]
 (default: all bench queries). Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+Session and timed run are bench.py's (``bench_spark``, ``run_once``).
 
 Emits one line per query to stderr and a JSON map to
 /tmp/profile_queries.json.
@@ -10,29 +11,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_spark, run_once  # noqa: E402
 
 
 def main() -> None:
     only = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark("profile")
     sc = spark.sparkContext
 
     from covid_data_pipeline_spark.harness.registry import QUERIES
@@ -41,8 +29,7 @@ def main() -> None:
     out = {}
     # warmup whole set once (codegen caches)
     for n in names:
-        QUERIES[n].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
+        run_once(spark, QUERIES[n].fn, sf_dir)
 
     # Job counting (ADVICE r10 #3): one tracker, max-jobId deltas.
     # The r10 form mixed the Python statusTracker with the JVM one and
@@ -63,16 +50,12 @@ def main() -> None:
 
     for n in names:
         jobs0 = max_job_id()
-        t0 = time.perf_counter()
-        df = QUERIES[n].fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
+        build_s, exec_s = run_once(spark, QUERIES[n].fn, sf_dir)
         n_jobs = max_job_id() - jobs0
         out[n] = {
-            "build_s": round(t1 - t0, 3),
-            "exec_s": round(t2 - t1, 3),
-            "total_s": round(t2 - t0, 3),
+            "build_s": round(build_s, 3),
+            "exec_s": round(exec_s, 3),
+            "total_s": round(build_s + exec_s, 3),
             "jobs": n_jobs,
         }
         print(f"# {n}: build={out[n]['build_s']}s exec={out[n]['exec_s']}s jobs={n_jobs}", file=sys.stderr)

@@ -29,9 +29,10 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import bench_spark, run_once  # noqa: E402
 
 FLAG_ALPHA = 1.3
 MIN_T1_FOR_FLAG = 2.0  # below this, noise dominates the fit
@@ -51,45 +52,23 @@ def main() -> int:
               file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("scaling-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_spark("scaling-bench", driver_memory="16g")
 
     from covid_data_pipeline_spark.harness.registry import QUERIES
 
     bench = {n: s for n, s in QUERIES.items() if s.bench}
 
-    def run_once(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        bench[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.perf_counter() - t0, 3)
+    def timed(name: str, sf_dir: str) -> float:
+        return round(sum(run_once(spark, bench[name].fn, sf_dir)), 3)
 
     # Warmup at sf0.1 (codegen/JIT) — untimed.
     for n in bench:
-        run_once(n, SF01)
-    spark.catalog.clearCache()
+        timed(n, SF01)
 
     results: dict[str, dict] = {}
     for n in bench:
-        t01 = run_once(n, SF01)
-        t1 = run_once(n, SF1)
+        t01 = timed(n, SF01)
+        t1 = timed(n, SF1)
         alpha = (
             round(math.log10(t1 / t01), 3) if t01 > 0 and t1 > 0 else None
         )
@@ -109,8 +88,8 @@ def main() -> int:
     for n, r in results.items():
         if is_flagged(r):
             print(f"# re-running flagged {n}", file=sys.stderr)
-            t01 = min(r["t_sf01"], run_once(n, SF01))
-            t1 = min(r["t_sf1"], run_once(n, SF1))
+            t01 = min(r["t_sf01"], timed(n, SF01))
+            t1 = min(r["t_sf1"], timed(n, SF1))
             r.update(
                 t_sf01=t01,
                 t_sf1=t1,
