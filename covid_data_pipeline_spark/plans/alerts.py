@@ -1,12 +1,18 @@
 """alerts: threshold alerting over the star schema, idempotent sink.
 
 Reference: the four Trino SQLs (alert_case_spike.sql, alert_death_spike.sql,
-alert_incidence.sql, deaths_incidence.sql) re-expressed as one
-parameterized Spark plan. Shared shape per query:
+alert_incidence.sql, deaths_incidence.sql) re-expressed as ONE Spark plan
+that serves all four:
 
-  fact JOIN dim → LAG(measure) per location_key over report_date →
-  filter to the alert day ABOVE the window → unclamped delta + rate →
-  thresholds → formatted description → NOT EXISTS dedup → append
+  fact JOIN dim → LAG(confirmed), LAG(deaths) per location_key over
+  report_date (one window) → filter to the alert day ABOVE the window →
+  per AlertSpec: unclamped delta + rate → threshold → formatted
+  description, packed as one array element → explode → NOT EXISTS
+  dedup → append
+
+One join and one window instead of four of each unioned: the four
+queries differ only in measure, threshold and rendering, and every
+spec reads the same per-location history.
 
 Policy notes (SURVEY.md §7.3): alerts do NOT clamp negative deltas —
 they filter ``prev IS NOT NULL`` and ``delta > 0``; this is deliberately
@@ -23,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.operators.relational import anti_join, dim_join
@@ -119,12 +125,12 @@ ALERT_SPECS: tuple[AlertSpec, ...] = (
 )
 
 
-def build_alerts(
-    fact: DataFrame, dim: DataFrame, report_date: str, spec: AlertSpec
-) -> DataFrame:
-    """One alert query's candidate rows for the day (pre-dedup)."""
+def build_alerts(fact: DataFrame, dim: DataFrame, report_date: str) -> DataFrame:
+    """Every alert spec's candidate rows for the day (pre-dedup), from one
+    fact ⋈ dim join and one LAG window over both measures."""
+    measures = sorted({spec.measure for spec in ALERT_SPECS})
     joined = dim_join(
-        fact.select("report_date", "location_key", spec.measure),
+        fact.select("report_date", "location_key", *measures),
         dim.select("location_key", "country_name", "population"),
         on=["location_key"],
         how="inner",
@@ -133,26 +139,41 @@ def build_alerts(
         joined,
         partition_by=["location_key"],
         order_by=["report_date"],
-        cols=[spec.measure],
+        cols=measures,
         clamp=False,  # alert policy: raw delta, no clamp
         prev_suffix="_prev",
         delta_prefix="new_",
     )
-    delta = F.col(f"new_{spec.measure}")
-    prev = F.col(f"{spec.measure}_prev")
+    day = hist.filter(F.col("report_date") == F.lit(report_date).cast("date"))
     pop = F.col("population")
-    day = hist.filter(
-        (F.col("report_date") == F.lit(report_date).cast("date"))
-        & prev.isNotNull()  # first-observed-day rows never alert
-        & spec.predicate(delta, prev, pop)
-    )
-    return day.select(
+    hits = []
+    for spec in ALERT_SPECS:
+        delta = F.col(f"new_{spec.measure}")
+        prev = F.col(f"{spec.measure}_prev")
+        hits.append(
+            F.when(
+                prev.isNotNull()  # first-observed-day rows never alert
+                & spec.predicate(delta, prev, pop),
+                F.struct(
+                    F.lit(spec.alert_type).alias("alert_type"),
+                    F.lit(spec.severity).alias("severity"),
+                    spec.metric(delta, pop).alias("metric_value"),
+                    spec.description(delta, pop).alias("description"),
+                ),
+            )
+        )
+    fired = day.select(
         F.col("report_date").alias("alert_date"),
         F.col("country_name").alias("country"),
-        F.lit(spec.alert_type).alias("alert_type"),
-        F.lit(spec.severity).alias("severity"),
-        spec.metric(delta, pop).alias("metric_value"),
-        spec.description(delta, pop).alias("description"),
+        F.explode(F.array(*hits)).alias("hit"),
+    ).filter(F.col("hit").isNotNull())
+    return fired.select(
+        "alert_date",
+        "country",
+        "hit.alert_type",
+        "hit.severity",
+        "hit.metric_value",
+        "hit.description",
         F.current_timestamp().alias("created_at"),
     )
 
@@ -167,14 +188,12 @@ def run_all_alerts(
 ) -> int:
     """Run the four alert queries for the day; dedup against existing
     alerts (idempotent — the reference's NOT EXISTS contract); append.
-    Returns the number of new alert rows."""
-    fact = wh.read(S.FACT_TABLE)
-    dim = wh.read(S.DIM_TABLE)
-    candidates = None
-    for spec in ALERT_SPECS:
-        df = build_alerts(fact, dim, report_date, spec)
-        candidates = df if candidates is None else candidates.unionByName(df)
+    Returns the number of new alert rows.
 
+    One Observation on the append counts the new rows. With a JDBC sink
+    the rows are cached first, because they feed two sinks; the JDBC
+    write is skipped when there are none."""
+    candidates = build_alerts(wh.read(S.FACT_TABLE), wh.read(S.DIM_TABLE), report_date)
     if wh.exists(S.ALERTS_TABLE):
         existing = wh.read(S.ALERTS_TABLE).filter(
             F.col("alert_date") == F.lit(report_date).cast("date")
@@ -183,22 +202,29 @@ def run_all_alerts(
             candidates, existing, ["alert_date", "country", "alert_type"]
         )
 
-    new_rows = candidates.cache()
+    # The Observation goes above the cache: one inside a cached plan
+    # reports nothing.
+    new_rows = candidates.cache() if jdbc_url else candidates
+    obs = Observation()
     try:
-        n = new_rows.count()
-        if n:
-            wh.append(new_rows, S.ALERTS_TABLE, partition_by=["alert_date"])
-            if jdbc_url:
-                write_jdbc(
-                    new_rows,
-                    jdbc_url,
-                    jdbc_table,
-                    mode="append",
-                    properties=jdbc_properties,
-                )
+        wh.append(
+            new_rows.observe(obs, F.count(F.lit(1)).alias("rows")),
+            S.ALERTS_TABLE,
+            partition_by=["alert_date"],
+        )
+        n = obs.get["rows"]
+        if jdbc_url and n:
+            write_jdbc(
+                new_rows,
+                jdbc_url,
+                jdbc_table,
+                mode="append",
+                properties=jdbc_properties,
+            )
         return n
     finally:
-        new_rows.unpersist()
+        if jdbc_url:
+            new_rows.unpersist()
 
 
 def render_notification(spark: SparkSession, wh: Warehouse, report_date: str) -> str:

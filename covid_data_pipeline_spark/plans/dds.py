@@ -3,23 +3,19 @@
 Reference: process_covid_dds.py — sha2 surrogate key over (country, year)
 (:34-39), wholesale dim rebuild via createOrReplace (:41-44), composite
 left join ODS×dim keeping unmatched rows with NULL key (:60-73), DQ
-null-count warning (:75-77), fact partition overwrite (:81-92).
+null-count warning (:75-77) — logged after the fact partition overwrite
+(:81-92), from an Observation on that write instead of a second count.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.scalar import surrogate_key
-from covid_data_pipeline_spark.operators.relational import (
-    dim_join,
-    distinct_rows,
-    is_empty,
-    null_key_count,
-)
+from covid_data_pipeline_spark.operators.relational import dim_join, distinct_rows
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse
 
@@ -69,7 +65,11 @@ def build_fact_day(ods_day: DataFrame, dim: DataFrame) -> DataFrame:
 
 def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
     """DDS stage: rebuild dim wholesale, build the day's fact slice,
-    overwrite its partition. Returns False if the ODS day is empty."""
+    overwrite its partition. Returns False if the ODS day is empty.
+
+    One Observation on the fact write counts its rows (the skip guard) and
+    its NULL location_key rows (the DQ warning), so neither re-runs the
+    join before the write."""
     population = wh.read(S.POPULATION_TABLE)
     dim = build_dim_location(population)
     wh.replace(dim, S.DIM_TABLE)
@@ -77,14 +77,17 @@ def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
     ods_day = wh.read(S.ODS_TABLE).filter(
         F.col("report_date") == F.lit(report_date).cast("date")
     )
-    if is_empty(ods_day):
-        return False
-
-    fact = build_fact_day(ods_day, wh.read(S.DIM_TABLE))
-    missing = null_key_count(fact, "location_key")
+    obs = Observation()
+    fact = build_fact_day(ods_day, wh.read(S.DIM_TABLE)).observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.col("location_key").isNull()).alias("missing"),
+    )
+    wh.overwrite_partitions(fact, S.FACT_TABLE, partition_by=["report_date"])
+    rows, missing = obs.get["rows"], obs.get["missing"]
+    S.report_rows(fact=rows, fact_missing_key=missing)
     if missing:
         log.warning(
             "%d records failed to join (missing population for year)", missing
         )
-    wh.overwrite_partitions(fact, S.FACT_TABLE, partition_by=["report_date"])
-    return True
+    return rows > 0

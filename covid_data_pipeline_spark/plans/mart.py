@@ -16,7 +16,7 @@ Two variants, verified equal on contiguous daily series (tests):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.scalar import bucketize, per_100k, rate_percent
@@ -133,7 +133,10 @@ def process_mart(
     report_date: str,
     incremental: bool = False,
 ) -> bool:
-    """Mart stage: compute the day's analytics and overwrite its partition."""
+    """Mart stage: compute the day's analytics and overwrite its partition.
+    Returns False when the day has no mart rows, counted by an Observation
+    on the write so the full-history window runs once; an empty day
+    writes no data files."""
     dim = wh.read(S.DIM_TABLE)
     if incremental:
         d = F.lit(report_date).cast("date")
@@ -143,7 +146,9 @@ def process_mart(
         mart = build_mart_incremental(today, yesterday, dim)
     else:
         mart = build_mart_history(wh.read(S.FACT_TABLE), dim, report_date)
-    if mart.isEmpty():
-        return False
+    obs = Observation()
+    mart = mart.observe(obs, F.count(F.lit(1)).alias("rows"))
     wh.overwrite_partitions(mart, S.MART_TABLE, partition_by=["report_date"])
-    return True
+    rows = obs.get["rows"]
+    S.report_rows(mart=rows)
+    return rows > 0

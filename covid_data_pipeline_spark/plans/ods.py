@@ -7,11 +7,11 @@ groupBy-sum, dynamic-partition-overwrite (:30-91).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.scalar import map_values
-from covid_data_pipeline_spark.operators.relational import is_empty, null_safe_sum_rollup
+from covid_data_pipeline_spark.operators.relational import null_safe_sum_rollup
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.plans.raw import DATE_IN_PATH
 from covid_data_pipeline_spark.sources.writers import Warehouse
@@ -57,14 +57,19 @@ def process_ods(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
     """ODS stage: read raw (pruned to the day's ingest_date partition when
     present), roll up, dynamic-partition-overwrite ods.daily_country_stats.
     Returns False when the day has no raw rows (reference's skip guard,
-    process_covid_ods.py:37-40, using isEmpty instead of count()==0)."""
+    process_covid_ods.py:37-40). The guard is an Observation on the write
+    itself: an empty day's partitioned write leaves no data files, and
+    the row count costs no extra Spark job."""
     raw_df = wh.read(S.RAW_TABLE)
     if "ingest_date" in raw_df.columns:
         # Partition-pruned read — the engine's fix for the reference's
         # full-raw-scan-per-day wart (SURVEY.md §4).
         raw_df = raw_df.filter(F.col("ingest_date") == F.lit(report_date).cast("date"))
-    ods_df = build_ods_day(raw_df, report_date)
-    if is_empty(ods_df):
-        return False
+    obs = Observation()
+    ods_df = build_ods_day(raw_df, report_date).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    )
     wh.overwrite_partitions(ods_df, S.ODS_TABLE, partition_by=["report_date"])
-    return True
+    rows = obs.get["rows"]
+    S.report_rows(ods=rows)
+    return rows > 0

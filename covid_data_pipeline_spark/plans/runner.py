@@ -24,9 +24,15 @@ from covid_data_pipeline_spark.sources.writers import Warehouse
 
 @dataclass
 class DayResult:
+    """``stages``: which layers ran and wrote rows. ``rows``: what each
+    layer's write counted through its Observation — ``ods``, ``fact``,
+    ``fact_missing_key`` (fact rows with no dim match), ``mart`` and
+    ``alerts`` (= ``new_alerts``); a layer that did not run is absent."""
+
     report_date: str
     stages: dict[str, bool] = field(default_factory=dict)
     new_alerts: int = 0
+    rows: dict[str, int] = field(default_factory=dict)
 
 
 def bootstrap_population(
@@ -51,15 +57,20 @@ def run_day(
     """Process one simulated day end-to-end. ``csv_path=None`` skips the
     landing step (raw already contains the day, e.g. on a re-run)."""
     result = DayResult(report_date=report_date)
-    if csv_path is not None:
-        process_raw(spark, wh, csv_path, source_file=csv_path)
-        result.stages["raw"] = True
-    result.stages["ods"] = process_ods(spark, wh, report_date)
-    if result.stages["ods"]:
-        result.stages["dds"] = process_dds(spark, wh, report_date)
-        result.stages["mart"] = process_mart(
-            spark, wh, report_date, incremental=incremental_mart
-        )
-        if with_alerts:
-            result.new_alerts = run_all_alerts(spark, wh, report_date)
+    token = S.DAY_ROWS.set(result.rows)
+    try:
+        if csv_path is not None:
+            process_raw(spark, wh, csv_path, source_file=csv_path)
+            result.stages["raw"] = True
+        result.stages["ods"] = process_ods(spark, wh, report_date)
+        if result.stages["ods"]:
+            result.stages["dds"] = process_dds(spark, wh, report_date)
+            result.stages["mart"] = process_mart(
+                spark, wh, report_date, incremental=incremental_mart
+            )
+            if with_alerts:
+                result.new_alerts = run_all_alerts(spark, wh, report_date)
+                result.rows["alerts"] = result.new_alerts
+    finally:
+        S.DAY_ROWS.reset(token)
     return result

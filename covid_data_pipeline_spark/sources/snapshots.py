@@ -28,6 +28,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -192,7 +193,8 @@ class SnapshotWarehouse:
         max_records_per_file: int | None = None,
     ) -> list[str]:
         """Write one immutable batch dir; return its data files relative
-        to the table's data/ dir."""
+        to the table's data/ dir. A partitioned write of no rows leaves
+        no data files; its empty batch dir is removed at once."""
         batch = f"batch-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self._data_dir(table), batch)
         writer = df.write.format("parquet")
@@ -208,6 +210,8 @@ class SnapshotWarehouse:
                     files.append(
                         os.path.relpath(os.path.join(dirpath, n), self._data_dir(table))
                     )
+        if not files:
+            shutil.rmtree(out, ignore_errors=True)
         return files
 
     # -- commit verbs (the reference's three snapshot semantics) ----------
@@ -220,18 +224,23 @@ class SnapshotWarehouse:
     def path(self, table: str) -> str:
         return self._table_dir(table)
 
+    # append and overwrite_partitions commit nothing when the batch has
+    # no data files (a partitioned write of no rows), as Warehouse writes
+    # no data file: the current version, or no table at all, stays.
     def append(
         self,
         df: DataFrame,
         table: str,
         partition_by: Sequence[str] | None = None,
         sort_within_partitions_by: Sequence[str] | None = None,
-    ) -> int:
+    ) -> int | None:
         if sort_within_partitions_by:
             df = df.sortWithinPartitions(*sort_within_partitions_by)
         base = self.current_version(table)
         prev = [] if base is None else list(self._manifest(table, base)["files"])
         new = self._write_batch(df, table, partition_by)
+        if not new:
+            return base
         return self._commit(table, prev + new, "append", expected_base=base)
 
     def overwrite_partitions(
@@ -240,7 +249,7 @@ class SnapshotWarehouse:
         table: str,
         partition_by: Sequence[str],
         sort_within_partitions_by: Sequence[str] | None = None,
-    ) -> int:
+    ) -> int | None:
         """Replace only the partitions present in ``df`` (Iceberg
         ``overwritePartitions``): alive files whose partition tuple
         matches an incoming one leave the manifest; their bytes stay for
@@ -250,6 +259,8 @@ class SnapshotWarehouse:
         base = self.current_version(table)
         prev = [] if base is None else list(self._manifest(table, base)["files"])
         new = self._write_batch(df, table, partition_by)
+        if not new:
+            return base
         incoming = {_parts_from_relpath(f) for f in new}
         keep = [f for f in prev if _parts_from_relpath(f) not in incoming]
         return self._commit(
