@@ -128,12 +128,6 @@ def is_empty(df: DataFrame) -> bool:
     return df.isEmpty()
 
 
-def null_key_count(df: DataFrame, key: str) -> int:
-    """Data-quality probe: count rows whose join key resolved NULL
-    (reference process_covid_dds.py:75-77)."""
-    return df.filter(F.col(key).isNull()).count()
-
-
 def winsorize_bounds(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -63,13 +63,16 @@ def build_fact_day(ods_day: DataFrame, dim: DataFrame) -> DataFrame:
     return joined.select(*[F.col(c) for c in FACT_COLUMNS])
 
 
-def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
+def process_dds(
+    spark: SparkSession, wh: Warehouse, report_date: str
+) -> tuple[int, int]:
     """DDS stage: rebuild dim wholesale, build the day's fact slice,
-    overwrite its partition. Returns False if the ODS day is empty.
+    overwrite its partition. Returns ``(rows, missing)``: the fact rows
+    written (0 if the ODS day is empty) and those with a NULL
+    location_key.
 
-    One Observation on the fact write counts its rows (the skip guard) and
-    its NULL location_key rows (the DQ warning), so neither re-runs the
-    join before the write."""
+    One Observation on the fact write counts both (the skip guard and the
+    DQ warning), so neither re-runs the join before the write."""
     population = wh.read(S.POPULATION_TABLE)
     dim = build_dim_location(population)
     wh.replace(dim, S.DIM_TABLE)
@@ -85,9 +88,8 @@ def process_dds(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
     )
     wh.overwrite_partitions(fact, S.FACT_TABLE, partition_by=["report_date"])
     rows, missing = obs.get["rows"], obs.get["missing"]
-    S.report_rows(fact=rows, fact_missing_key=missing)
     if missing:
         log.warning(
             "%d records failed to join (missing population for year)", missing
         )
-    return rows > 0
+    return rows, missing

@@ -132,11 +132,11 @@ def process_mart(
     wh: Warehouse,
     report_date: str,
     incremental: bool = False,
-) -> bool:
+) -> int:
     """Mart stage: compute the day's analytics and overwrite its partition.
-    Returns False when the day has no mart rows, counted by an Observation
-    on the write so the full-history window runs once; an empty day
-    writes no data files."""
+    Returns the rows written (0 when the day has no mart rows), counted by
+    an Observation on the write so the full-history window runs once; an
+    empty day writes no data files."""
     dim = wh.read(S.DIM_TABLE)
     if incremental:
         d = F.lit(report_date).cast("date")
@@ -149,6 +149,4 @@ def process_mart(
     obs = Observation()
     mart = mart.observe(obs, F.count(F.lit(1)).alias("rows"))
     wh.overwrite_partitions(mart, S.MART_TABLE, partition_by=["report_date"])
-    rows = obs.get["rows"]
-    S.report_rows(mart=rows)
-    return rows > 0
+    return obs.get["rows"]

@@ -53,13 +53,13 @@ def build_ods_day(raw_df: DataFrame, report_date: str) -> DataFrame:
     )
 
 
-def process_ods(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
+def process_ods(spark: SparkSession, wh: Warehouse, report_date: str) -> int:
     """ODS stage: read raw (pruned to the day's ingest_date partition when
     present), roll up, dynamic-partition-overwrite ods.daily_country_stats.
-    Returns False when the day has no raw rows (reference's skip guard,
-    process_covid_ods.py:37-40). The guard is an Observation on the write
-    itself: an empty day's partitioned write leaves no data files, and
-    the row count costs no extra Spark job."""
+    Returns the rows written; 0 when the day has no raw rows (reference's
+    skip guard, process_covid_ods.py:37-40). The count is an Observation
+    on the write itself: an empty day's partitioned write leaves no data
+    files, and the count costs no extra Spark job."""
     raw_df = wh.read(S.RAW_TABLE)
     if "ingest_date" in raw_df.columns:
         # Partition-pruned read — the engine's fix for the reference's
@@ -70,6 +70,4 @@ def process_ods(spark: SparkSession, wh: Warehouse, report_date: str) -> bool:
         obs, F.count(F.lit(1)).alias("rows")
     )
     wh.overwrite_partitions(ods_df, S.ODS_TABLE, partition_by=["report_date"])
-    rows = obs.get["rows"]
-    S.report_rows(ods=rows)
-    return rows > 0
+    return obs.get["rows"]

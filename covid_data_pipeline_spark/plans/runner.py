@@ -25,9 +25,10 @@ from covid_data_pipeline_spark.sources.writers import Warehouse
 @dataclass
 class DayResult:
     """``stages``: which layers ran and wrote rows. ``rows``: what each
-    layer's write counted through its Observation — ``ods``, ``fact``,
-    ``fact_missing_key`` (fact rows with no dim match), ``mart`` and
-    ``alerts`` (= ``new_alerts``); a layer that did not run is absent."""
+    layer returned from its write's Observation — ``ods``, ``fact``,
+    ``fact_missing_key`` (fact rows with no dim match) and ``mart``; a
+    layer that did not run is absent. ``new_alerts``: rows the alert
+    queries appended."""
 
     report_date: str
     stages: dict[str, bool] = field(default_factory=dict)
@@ -57,20 +58,19 @@ def run_day(
     """Process one simulated day end-to-end. ``csv_path=None`` skips the
     landing step (raw already contains the day, e.g. on a re-run)."""
     result = DayResult(report_date=report_date)
-    token = S.DAY_ROWS.set(result.rows)
-    try:
-        if csv_path is not None:
-            process_raw(spark, wh, csv_path, source_file=csv_path)
-            result.stages["raw"] = True
-        result.stages["ods"] = process_ods(spark, wh, report_date)
-        if result.stages["ods"]:
-            result.stages["dds"] = process_dds(spark, wh, report_date)
-            result.stages["mart"] = process_mart(
-                spark, wh, report_date, incremental=incremental_mart
-            )
-            if with_alerts:
-                result.new_alerts = run_all_alerts(spark, wh, report_date)
-                result.rows["alerts"] = result.new_alerts
-    finally:
-        S.DAY_ROWS.reset(token)
+    rows, stages = result.rows, result.stages
+    if csv_path is not None:
+        process_raw(spark, wh, csv_path, source_file=csv_path)
+        stages["raw"] = True
+    rows["ods"] = process_ods(spark, wh, report_date)
+    stages["ods"] = rows["ods"] > 0
+    if stages["ods"]:
+        rows["fact"], rows["fact_missing_key"] = process_dds(spark, wh, report_date)
+        stages["dds"] = rows["fact"] > 0
+        rows["mart"] = process_mart(
+            spark, wh, report_date, incremental=incremental_mart
+        )
+        stages["mart"] = rows["mart"] > 0
+        if with_alerts:
+            result.new_alerts = run_all_alerts(spark, wh, report_date)
     return result

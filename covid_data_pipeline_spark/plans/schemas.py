@@ -5,14 +5,9 @@ Faithful to the reference's data model (SURVEY.md §1):
 - historical header aliases the conform layer resolves (:36-43)
 - the JHU → World-Bank country normalization map (process_covid_ods.py:42-59)
 - alert thresholds (alert_*.sql WHERE clauses)
-
-plus the per-run channel through which each layer reports its row counts
-to ``run_day`` (``DAY_ROWS``).
 """
 
 from __future__ import annotations
-
-from contextvars import ContextVar
 
 from pyspark.sql import types as T
 
@@ -101,14 +96,3 @@ DIM_TABLE = "dds.dim_location"
 FACT_TABLE = "dds.fact_covid"
 MART_TABLE = "data_mart.covid_analytics"
 ALERTS_TABLE = "alerts.covid_alerts"
-
-# Row counts of the run_day in progress (plans.runner.DayResult.rows).
-# Each layer reports what the Observation on its write counted; outside
-# run_day nothing is collecting and the report is dropped.
-DAY_ROWS: ContextVar[dict[str, int] | None] = ContextVar("day_rows", default=None)
-
-
-def report_rows(**counts: int) -> None:
-    rows = DAY_ROWS.get()
-    if rows is not None:
-        rows.update(counts)

@@ -9,10 +9,11 @@ semantics over plain partitioned Parquet so the engine runs anywhere
 (testdata is plain parquet, no metastore needed):
 
   append                → mode("append")
-  overwrite_partitions  → mode("overwrite") under
-                          spark.sql.sources.partitionOverwriteMode=dynamic
-                          (replaces ONLY the partitions present in the
-                          incoming frame — idempotent day re-runs)
+  overwrite_partitions  → mode("overwrite") with the write option
+                          partitionOverwriteMode=dynamic (replaces ONLY
+                          the partitions present in the incoming frame —
+                          idempotent day re-runs — whatever the session
+                          conf says; a missing table is created)
   replace               → mode("overwrite") of the whole table
 
 On a deployment with Iceberg jars the same three verbs map 1:1 onto
@@ -105,21 +106,13 @@ class Warehouse:
         ``df``, leaving all other history untouched. Re-running the same
         day twice is a no-op difference-wise — the reference's strongest
         invariant (SURVEY.md §5), encoded as a test here."""
-        if not self.exists(table):
-            self.append(df, table, partition_by, sort_within_partitions_by)
-            return
-        # Force dynamic mode for this write regardless of session defaults —
-        # a static overwrite here would silently drop all other partitions'
-        # history. Restored afterwards so callers' sessions are untouched.
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        previous = self.spark.conf.get(conf_key)
-        self.spark.conf.set(conf_key, "dynamic")
-        try:
-            self._writer(df, list(partition_by), sort_within_partitions_by).mode(
-                "overwrite"
-            ).save(self.path(table))
-        finally:
-            self.spark.conf.set(conf_key, previous)
+        # Dynamic mode on the write itself, not the session: the write
+        # option takes precedence over the session conf, so this verb never
+        # does a static overwrite (which would silently drop every other
+        # partition's history) and never touches the caller's session.
+        self._writer(df, list(partition_by), sort_within_partitions_by).option(
+            "partitionOverwriteMode", "dynamic"
+        ).mode("overwrite").save(self.path(table))
 
     def replace(
         self,

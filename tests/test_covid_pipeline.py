@@ -17,6 +17,7 @@ from covid_data_pipeline_spark.plans import alerts
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.plans.alerts import build_alerts
 from covid_data_pipeline_spark.plans.mart import build_mart_history, build_mart_incremental
+from covid_data_pipeline_spark.plans.ods import process_ods
 from covid_data_pipeline_spark.plans.runner import bootstrap_population, run_day
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
 from covid_data_pipeline_spark.sources.writers import Warehouse
@@ -244,7 +245,6 @@ def test_day_result_rows_match_recomputed_counts(pipeline, dds_warnings, spark):
                 wh, S.FACT_TABLE, "report_date", day, F.col("location_key").isNull()
             ),
             "mart": _day_count(wh, S.MART_TABLE, "report_date", day),
-            "alerts": alerts,
         }, day
         assert result.rows["fact_missing_key"] == 1
         assert result.new_alerts == alerts
@@ -272,6 +272,14 @@ def test_empty_day_skips_every_layer(pipeline, spark):
     assert result.new_alerts == 0
     assert result.rows == {"ods": 0}
     assert {t: _data_files(wh, t) for t in tables} == before
+
+
+def test_layer_counts_outside_run_day(pipeline, spark):
+    """A layer called on its own, as stream_medallion calls it, returns
+    the rows its write counted."""
+    wh, _ = pipeline
+    assert process_ods(spark, wh, DAYS[2]) == 5
+    assert process_ods(spark, wh, "2021-05-05") == 0
 
 
 # Spark jobs of a fixture-day re-run (ods → dds → mart → alerts, no

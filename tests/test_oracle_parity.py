@@ -6,12 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-# r11 fast-tier marking (VERDICT r10 ask #3): the full suite runs ~52
-# min, which times out the driver's verify window; this module's tests
-# are in the SLOW tier (fast tier = `pytest tests/` with the default
-# addopts, full suite = `pytest tests/ -m ""` — run per round).
-pytestmark = pytest.mark.slow
-
 from covid_data_pipeline_spark.harness.oracle import compare
 from covid_data_pipeline_spark.harness.registry import QUERIES
 

@@ -187,6 +187,36 @@ def test_json_quarantine_splits_bad_lines(spark, tmp_path):
     assert good.columns == ["id", "qty"]
 
 
+def test_overwrite_partitions_is_dynamic_under_static_session(spark, tmp_path):
+    """The write carries its own dynamic mode: under a session left at
+    static it creates a missing table, replaces only the partitions in
+    the frame (none for an empty frame), and leaves the session conf as
+    it was."""
+    from covid_data_pipeline_spark.sources.writers import Warehouse
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        wh = Warehouse(spark, str(tmp_path))
+        schema = "p int, v string"
+
+        def write(rows):
+            wh.overwrite_partitions(spark.createDataFrame(rows, schema), "l.t", ["p"])
+
+        def stored():
+            return sorted(map(tuple, wh.read("l.t").select("p", "v").collect()))
+
+        write([(1, "a"), (2, "b")])
+        write([(2, "c")])
+        assert stored() == [(1, "a"), (2, "c")]
+        write([])
+        assert stored() == [(1, "a"), (2, "c")]
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, previous)
+
+
 def test_max_records_per_file_rolls_output_files(spark, tmp_path):
     from covid_data_pipeline_spark.sources.writers import Warehouse
 
