@@ -11,6 +11,7 @@ per-version manifests — with no table format dependency:
 
     <root>/<layer>/<table>/
       data/<batch-uuid>/[k=v/...]part-*.parquet   (immutable, write-once)
+      data/<batch-uuid>/_schema.json              (the batch's file schema)
       _snapshots/v<N>.json                        (manifest: file list)
       _snapshots/_current                         (current version number)
 
@@ -36,6 +37,12 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from covid_data_pipeline_spark.sources.writers import (
+    data_schema,
+    load_schema,
+    save_schema,
+)
 
 
 def _parts_from_relpath(relpath: str) -> tuple[tuple[str, str], ...]:
@@ -194,7 +201,10 @@ class SnapshotWarehouse:
     ) -> list[str]:
         """Write one immutable batch dir; return its data files relative
         to the table's data/ dir. A partitioned write of no rows leaves
-        no data files; its empty batch dir is removed at once."""
+        no data files; its empty batch dir is removed at once. A batch
+        with data files gets its files' schema recorded in it
+        (``_schema.json``, see writers.py); the batch is write-once, so
+        the record never goes stale."""
         batch = f"batch-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self._data_dir(table), batch)
         writer = df.write.format("parquet")
@@ -210,7 +220,9 @@ class SnapshotWarehouse:
                     files.append(
                         os.path.relpath(os.path.join(dirpath, n), self._data_dir(table))
                     )
-        if not files:
+        if files:
+            save_schema(out, data_schema(df.schema, partition_by))
+        else:
             shutil.rmtree(out, ignore_errors=True)
         return files
 
@@ -295,7 +307,10 @@ class SnapshotWarehouse:
     ) -> DataFrame:
         """Read an explicit manifest file list. Files are read per batch
         dir (its own basePath) so hive partition columns are recovered;
-        batch reads are unioned by name. ``files`` must be non-empty.
+        batch reads are unioned by name. Each batch read is given the
+        schema recorded in its batch dir, so it runs no Spark job; a
+        batch without a record (written before records existed) infers
+        its schema from a footer. ``files`` must be non-empty.
         ``tag_path`` adds a ``__file_path`` column — captured on each
         scan itself (``_metadata`` is only resolvable directly on a
         file-source relation, not across unions/joins)."""
@@ -311,9 +326,10 @@ class SnapshotWarehouse:
             by_batch.setdefault(batch, []).append(os.path.join(data_dir, f))
         parts = []
         for batch, fs in sorted(by_batch.items()):
-            p = self.spark.read.option(
-                "basePath", os.path.join(data_dir, batch)
-            ).parquet(*fs)
+            batch_dir = os.path.join(data_dir, batch)
+            schema = load_schema(batch_dir)
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            p = reader.option("basePath", batch_dir).parquet(*fs)
             if tag_path:
                 p = p.withColumn(
                     "__file_path", F.col("_metadata.file_path")

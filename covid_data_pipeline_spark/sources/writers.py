@@ -16,25 +16,106 @@ semantics over plain partitioned Parquet so the engine runs anywhere
                           conf says; a missing table is created)
   replace               → mode("overwrite") of the whole table
 
+Each table directory also holds ``_schema.json``: the schema of its data
+files, saved by the write that made them. Reads hand it to Spark, so a
+read lists files but runs no footer-inference job — the stored table
+metadata an Iceberg catalog keeps (see :class:`Warehouse` for the
+rules). The ``_`` prefix keeps it out of Spark's file index.
+
 On a deployment with Iceberg jars the same three verbs map 1:1 onto
 DataFrameWriterV2; the Warehouse API is the stable seam.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
+
+
+def _nullable(node):
+    """A schema's JSON form with every field, element and value nullable."""
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {
+        k: True
+        if k in ("nullable", "containsNull", "valueContainsNull")
+        else _nullable(v)
+        for k, v in node.items()
+    }
+
+
+def data_schema(schema: StructType, partition_by: Sequence[str] | None) -> StructType:
+    """The schema Spark's footer inference returns for the data files a
+    frame of ``schema`` writes: the partition columns (they live in the
+    directory names) dropped, every field nullable."""
+    drop = set(partition_by or ())
+    kept = StructType([f for f in schema.fields if f.name not in drop])
+    return StructType.fromJson(_nullable(kept.jsonValue()))
+
+
+def load_schema(directory: str) -> StructType | None:
+    """The schema recorded in ``directory``, or None if there is none."""
+    try:
+        with open(os.path.join(directory, SCHEMA_FILE)) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def save_schema(directory: str, schema: StructType) -> None:
+    """Record ``schema`` in ``directory`` atomically (temp file, then
+    ``os.replace``): a reader sees the old record or the new one."""
+    tmp = os.path.join(directory, f".{SCHEMA_FILE}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        f.write(schema.json())
+    os.replace(tmp, os.path.join(directory, SCHEMA_FILE))
+
+
+def remove_schema(directory: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(directory, SCHEMA_FILE))
 
 
 class Warehouse:
     """A directory-rooted lakehouse: one subdir per ``layer.table``.
 
-    Layout: ``<root>/<layer>/<table>/[<part_col>=<v>/...]*.parquet`` —
-    hive-style partition dirs, so reads get partition pruning for free.
+    Layout::
+
+        <root>/<layer>/<table>/[<part_col>=<v>/...]*.parquet
+        <root>/<layer>/<table>/_schema.json
+
+    Hive-style partition dirs, so reads get partition pruning for free.
+    ``_schema.json`` is the data files' schema (partition columns left
+    out; Spark still discovers them, and their types, from the directory
+    names). :meth:`read` passes it to Spark instead of inferring it.
+
+    The record exists only if every data file in the table was written
+    with that schema:
+
+    - ``replace`` removes it before the write and records the new schema
+      if the table then has data files.
+    - ``append`` and ``overwrite_partitions`` leave a record equal to the
+      incoming schema, record the incoming schema if the table had no
+      data files before and has some after, and otherwise remove the
+      record before writing (a different schema, or a table written
+      before records existed): reads of that table infer again.
+    - ``compact`` records the schema it rewrote the table with.
+
+    The Warehouse owns its table directories: files put there other than
+    through these verbs are not reflected in the record (as with an
+    Iceberg table written behind its catalog's back).
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -52,7 +133,10 @@ class Warehouse:
         )
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        path = self.path(table)
+        schema = load_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     # File-sizing guard for every write: without it one task writing a
     # huge hive partition emits one huge file (no parallel read), and at
@@ -81,6 +165,21 @@ class Warehouse:
             writer = writer.partitionBy(*partition_by)
         return writer
 
+    def _add_files(
+        self, writer, df: DataFrame, table: str, partition_by: Sequence[str] | None
+    ) -> None:
+        """Save ``writer`` into ``table``, which keeps its other files,
+        and keep the schema record true (rules in the class docstring)."""
+        path = self.path(table)
+        incoming = data_schema(df.schema, partition_by)
+        stored = load_schema(path)
+        record_after = stored is None and not self.exists(table)
+        if stored is not None and stored != incoming:
+            remove_schema(path)
+        writer.save(path)
+        if record_after and self.exists(table):
+            save_schema(path, incoming)
+
     def append(
         self,
         df: DataFrame,
@@ -90,9 +189,8 @@ class Warehouse:
     ) -> None:
         """Create-or-append (S6 — reference probe-then-append,
         process_covid_raw.py:107-113; parquet append covers both cases)."""
-        self._writer(df, partition_by, sort_within_partitions_by).mode(
-            "append"
-        ).save(self.path(table))
+        writer = self._writer(df, partition_by, sort_within_partitions_by)
+        self._add_files(writer.mode("append"), df, table, partition_by)
 
     def overwrite_partitions(
         self,
@@ -110,9 +208,9 @@ class Warehouse:
         # option takes precedence over the session conf, so this verb never
         # does a static overwrite (which would silently drop every other
         # partition's history) and never touches the caller's session.
-        self._writer(df, list(partition_by), sort_within_partitions_by).option(
-            "partitionOverwriteMode", "dynamic"
-        ).mode("overwrite").save(self.path(table))
+        writer = self._writer(df, list(partition_by), sort_within_partitions_by)
+        writer = writer.option("partitionOverwriteMode", "dynamic").mode("overwrite")
+        self._add_files(writer, df, table, partition_by)
 
     def replace(
         self,
@@ -123,9 +221,13 @@ class Warehouse:
     ) -> None:
         """Full replace (S8 — reference ``createOrReplace()`` rebuilding
         dim_location wholesale every run, process_covid_dds.py:41-44)."""
+        path = self.path(table)
+        remove_schema(path)
         self._writer(df, partition_by, sort_within_partitions_by).mode(
             "overwrite"
-        ).save(self.path(table))
+        ).save(path)
+        if self.exists(table):
+            save_schema(path, data_schema(df.schema, partition_by))
 
     def compact(
         self,
@@ -150,7 +252,9 @@ class Warehouse:
         the table path or the ``__old`` backup. On entry, recover from a
         prior crash — restore the backup if the swap died between
         renames (table path missing), otherwise discard leftovers — so a
-        crashed compaction never loses data or wedges the next one."""
+        crashed compaction never loses data or wedges the next one.
+        The staged table carries the schema record of the frame it was
+        rewritten from, so reads after the swap run no inference job."""
         final = self.path(table)
         staging = final + "__compact"
         backup = final + "__old"
@@ -192,6 +296,7 @@ class Warehouse:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.mode("overwrite").save(staging)
+        save_schema(staging, data_schema(df.schema, partition_by))
         os.rename(final, backup)
         os.rename(staging, final)
         shutil.rmtree(backup)

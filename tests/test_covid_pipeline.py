@@ -20,8 +20,9 @@ from covid_data_pipeline_spark.plans.mart import build_mart_history, build_mart_
 from covid_data_pipeline_spark.plans.ods import process_ods
 from covid_data_pipeline_spark.plans.runner import bootstrap_population, run_day
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
-from covid_data_pipeline_spark.sources.writers import Warehouse
+from covid_data_pipeline_spark.sources.writers import SCHEMA_FILE, Warehouse
 from tests.covid_fixtures import DAYS, population_df, write_day_csvs
+from tests.test_sources import assert_reads_as_inferred, spark_jobs
 
 
 class _Collect(logging.Handler):
@@ -282,24 +283,29 @@ def test_layer_counts_outside_run_day(pipeline, spark):
     assert process_ods(spark, wh, "2021-05-05") == 0
 
 
+def test_medallion_tables_read_as_inferred(pipeline, spark):
+    """Every medallion table carries a schema record, and reading
+    through it gives the schema and rows footer inference gives."""
+    wh, _ = pipeline
+    for t in (
+        S.RAW_TABLE, S.POPULATION_TABLE, S.ODS_TABLE, S.DIM_TABLE,
+        S.FACT_TABLE, S.MART_TABLE, S.ALERTS_TABLE,
+    ):
+        assert os.path.exists(os.path.join(wh.path(t), SCHEMA_FILE)), t
+        assert_reads_as_inferred(spark, wh, t)
+
+
 # Spark jobs of a fixture-day re-run (ods → dds → mart → alerts, no
-# landing): one write per layer plus its parquet schema reads and AQE
-# stages, measured as 22 on 4 and on 16 local cores. A probe that re-runs
-# a layer's plan before its write, or a plan per alert spec, exceeds it.
-RERUN_JOB_BUDGET = 22
+# landing): one write per layer plus its AQE stages; table reads run
+# none (schema records). Measured as 13 on 2, 4 and 16 local cores. A
+# probe that re-runs a layer's plan before its write, a plan per alert
+# spec, or a read that infers its schema again, exceeds it.
+RERUN_JOB_BUDGET = 13
 
 
 def test_rerun_day_job_budget(pipeline, spark):
     wh, _ = pipeline
-    sc = spark.sparkContext
-    group = "test_rerun_day_job_budget"
-    sc.setJobGroup(group, "job budget of one day")
-    try:
-        run_day(spark, wh, DAYS[2])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    _, jobs = spark_jobs(spark, lambda: run_day(spark, wh, DAYS[2]))
     assert 0 < jobs <= RERUN_JOB_BUDGET
 
 
@@ -336,6 +342,10 @@ def test_snapshot_backend_alerts_and_empty_day(pipeline, spark, tmp_path):
     assert results[0].new_alerts == 0
     assert not wh.exists(S.ALERTS_TABLE)
     results += [run_day(spark, wh, day, csv_path=paths[day]) for day in DAYS[1:]]
+    # Each batch dir carries its schema record: a read of a table with a
+    # batch per day runs no Spark job.
+    _, jobs = spark_jobs(spark, lambda: wh.read(S.FACT_TABLE))
+    assert jobs == 0
     assert _alert_keys(wh) == _alert_keys(wh_p)
     assert sum(r.new_alerts for r in results) == len(_alert_keys(wh_p))
 

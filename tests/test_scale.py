@@ -5,12 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-# r11 fast-tier marking (VERDICT r10 ask #3): the full suite runs ~52
-# min, which times out the driver's verify window; this module's tests
-# are in the SLOW tier (fast tier = `pytest tests/` with the default
-# addopts, full suite = `pytest tests/ -m ""` — run per round).
-pytestmark = pytest.mark.slow
-
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
@@ -20,6 +14,7 @@ from covid_data_pipeline_spark.operators.scale import (
     write_bucketed,
 )
 from tests.test_plans import plan_of
+from tests.test_sources import spark_jobs
 
 
 def _skewed(spark):
@@ -32,6 +27,7 @@ def _skewed(spark):
     )
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_salted_sum_equals_plain_sum(spark):
     df = _skewed(spark)
     plain = {
@@ -51,6 +47,7 @@ def test_salted_sum_equals_plain_sum(spark):
     assert salted == plain
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_salted_join_equals_plain_join(spark):
     left = _skewed(spark)
     right = spark.createDataFrame(
@@ -66,6 +63,7 @@ def test_salted_join_equals_plain_join(spark):
         assert salted == plain
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_compact_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     import glob
 
@@ -205,6 +203,12 @@ def test_compact_recovers_from_crashed_swap(spark, sf_dir, tmp_path):
     assert not os.path.exists(final + "__compact")
     assert not os.path.exists(final + "__old")
 
+    # The compacted table keeps its schema record: reads run no job and
+    # see the schema inference sees.
+    _, jobs = spark_jobs(spark, lambda: wh.read("raw.orders"))
+    assert jobs == 0
+    assert wh.read("raw.orders").schema == spark.read.parquet(final).schema
+
 
 def test_bloom_filter_join_prunes_probe_side(spark, sf_dir):
     from pyspark.sql import functions as F
@@ -303,6 +307,7 @@ def test_analyze_stats_enable_cbo_broadcast(spark, sf_dir, tmp_path):
     spark.sql("DROP TABLE statsdb.nation_stats")
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_split_skew_join_equals_plain_join(spark):
     from covid_data_pipeline_spark.operators.scale import split_skew_join
 
@@ -343,6 +348,7 @@ def test_split_skew_join_equals_plain_join(spark):
     assert a == b
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_split_skew_join_replicates_only_hot_build_rows(spark):
     from covid_data_pipeline_spark.operators.scale import split_skew_join
 

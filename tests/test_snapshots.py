@@ -5,12 +5,6 @@ from __future__ import annotations
 
 import pytest
 
-# r11 fast-tier marking (VERDICT r10 ask #3): the full suite runs ~52
-# min, which times out the driver's verify window; this module's tests
-# are in the SLOW tier (fast tier = `pytest tests/` with the default
-# addopts, full suite = `pytest tests/ -m ""` — run per round).
-pytestmark = pytest.mark.slow
-
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
@@ -65,6 +59,7 @@ def test_partition_pruning_survives_snapshot_read(spark, sw):
     assert [r["k"] for r in df.collect()] == ["b"]
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_pipeline_runs_on_snapshot_backend(spark, tmp_path):
     """The covid medallion pipeline runs unchanged on SnapshotWarehouse;
     the mart matches the plain-Warehouse run, and a re-run of the final
@@ -300,6 +295,7 @@ def test_purge_keys_skips_unwritten_table(spark, sw):
 # -- compaction + orphan cleanup -------------------------------------------
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_snapshot_compact_preserves_rows_and_history(spark, sw):
     import glob
     import os
@@ -451,6 +447,7 @@ def test_read_pruned_keeps_all_null_stat_files(spark, sw):
     assert sw.read_pruned("n", "id", lo=0, hi=100).count() == 2
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_read_pruned_after_compact_sorted(spark, sw):
     # compaction rewrites scattered appends; a sorted rewrite restores
     # data skipping on the clustered column
@@ -487,6 +484,7 @@ def test_schema_evolution_append_adds_column(spark, sw):
     assert "score" not in sw.read("evo", version=1).columns
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_delete_where_rewrites_only_hit_files(spark, sw):
     for base, part in ((0, "x"), (1000, "y"), (2000, "z")):
         df = spark.range(base, base + 100).select(
@@ -552,6 +550,7 @@ def test_update_where_copy_on_write(spark, sw):
     assert {r["score"] for r in sw.read("u").where("id = 1050").collect()} == {0.5}
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_merge_into_upsert(spark, sw):
     for base, part in ((0, "x"), (100, "y")):
         df = spark.createDataFrame(
@@ -611,6 +610,7 @@ def test_merge_into_upsert(spark, sw):
         )
 
 
+@pytest.mark.slow  # over 3 s at 4 CPUs
 def test_zorder_compaction_prunes_both_dims(spark, sw):
     # scattered appends over a 2-D domain: neither dimension skippable
     import random

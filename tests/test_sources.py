@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import functools
+import os
 import pathlib
+import uuid
 
 import pytest
 
@@ -11,6 +14,43 @@ from pyspark.sql import functions as F
 from covid_data_pipeline_spark.harness.tables import table
 from covid_data_pipeline_spark.sources.ingest import land_url, landing_key
 from covid_data_pipeline_spark.sources.readers import read_csv, read_json
+from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
+from covid_data_pipeline_spark.sources.writers import SCHEMA_FILE, Warehouse
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"spark_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # The status store learns of jobs from the listener bus: drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def inferred(spark, wh, table_name):
+    """The table read the way it was before schema records: footer
+    inference, per batch dir on the snapshot backend."""
+    if isinstance(wh, Warehouse):
+        return spark.read.parquet(wh.path(table_name))
+    data = wh._data_dir(table_name)
+    batches = {f.split(os.sep, 1)[0] for f in wh._alive_files(table_name)}
+    parts = [
+        spark.read.option("basePath", os.path.join(data, b)).parquet(os.path.join(data, b))
+        for b in sorted(batches)
+    ]
+    return functools.reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
+def assert_reads_as_inferred(spark, wh, table_name):
+    got, want = wh.read(table_name), inferred(spark, wh, table_name)
+    assert got.schema == want.schema
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
 
 
 def test_landing_key_layout():
@@ -291,3 +331,79 @@ def test_multi_format_round_trip_equivalence(spark, sf_dir, tmp_path):
         )
         got = sorted(map(tuple, back.collect()))
         assert got == want, f"{fmt} round-trip diverged"
+
+
+# -- schema records (writers.py: _schema.json) ------------------------------
+
+_BATCH_SCHEMA = "d date, k string, v long, tags array<string>, m map<string,double>"
+
+
+def _batch(spark, day, n):
+    return spark.createDataFrame(
+        [(day, f"k{i}", i, [f"t{i}"], {"x": i / 2}) for i in range(n)],
+        _BATCH_SCHEMA,
+    ).withColumn("d", F.col("d").cast("date"))
+
+
+@pytest.mark.parametrize("backend", [Warehouse, SnapshotWarehouse])
+def test_two_batch_read_runs_no_job_and_equals_inference(spark, tmp_path, backend):
+    import datetime as dt
+
+    wh = backend(spark, str(tmp_path / "wh"))
+    wh.append(_batch(spark, dt.date(2021, 3, 1), 3), "l.t", partition_by=["d"])
+    wh.append(_batch(spark, dt.date(2021, 3, 2), 4), "l.t", partition_by=["d"])
+    _, jobs = spark_jobs(spark, lambda: wh.read("l.t"))
+    assert jobs == 0
+    assert_reads_as_inferred(spark, wh, "l.t")
+    assert wh.read("l.t").count() == 7
+
+
+def test_replace_with_new_schema_reads_new_schema(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path))
+    wh.replace(spark.createDataFrame([(1, "a")], "id int, s string"), "l.t")
+    wh.replace(spark.createDataFrame([(2.5, 7)], "x double, n long"), "l.t")
+    assert wh.read("l.t").columns == ["x", "n"]
+    assert [tuple(r) for r in wh.read("l.t").collect()] == [(2.5, 7)]
+    _, jobs = spark_jobs(spark, lambda: wh.read("l.t"))
+    assert jobs == 0
+    assert_reads_as_inferred(spark, wh, "l.t")
+
+
+def test_append_with_different_schema_drops_record(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path))
+    wh.append(spark.createDataFrame([(1, "a")], "id int, s string"), "l.t")
+    record = os.path.join(wh.path("l.t"), SCHEMA_FILE)
+    assert os.path.exists(record)
+    wh.append(spark.createDataFrame([(2, "b")], "id int, s string"), "l.t")
+    assert os.path.exists(record)  # same schema: the record stays
+    wh.append(spark.createDataFrame([(3, "c", 1.0)], "id int, s string, w double"), "l.t")
+    assert not os.path.exists(record)
+    assert_reads_as_inferred(spark, wh, "l.t")
+    assert wh.read("l.t").count() == 3
+
+
+def test_table_without_record_still_reads(spark, tmp_path):
+    """A table written before schema records reads by inference, and an
+    append of the same schema does not record one it cannot vouch for."""
+    wh = Warehouse(spark, str(tmp_path))
+    spark.createDataFrame([(1, "a")], "id int, s string").write.parquet(wh.path("l.t"))
+    assert_reads_as_inferred(spark, wh, "l.t")
+    wh.append(spark.createDataFrame([(2, "b")], "id int, s string"), "l.t")
+    assert not os.path.exists(os.path.join(wh.path("l.t"), SCHEMA_FILE))
+    assert sorted(r["id"] for r in wh.read("l.t").collect()) == [1, 2]
+
+
+def test_empty_partitioned_write_to_missing_table(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    wh = Warehouse(spark, str(tmp_path))
+    empty = spark.createDataFrame([], "p int, v string")
+    wh.append(empty, "l.t", partition_by=["p"])
+    assert not wh.exists("l.t")
+    assert not os.path.exists(os.path.join(wh.path("l.t"), SCHEMA_FILE))
+    with pytest.raises(AnalysisException):
+        wh.read("l.t")
+    # The first write with rows records the schema.
+    wh.append(spark.createDataFrame([(1, "a")], "p int, v string"), "l.t", partition_by=["p"])
+    assert os.path.exists(os.path.join(wh.path("l.t"), SCHEMA_FILE))
+    assert_reads_as_inferred(spark, wh, "l.t")
