@@ -85,11 +85,6 @@ def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN)
     )
 
 
-def stopword_hits(col: Column | str, stopwords: tuple[str, ...]) -> Column:
-    toks = tokens(col)
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-
-
 def lang_id(col: Column | str) -> Column:
     """Heuristic language ID: argmax of stopword hits across EN/FR/DE,
     'und' (undetermined) when no list scores ≥ 1 hit. O(tokens) per row,

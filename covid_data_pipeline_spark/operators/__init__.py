@@ -38,7 +38,6 @@ from covid_data_pipeline_spark.operators.similarity import (
     embedding_neardup_pairs,
 )
 from covid_data_pipeline_spark.operators.windows import (
-    incremental_deltas,
     top_k_per_group,
     with_deltas,
 )
@@ -72,7 +71,6 @@ __all__ = [
     "cosine_topk_ivf",
     "cosine_topk_lsh",
     "embedding_neardup_pairs",
-    "incremental_deltas",
     "top_k_per_group",
     "with_deltas",
 ]

@@ -210,55 +210,6 @@ def media_fingerprint(df: DataFrame) -> DataFrame:
     )
 
 
-def decode_and_featurize_images_arrow(
-    df: DataFrame,
-    fake: bool = False,
-    feature_dim: int = 8,
-    batch_rows: int = 64,
-) -> DataFrame:
-    """Arrow-native twin of :func:`decode_and_featurize_images` via
-    ``mapInArrow``: the batch arrives as a ``pyarrow.RecordBatch`` and
-    leaves as one, skipping the Arrow→pandas→Arrow conversion that
-    ``mapInPandas`` pays per batch. For opaque binary payloads that
-    round-trip matters — pandas boxes every payload into a Python
-    object; Arrow keeps them as a contiguous binary column until the
-    decoder actually touches the bytes. Output is row-for-row identical
-    to the pandas twin (asserted in tests)."""
-    import pyarrow as pa
-
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
-
-    def op(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "real image decode requires PIL/opencv (unavailable); "
-                    "pass fake=True for the deterministic stub"
-                )
-            payloads = [
-                (b or b"") if b is not None else b""
-                for b in batch.column("payload").to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("media_id"),
-                    pa.array(
-                        [hashlib.sha256(b).hexdigest() for b in payloads],
-                        pa.string(),
-                    ),
-                    pa.array([len(b) for b in payloads], pa.int64()),
-                    pa.array(
-                        [_fake_features(b, feature_dim) for b in payloads],
-                        pa.list_(pa.float32()),
-                    ),
-                ],
-                names=["media_id", "payload_sha", "n_bytes", "features"],
-            )
-
-    return df.select("media_id", "payload").mapInArrow(op, IMAGE_FEATURES_SCHEMA)
-
-
 PHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),

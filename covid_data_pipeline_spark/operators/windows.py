@@ -10,9 +10,7 @@ per-day deltas, with two deliberately different null/negative policies:
   ``prev IS NOT NULL`` (reference alert_case_spike.sql:28-46)
 
 Scale note: a window partitioned by entity shuffles once on the entity
-key; all deltas for an entity compute in one sorted pass. For append-only
-daily processing the incremental variant (join against the previous day's
-snapshot) avoids re-scanning history — provided equal on test series.
+key; all deltas for an entity compute in one sorted pass.
 """
 
 from __future__ import annotations
@@ -55,36 +53,6 @@ def with_deltas(
     for c in cols:
         prev = F.lag(F.col(c), 1).over(w)
         out = out.withColumn(c + prev_suffix, prev)
-        delta: Column = (
-            clamped_delta(F.col(c), F.col(c + prev_suffix))
-            if clamp
-            else F.col(c) - F.col(c + prev_suffix)
-        )
-        out = out.withColumn(delta_prefix + c, delta)
-    return out
-
-
-def incremental_deltas(
-    today: DataFrame,
-    yesterday: DataFrame,
-    keys: Sequence[str],
-    cols: Sequence[str],
-    clamp: bool = True,
-    prev_suffix: str = "_prev",
-    delta_prefix: str = "new_",
-) -> DataFrame:
-    """Incremental variant of :func:`with_deltas` for append-only daily runs.
-
-    Instead of LAG over the full history (the reference's plan — its mart
-    scans every fact partition every day, SURVEY.md §3.1 step 6), join
-    today's slice against yesterday's snapshot on the entity key. At 100 TB
-    this reads 2 partitions instead of all of history. Must produce rows
-    identical to the window variant on contiguous daily data (tested).
-    """
-    prev_cols = [F.col(c).alias(c + prev_suffix) for c in cols]
-    y = yesterday.select(*keys, *prev_cols)
-    out = today.join(y, on=list(keys), how="left")
-    for c in cols:
         delta: Column = (
             clamped_delta(F.col(c), F.col(c + prev_suffix))
             if clamp

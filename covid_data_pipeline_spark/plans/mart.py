@@ -5,13 +5,11 @@ LAG-window deltas (clamped at 0), per-100k + rate metrics, risk CASE,
 filtered to the processing day ABOVE the window (the LAG must see the
 prior day — SURVEY.md §7.3 trap), dynamic partition overwrite.
 
-Two variants, verified equal on contiguous daily series (tests):
-
-* :func:`build_mart_history` — exact reference plan: window over the
-  full fact history. O(history) read per day.
-* :func:`build_mart_incremental` — engine optimization: join today's
-  fact partition against yesterday's. O(2 partitions) per day — the
-  plan that survives 100 TB of fact history.
+One plan, :func:`build_mart_history`: the LAG window over each country's
+full fact history. A delta against the previous calendar day's partition
+would read less, but only the window is exact when a day is missing: the
+day after a gap still gets its increase over the last reported day
+(tested).
 """
 
 from __future__ import annotations
@@ -21,7 +19,7 @@ from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.functions.scalar import bucketize, per_100k, rate_percent
 from covid_data_pipeline_spark.operators.relational import dim_join
-from covid_data_pipeline_spark.operators.windows import incremental_deltas, with_deltas
+from covid_data_pipeline_spark.operators.windows import with_deltas
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse
 
@@ -107,45 +105,14 @@ def build_mart_history(
     return out.filter(F.col("report_date") == F.lit(report_date).cast("date"))
 
 
-def build_mart_incremental(
-    fact_today: DataFrame, fact_yesterday: DataFrame, dim: DataFrame
-) -> DataFrame:
-    """Scale plan: today's partition joined against yesterday's on
-    country — reads 2 partitions instead of full history. Identical
-    output to :func:`build_mart_history` on contiguous daily data
-    (first-ever day: LAG is NULL ≡ missing yesterday partition)."""
-    today = _joined_base(fact_today, dim)
-    yesterday = _joined_base(fact_yesterday, dim)
-    deltas = incremental_deltas(
-        today,
-        yesterday,
-        keys=["country_name"],
-        cols=["total_confirmed", "total_deaths"],
-        clamp=True,
-        delta_prefix="delta_",
-    )
-    return _finalize(deltas)
-
-
-def process_mart(
-    spark: SparkSession,
-    wh: Warehouse,
-    report_date: str,
-    incremental: bool = False,
-) -> int:
-    """Mart stage: compute the day's analytics and overwrite its partition.
-    Returns the rows written (0 when the day has no mart rows), counted by
-    an Observation on the write so the full-history window runs once; an
+def process_mart(spark: SparkSession, wh: Warehouse, report_date: str) -> int:
+    """Mart stage: compute the day's analytics with
+    :func:`build_mart_history` and overwrite its partition. Returns the
+    rows written (0 when the day has no mart rows), counted by an
+    Observation on the write so the full-history window runs once; an
     empty day writes no data files."""
     dim = wh.read(S.DIM_TABLE)
-    if incremental:
-        d = F.lit(report_date).cast("date")
-        fact_all = wh.read(S.FACT_TABLE)
-        today = fact_all.filter(F.col("report_date") == d)
-        yesterday = fact_all.filter(F.col("report_date") == F.date_sub(d, 1))
-        mart = build_mart_incremental(today, yesterday, dim)
-    else:
-        mart = build_mart_history(wh.read(S.FACT_TABLE), dim, report_date)
+    mart = build_mart_history(wh.read(S.FACT_TABLE), dim, report_date)
     obs = Observation()
     mart = mart.observe(obs, F.count(F.lit(1)).alias("rows"))
     wh.overwrite_partitions(mart, S.MART_TABLE, partition_by=["report_date"])

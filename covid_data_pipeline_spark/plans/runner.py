@@ -52,7 +52,6 @@ def run_day(
     wh: Warehouse,
     report_date: str,
     csv_path: str | None = None,
-    incremental_mart: bool = False,
     with_alerts: bool = True,
 ) -> DayResult:
     """Process one simulated day end-to-end. ``csv_path=None`` skips the
@@ -67,9 +66,7 @@ def run_day(
     if stages["ods"]:
         rows["fact"], rows["fact_missing_key"] = process_dds(spark, wh, report_date)
         stages["dds"] = rows["fact"] > 0
-        rows["mart"] = process_mart(
-            spark, wh, report_date, incremental=incremental_mart
-        )
+        rows["mart"] = process_mart(spark, wh, report_date)
         stages["mart"] = rows["mart"] > 0
         if with_alerts:
             result.new_alerts = run_all_alerts(spark, wh, report_date)

@@ -34,7 +34,6 @@ def stream_medallion(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    incremental_mart: bool = False,
     with_alerts: bool = False,
 ) -> StreamingQuery:
     """Drive ods→dds→mart (and optionally the alert queries) from a
@@ -75,7 +74,7 @@ def stream_medallion(
                 if r["d"] is not None and r["d"] >= new_dates[0]
             )
             for d in fact_dates:
-                process_mart(spark, wh, d, incremental=incremental_mart)
+                process_mart(spark, wh, d)
         if with_alerts:
             for d in new_dates:
                 run_all_alerts(spark, wh, d)

@@ -5,7 +5,6 @@ from covid_data_pipeline_spark.sources.readers import (  # noqa: F401
     read_jdbc,
     read_json,
     read_orc,
-    read_parquet_dir,
 )
 from covid_data_pipeline_spark.sources.writers import (  # noqa: F401
     IcebergWarehouse,

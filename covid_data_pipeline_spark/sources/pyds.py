@@ -260,9 +260,3 @@ class SyntheticEventsDataSource(DataSource):
 def register_synthetic_source(spark) -> None:
     """Idempotent registration of the synthetic events source."""
     spark.dataSource.register(SyntheticEventsDataSource)
-
-
-def expected_event_count(
-    num_partitions: int, rows_per_partition: int
-) -> int:
-    return num_partitions * rows_per_partition

@@ -176,13 +176,6 @@ def read_media_dir(
     )
 
 
-def read_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan (S2 equivalent when no catalog is configured).
-    Partition columns in hive-style ``k=v`` subdirs are discovered and
-    prunable."""
-    return spark.read.parquet(path)
-
-
 def read_parquet_evolved(spark: SparkSession, *paths: str) -> DataFrame:
     """Parquet scan across schema versions (``mergeSchema``): columns
     added over a table's lifetime are unioned into one schema, with

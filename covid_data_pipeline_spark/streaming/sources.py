@@ -30,12 +30,3 @@ def file_stream(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load(path)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """Synthetic ``rate`` source — load/soak testing without storage."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )

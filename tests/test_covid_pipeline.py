@@ -1,6 +1,6 @@
 """End-to-end covid pipeline tests: raw→ods→dds→mart→alerts on synthetic
 JHU-style fixtures (both header epochs), golden-value assertions,
-idempotent re-runs, incremental-vs-history mart equality, the run
+idempotent re-runs, mart and alerts across a missing day, the run
 report's row counts, the empty-day skip guard (on both warehouse backends),
 the JDBC alert sink and the per-day job budget."""
 
@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from covid_data_pipeline_spark.plans import alerts
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.plans.alerts import build_alerts
-from covid_data_pipeline_spark.plans.mart import build_mart_history, build_mart_incremental
+from covid_data_pipeline_spark.plans.mart import process_mart
 from covid_data_pipeline_spark.plans.ods import process_ods
 from covid_data_pipeline_spark.plans.runner import bootstrap_population, run_day
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
@@ -175,20 +175,46 @@ def test_rerun_is_idempotent(pipeline, spark):
     assert wh.read(S.ALERTS_TABLE).count() == before_alerts
 
 
-def test_incremental_mart_equals_history(pipeline, spark):
-    wh, _ = pipeline
-    fact = wh.read(S.FACT_TABLE)
-    dim = wh.read(S.DIM_TABLE)
-    day, prev = DAYS[2], DAYS[1]
-    hist = build_mart_history(fact, dim, day)
-    incr = build_mart_incremental(
-        fact.filter(F.col("report_date") == F.lit(day).cast("date")),
-        fact.filter(F.col("report_date") == F.lit(prev).cast("date")),
-        dim,
+def test_mart_and_alerts_across_missing_day(spark, tmp_path):
+    """The day after a missing day takes its deltas from the last
+    reported day, not from the empty calendar day before it."""
+    wh = Warehouse(spark, str(tmp_path))
+    wh.replace(
+        spark.createDataFrame(
+            [("k", "X", 2021, 1000000)],
+            "location_key string, country_name string, population_year int, "
+            "population long",
+        ),
+        S.DIM_TABLE,
     )
-    h = {r["country_name"]: r.asDict() for r in hist.collect()}
-    i = {r["country_name"]: r.asDict() for r in incr.collect()}
-    assert h == i
+    fact = spark.createDataFrame(
+        [("2021-01-01", 100, 1), ("2021-01-03", 160, 3)],
+        "d string, confirmed long, deaths long",
+    ).select(
+        F.col("d").cast("date").alias("report_date"),
+        F.lit("k").alias("location_key"),
+        "confirmed",
+        "deaths",
+        F.lit(0).cast("long").alias("recovered"),
+        (F.col("confirmed") - F.col("deaths")).alias("active"),
+        F.current_timestamp().alias("ingestion_ts"),
+    )
+    wh.overwrite_partitions(fact, S.FACT_TABLE, partition_by=["report_date"])
+    for day in ("2021-01-01", "2021-01-03"):
+        assert process_mart(spark, wh, day) == 1
+        alerts.run_all_alerts(spark, wh, day)
+    mart = {
+        str(r["report_date"]): (r["new_cases_today"], r["new_deaths_today"])
+        for r in wh.read(S.MART_TABLE).collect()
+    }
+    assert mart == {"2021-01-01": (0, 0), "2021-01-03": (60, 2)}
+    fired = {
+        (r["alert_type"], r["metric_value"])
+        for r in wh.read(S.ALERTS_TABLE)
+        .filter(F.col("alert_date") == F.lit("2021-01-03").cast("date"))
+        .collect()
+    }
+    assert fired == {("CASE_RATE_POPULATION", 60.0), ("DEATH_RATE_POPULATION", 2.0)}
 
 
 def test_notify_alerts_digest_and_short_circuit(pipeline, spark):

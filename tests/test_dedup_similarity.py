@@ -438,26 +438,6 @@ def test_quantized_topk_recall_vs_exact(spark, sf_dir):
     assert hits / total >= 0.8, f"quantized recall {hits}/{total}"
 
 
-def test_arrow_featurizer_matches_pandas_twin(spark, sf_dir):
-    """mapInArrow and mapInPandas featurizers must agree row-for-row —
-    the Arrow path just skips the pandas box/unbox per batch."""
-    from covid_data_pipeline_spark.harness.tables import table
-    from covid_data_pipeline_spark.operators.multimodal import (
-        decode_and_featurize_images,
-        decode_and_featurize_images_arrow,
-    )
-
-    docs = table(spark, sf_dir, "documents").limit(64)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    a = decode_and_featurize_images_arrow(media, fake=True)
-    p = decode_and_featurize_images(media, fake=True)
-    assert a.count() == p.count() == 64
-    assert a.exceptAll(p).isEmpty() and p.exceptAll(a).isEmpty()
-
-
 def test_incremental_lsh_equals_from_scratch(spark, sf_dir):
     """corpus pairs ∪ incremental(delta) pairs == from-scratch pairs on
     the full set — the invariant that lets a daily run skip

@@ -5,13 +5,6 @@ twin, and the foreachBatch medallion bridge."""
 from __future__ import annotations
 
 import pytest
-
-# r11 fast-tier marking (VERDICT r10 ask #3): the full suite runs ~52
-# min, which times out the driver's verify window; this module's tests
-# are in the SLOW tier (fast tier = `pytest tests/` with the default
-# addopts, full suite = `pytest tests/ -m ""` — run per round).
-pytestmark = pytest.mark.slow
-
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
@@ -40,6 +33,7 @@ def _drain(query) -> None:
     assert not query.isActive
 
 
+@pytest.mark.slow
 def test_tumbling_stream_equals_batch(spark, events_dir, tmp_path):
     batch_df = spark.read.parquet(events_dir)
     stream_df = file_stream(
@@ -113,6 +107,7 @@ def test_session_stream_equals_batch(spark, events_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+@pytest.mark.slow
 def test_stateful_delta_matches_batch_lag(spark, tmp_path):
     """cumulative_to_delta_stream (state = last row per key) must equal
     the batch LAG formulation across micro-batch boundaries: day 1-5 in
@@ -164,6 +159,7 @@ def test_stateful_delta_matches_batch_lag(spark, tmp_path):
     assert got == want and len(got) == 20
 
 
+@pytest.mark.slow
 def test_append_mode_emits_each_window_once(spark, tmp_path):
     """Append mode emits every window exactly once even when data for an
     already-watermarked window arrives in a later micro-batch. (Spark's
@@ -224,6 +220,7 @@ def test_append_mode_emits_each_window_once(spark, tmp_path):
     assert by_start.get("2024-01-01T10:00:00") in (1, 2)
 
 
+@pytest.mark.slow
 def test_stream_medallion_equals_batch_pipeline(spark, tmp_path):
     """Land the covid fixture days into raw only, then drive ods→dds→mart
     from the stream runner; the mart must equal the batch pipeline's mart
@@ -277,6 +274,7 @@ def test_stream_medallion_equals_batch_pipeline(spark, tmp_path):
     assert a_got == a_want and len(a_want) > 0
 
 
+@pytest.mark.slow
 def test_stream_dedup_within_watermark(spark, tmp_path):
     from covid_data_pipeline_spark.streaming.stateful import stream_dedup
 
@@ -336,6 +334,7 @@ def test_stream_static_dim_enrichment(spark, events_dir, tmp_path):
     assert got == want and len(got) >= 2
 
 
+@pytest.mark.slow
 def test_foreachbatch_medallion_bridge(spark, events_dir, tmp_path):
     """Stream → append landing + transform → partition-overwrite rollup;
     the rollup table must equal the batch groupBy of the full input."""
@@ -372,6 +371,7 @@ def test_foreachbatch_medallion_bridge(spark, events_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+@pytest.mark.slow
 def test_stream_interval_join_equals_batch_range_join(spark, events_dir, tmp_path):
     """Stream-stream interval join (watermarked state-bounded) must emit
     exactly the batch bucketed range join's pairs."""
@@ -519,6 +519,7 @@ def test_exactly_once_append_skips_replayed_batch(spark, tmp_path):
     assert wh.read("evt").count() == 15
 
 
+@pytest.mark.slow
 def test_stream_funnel_equals_batch_fold(spark, tmp_path):
     """stream_funnel_stage_times across micro-batch boundaries (state
     hand-off forced by maxFilesPerTrigger=1, events in event-time order)
@@ -622,6 +623,7 @@ def test_stream_quarantine_split_loses_nothing(spark, tmp_path):
     assert "in_range" in flagged[2] and "not_null" in flagged[None]
 
 
+@pytest.mark.slow
 def test_stream_pq_encode_equals_batch(spark, sf_dir, tmp_path):
     """pq_encode is a pure Arrow map, so it composes with Structured
     Streaming unchanged: encoding a file stream of embeddings must give
@@ -661,6 +663,7 @@ def test_stream_pq_encode_equals_batch(spark, sf_dir, tmp_path):
     assert stream_codes == batch_codes
 
 
+@pytest.mark.slow
 def test_stream_maintained_aggregate_equals_batch(spark, tmp_path):
     """stream_maintain_aggregate: MV refreshed per micro-batch must
     equal a full recompute of the base table after the stream drains;
@@ -719,6 +722,7 @@ def test_stream_maintained_aggregate_equals_batch(spark, tmp_path):
     assert rows(mv.read()) == rows(aggregate_state(base, ["grp"], ["amount"]))
 
 
+@pytest.mark.slow
 def test_stream_heavy_hitters_mergeable_guarantee(spark, tmp_path):
     """Streaming MG summaries across forced micro-batch boundaries must
     keep every item the batch EXACT operator certifies (frequency >
@@ -796,6 +800,7 @@ def test_stream_heavy_hitters_mergeable_guarantee(spark, tmp_path):
     assert found_any
 
 
+@pytest.mark.slow
 def test_stream_srm_guard_matches_batch(spark, tmp_path):
     from covid_data_pipeline_spark.operators.experiment import srm_check
     from covid_data_pipeline_spark.streaming.stateful import stream_srm_guard
@@ -844,6 +849,7 @@ def test_stream_srm_guard_matches_batch(spark, tmp_path):
         )
 
 
+@pytest.mark.slow
 def test_stream_srm_guard_drops_null_assignments(spark, tmp_path):
     """A NULL treat value must be dropped from BOTH arms (batch parity),
     not corrupt counts via object-dtype bitwise negation."""
@@ -872,6 +878,7 @@ def test_stream_srm_guard_drops_null_assignments(spark, tmp_path):
     assert not r["srm_detected"]
 
 
+@pytest.mark.slow
 def test_stream_maintained_distinct_equals_batch(spark, tmp_path):
     from covid_data_pipeline_spark.sources.matview import MaterializedDistinct
     from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
@@ -909,6 +916,7 @@ def test_stream_maintained_distinct_equals_batch(spark, tmp_path):
     assert mvd.refreshed_version() == swh.current_version("visits") >= 2
 
 
+@pytest.mark.slow
 def test_stream_bpe_tokenize_equals_batch(spark, sf_dir, tmp_path):
     """apply_bpe_merges is a pure projection (chained replaces), so the
     same learned rules tokenize a STREAM of documents identically to the
@@ -950,6 +958,7 @@ def test_stream_bpe_tokenize_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and len(want) == docs.count()
 
 
+@pytest.mark.slow
 def test_stream_cusum_matches_batch_on_closed_days(spark, tmp_path):
     import datetime as dt
 
@@ -1010,6 +1019,7 @@ def test_stream_cusum_matches_batch_on_closed_days(spark, tmp_path):
     assert any(b for (_, _, b) in got.values())
 
 
+@pytest.mark.slow
 def test_stream_cusum_rejects_out_of_order_days(spark, tmp_path):
     import datetime as dt
 
@@ -1046,6 +1056,7 @@ def test_stream_cusum_rejects_out_of_order_days(spark, tmp_path):
         q.awaitTermination()
 
 
+@pytest.mark.slow
 def test_stream_holt_winters_matches_batch_on_closed_days(spark, tmp_path):
     import datetime as dt
 
@@ -1110,6 +1121,7 @@ def test_stream_holt_winters_matches_batch_on_closed_days(spark, tmp_path):
         assert last["forecast_1"] == batch[et]["forecast_1"], et
 
 
+@pytest.mark.slow
 def test_stream_repair_monotone_matches_batch(spark, tmp_path):
     import datetime as dt
 
@@ -1170,6 +1182,7 @@ def test_stream_repair_monotone_matches_batch(spark, tmp_path):
     assert got[("k", "2024-07-03")] == (12, 15, True)
 
 
+@pytest.mark.slow
 def test_stream_markov_counts_matches_batch(spark, tmp_path):
     """Summed per-user streaming transition counts on closed data must
     equal the batch LAG estimator exactly, including transitions that
@@ -1256,6 +1269,7 @@ def test_stream_markov_counts_matches_batch(spark, tmp_path):
     assert sum(batch_counts.values()) == 30 * 19
 
 
+@pytest.mark.slow
 def test_stream_mann_whitney_matches_batch(spark, tmp_path):
     """The drained streaming rank-sum monitor's final integers must be
     bit-identical to the batch mann_whitney_u on the same rows,
@@ -1318,6 +1332,7 @@ def test_stream_mann_whitney_matches_batch(spark, tmp_path):
     assert a["u2_treat"] > a["n_treat"] * a["n_ctrl"]
 
 
+@pytest.mark.slow
 def test_stream_hll_matches_batch_sketch(spark, tmp_path):
     """The drained streaming HLL's (pres, s_hi, s_lo) must be
     bit-identical to the batch portable sketch on the same rows, with
@@ -1380,6 +1395,7 @@ def test_stream_hll_matches_batch_sketch(spark, tmp_path):
         assert st["n_seen"] == 1500
 
 
+@pytest.mark.slow
 def test_stream_interval_union_matches_batch_merge(spark, tmp_path):
     """The drained streaming interval union (max-seq rows per key) must
     equal operators/intervals.merge_intervals on the same rows, with
@@ -1440,6 +1456,7 @@ def test_stream_interval_union_matches_batch_merge(spark, tmp_path):
     assert got == want and len(want) > 3
 
 
+@pytest.mark.slow
 def test_stream_ams_matches_batch_signed_sums(spark, tmp_path):
     """The drained streaming AMS state (max-seq signed sums per group)
     must square to the batch sketch's x values on the same rows —
@@ -1493,6 +1510,7 @@ def test_stream_ams_matches_batch_signed_sums(spark, tmp_path):
             assert int(s) * int(s) == want[(g, j)], (g, j)
 
 
+@pytest.mark.slow
 def test_stream_cm_sketch_matches_batch_counters(spark, tmp_path):
     """The drained streaming CM state must equal the batch sketch's
     (d, slot, cnt) relation exactly — counters are additive, so the
@@ -1550,6 +1568,7 @@ def test_stream_cm_sketch_matches_batch_counters(spark, tmp_path):
                 ), (g, j, slot)
 
 
+@pytest.mark.slow
 def test_stream_cm_sketch_through_medallion_bridge(spark, tmp_path):
     """VERDICT r8 ask #7: drive stream_cm_sketch through the
     foreachBatch medallion bridge like the other stateful ops — the
@@ -1608,6 +1627,7 @@ def test_stream_cm_sketch_through_medallion_bridge(spark, tmp_path):
                 ), (g, j, slot)
 
 
+@pytest.mark.slow
 def test_stream_psi_matches_batch_formula(spark, tmp_path):
     """20th stateful op: PSI drift monitor. The drained per-group
     state must equal the whole-input Python recomputation exactly
@@ -1682,6 +1702,7 @@ def test_stream_psi_matches_batch_formula(spark, tmp_path):
     assert final["shifted"]["psi_nano"] > 100_000_000
 
 
+@pytest.mark.slow
 def test_stream_psi_through_medallion_bridge(spark, tmp_path):
     """VERDICT r9 ask #6: drive stream_psi through the foreachBatch
     medallion bridge like stream_cm_sketch — per-group PSI updates
@@ -1760,6 +1781,7 @@ def test_stream_psi_rejects_bad_config(spark):
         stream_psi(df, ["g"], "bin", {"g": [1, 2, 3]}, bins=10)
 
 
+@pytest.mark.slow
 def test_stream_wasserstein_matches_batch_formula(spark, tmp_path):
     """22nd stateful op: W1 drift monitor. Drained per-group counts
     must equal the whole-input recomputation (additive state ->
