@@ -2,19 +2,36 @@
 
 Runs the headline queries (``bench=True`` in the registry) against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]``. The last stdout line is the driver's, one
+compact JSON object (``separators=(",", ":")``):
 
-    {"metric": "...", "value": N, "unit": "sec", ...}
+    {"metric":"headline_queries_total","value":N,"unit":"sec","sf":0.1,
+     "queries":{"mart_analytics":0.81,...}}
+
+``value`` is the total of every timed median; ``queries`` maps each
+headline query to its median in seconds, rounded to 2 dp, except the
+``DRIVER_OMIT`` twins and overhead-floor queries, which keep the line
+inside the driver's 2,000-char tail capture (``tests/test_bench.py``
+holds it to 1,990 chars for the whole registry).
 
 Output discipline (BENCH_r03 landed ``parsed: null`` because JVM/Ivy
-chatter interleaved with the result on stdout; BENCH_r04 because the
-full 56-query line outgrew the driver's 2 KB tail capture): file
-descriptor 1 is redirected to stderr for the entire run, the FULL
-payload (per-query medians, per-query vs_prev ratios) is written to
-``bench_result.json`` next to this script, and the sole stdout line is
-a COMPACT summary — total, geomean vs prev, worst-3/best-3 ratios,
-regression list, pointer to the full file — guaranteed under 1900
-chars so the driver's tail capture always parses it.
+chatter interleaved with the result on stdout): file descriptor 1 is
+redirected to stderr for the entire run, so the result is the sole
+stdout line. The comparison summary (vs_prev with worst-3/best-3
+ratios, geomean vs r1 and vs the idle record, regressions, drift) is
+one ``# {...}`` stderr line. The FULL payload goes to
+``bench_result.json`` next to this script: every median, every raw
+sample, and per query the median split into Python build time, sink
+execution time and Spark jobs (``query_layers``; jobs are counted by
+job tag through ``covid_data_pipeline_spark.observe``).
+
+Subset runs for A/Bs: ``python <tree>/bench.py q1,q2,...`` times only
+the named registry queries, with the same warm-up, timed runs and
+output. Run each tree's own copy in pairs, swapping which tree goes
+first from pair to pair (with the parent always first, the second run
+of each pair read ~7% slower on dedup_minhash, and the gap reversed
+when the order did), and compare the ``queries`` maps (or
+``bench_result.json`` for ``DRIVER_OMIT`` names).
 
 Timing discipline: after an untimed warmup pass (JIT/codegen caches),
 each query is run **three** times and the per-query **median** is
@@ -35,7 +52,7 @@ would let Catalyst prune work a real consumer pays for.
 Regression gate: ADVISORY by default. If a previous round's
 BENCH_r{N}.json exists, per-query ``vs_prev`` ratios are computed
 (recorded in bench_result.json, surviving regressions echoed as
-``# REGRESSION`` stderr lines and listed in the compact stdout line) —
+``# REGRESSION`` stderr lines and listed in the ``#`` summary line) —
 but the exit code stays 0: round 4 proved a nonzero exit turns pure
 machine contention into an rc=1 official record. Set
 SPARK_GRAFT_STRICT_GATE=1 to restore exit-1 for local development.
@@ -69,11 +86,26 @@ import statistics
 import sys
 import time
 
+from covid_data_pipeline_spark.observe import spark_jobs
+
 # Bump when what a timed sample MEASURES changes (not when queries are
 # added): v2 = clearCache between timed runs (r10 honesty fix — every
 # sample is a full recompute from parquet). Records without the field
 # predate v2; ratios against them get cross_methodology: true.
 METHODOLOGY = "noop-median-clearcache-v2"
+
+# Timed and kept in bench_result.json, left out of the stdout map: the
+# numpy / native / pretrained twins of other headline queries and the
+# queries that only measure the per-query overhead floor.
+DRIVER_OMIT = frozenset({
+    "similarity_topk_bruteforce_np",
+    "dedup_minhash_native",
+    "similarity_topk_ivf_pretrained",
+    "similarity_topk_pq_pretrained",
+    "mixture_sample_docs",
+    "filter_project",
+    "events_tumbling_window",
+})
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -124,18 +156,25 @@ def bench_spark(app_name: str, driver_memory: str = "8g"):
     return spark
 
 
-def run_once(spark, fn, sf_dir: str) -> tuple[float, float]:
+def run_once(spark, fn, sf_dir: str) -> tuple[float, float, int]:
     """One timed run of a registry-style query ``fn(spark, sf_dir)``.
 
     Builds the DataFrame, materializes it through the no-op sink and
-    returns ``(build_s, exec_s)``. Build time includes the eager jobs
+    returns ``(build_s, exec_s, jobs)``. Build time includes the eager jobs
     iterative operators run while building (CC rounds, Lloyd, BPE).
+    ``jobs`` counts those and the sink's: the job tag is set before the
+    clock starts and read back after it stops.
     """
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    t1 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    t2 = time.perf_counter()
+
+    def timed() -> tuple[float, float]:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        return t1 - t0, t2 - t1
+
+    (build_s, exec_s), jobs = spark_jobs(spark, timed)
     # Cross-run honesty (r10 optimization round): operators that
     # persist() an intermediate (e.g. curation's exact-dedup slice)
     # register it in the session CacheManager keyed on the
@@ -152,7 +191,7 @@ def run_once(spark, fn, sf_dir: str) -> tuple[float, float]:
     # produced reproducible 13s stalls on the Python-boundary
     # queries — knn_graph_lsh 2.7s → 13.3s.)
     spark.catalog.clearCache()
-    return t1 - t0, t2 - t1
+    return build_s, exec_s, jobs
 
 
 def gate_trips(
@@ -209,6 +248,22 @@ def gate_trips(
     return regressions, advisories
 
 
+def stdout_line(timings: dict[str, float], sf: float) -> str:
+    """The driver's stdout line (see the module docstring)."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "sf": sf,
+            "queries": {
+                n: round(t, 2) for n, t in timings.items() if n not in DRIVER_OMIT
+            },
+        },
+        separators=(",", ":"),
+    )
+
+
 def main() -> None:
     # Reserve the real stdout for the single result line; everything
     # else (including JVM output inherited through fd 1) goes to stderr.
@@ -223,15 +278,21 @@ def main() -> None:
 
     from covid_data_pipeline_spark.harness.registry import QUERIES
 
-    bench_specs = {n: s for n, s in QUERIES.items() if s.bench}
+    if len(sys.argv) > 1:
+        bench_specs = {n: QUERIES[n] for n in sys.argv[1].split(",")}
+    else:
+        bench_specs = {n: s for n, s in QUERIES.items() if s.bench}
 
-    def sample(name: str) -> float:
-        return sum(run_once(spark, bench_specs[name].fn, sf_dir))
+    def sample(name: str) -> tuple[float, float, int]:
+        return run_once(spark, bench_specs[name].fn, sf_dir)
 
     run_samples: dict[str, list[float]] = {}
+    run_splits: dict[str, list[tuple[float, float, int]]] = {}
 
     def timed_median(name: str) -> float:
-        samples = [round(sample(name), 3) for _ in range(runs)]
+        splits = [sample(name) for _ in range(runs)]
+        run_splits.setdefault(name, []).extend(splits)
+        samples = [round(b + e, 3) for b, e, _ in splits]
         run_samples.setdefault(name, []).extend(samples)
         med = round(statistics.median(samples), 3)
         print(f"# {name}: median {med}s (runs: {samples})", file=sys.stderr)
@@ -340,6 +401,16 @@ def main() -> None:
         # passes) — lets a reader separate contention noise from drift
         # without re-running (VERDICT r6 ask #4).
         "query_runs": {n: run_samples[n] for n in timings},
+        # Per-query medians of the split: Python build time (with the
+        # eager jobs it runs), sink execution time, and Spark jobs.
+        "query_layers": {
+            n: {
+                "build_s": round(statistics.median(b for b, _, _ in sp), 3),
+                "exec_s": round(statistics.median(e for _, e, _ in sp), 3),
+                "jobs": statistics.median_low(j for _, _, j in sp),
+            }
+            for n, sp in run_splits.items()
+        },
         "sf": _sf_from_dir(sf_dir),
         "runs_per_query": runs,
         "aggregation": "median",
@@ -355,46 +426,36 @@ def main() -> None:
         payload["vs_idle"] = vs_idle
 
     here = os.path.dirname(os.path.abspath(__file__))
-    # Full payload lives in the file; stdout gets the compact line.
+    # Full payload lives in the file; stdout gets the driver's line.
     try:
         with open(os.path.join(here, "bench_result.json"), "w") as f:
             f.write(json.dumps(payload) + "\n")
     except OSError:
         pass
 
-    compact = {
-        "metric": "headline_queries_total",
-        "value": total,
-        "unit": "sec",
-        "sf": payload["sf"],
+    summary = {
         "n_queries": len(timings),
         "runs_per_query": runs,
-        "aggregation": "median",
         "methodology": METHODOLOGY,
         "full_results": "bench_result.json",
     }
     if vs_prev:
         srt = sorted(vs_prev["ratios"].items(), key=lambda kv: -kv[1])
-        compact["vs_prev"] = vs_prev["file"]
-        compact["geomean_vs_prev"] = vs_prev["geomean"]
-        compact["worst3"] = dict(srt[:3])
-        compact["best3"] = dict(srt[-3:])
+        summary["vs_prev"] = vs_prev["file"]
+        summary["geomean_vs_prev"] = vs_prev["geomean"]
+        summary["worst3"] = dict(srt[:3])
+        summary["best3"] = dict(srt[-3:])
     if vs_r1:
-        compact["geomean_vs_r1"] = vs_r1["geomean"]
-        compact["n_shared_r1"] = vs_r1["n_shared"]
+        summary["geomean_vs_r1"] = vs_r1["geomean"]
+        summary["n_shared_r1"] = vs_r1["n_shared"]
     if vs_idle:
-        compact["geomean_vs_idle"] = vs_idle["geomean"]
+        summary["geomean_vs_idle"] = vs_idle["geomean"]
     if regressions:
-        compact["regressions"] = regressions[:5]
+        summary["regressions"] = regressions
     if drift_advisory:
-        compact["drift_advisory"] = drift_advisory[:2]
-    line = json.dumps(compact)
-    if len(line) > 1900:  # hard guarantee: never outgrow tail capture
-        line = json.dumps({k: compact[k] for k in
-                           ("metric", "value", "unit", "sf", "n_queries",
-                            "geomean_vs_prev", "geomean_vs_r1",
-                            "full_results")
-                           if k in compact})
+        summary["drift_advisory"] = drift_advisory
+    print("# " + json.dumps(summary), file=sys.stderr)
+    line = stdout_line(timings, payload["sf"])
     os.write(real_stdout_fd, (line + "\n").encode())
     os.close(real_stdout_fd)
     if regressions and os.environ.get("SPARK_GRAFT_STRICT_GATE"):

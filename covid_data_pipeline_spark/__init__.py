@@ -34,6 +34,8 @@ Layout:
                similarity, multimodal)
   plans      — the covid medallion pipeline (raw/ods/dds/mart/alerts)
   streaming  — Structured Streaming variants of the incremental layer
+  observe    — the Spark-job counter (job tags read back from the
+               AppStatusStore)
 """
 
 __version__ = "0.1.0"

@@ -132,7 +132,21 @@ class _Range(InputPartition):
 class _Opts:
     """Parsed, validated source options (shared batch/stream)."""
 
+    # Lower-case: Spark hands options over case-insensitively.
+    KEYS = frozenset({
+        "numpartitions", "rowsperpartition", "nusers", "stepseconds",
+        "seed", "rowsperbatch", "absorbfilters", "maxrows",
+    })
+
     def __init__(self, options: dict):
+        unknown = sorted(set(options) - self.KEYS)
+        if unknown:
+            # A misspelt size option would otherwise fall back to the
+            # 8 x 1000-row default without a word.
+            raise ValueError(
+                f"unknown synthetic_events option(s) {unknown}; "
+                f"accepted: {sorted(self.KEYS)}"
+            )
         self.num_partitions = int(options.get("numpartitions", 8))
         self.rows_per_partition = int(options.get("rowsperpartition", 1000))
         self.n_users = int(options.get("nusers", 1000))

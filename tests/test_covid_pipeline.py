@@ -13,6 +13,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from covid_data_pipeline_spark.observe import spark_jobs
 from covid_data_pipeline_spark.plans import alerts
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.plans.alerts import build_alerts
@@ -22,7 +23,7 @@ from covid_data_pipeline_spark.plans.runner import bootstrap_population, run_day
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
 from covid_data_pipeline_spark.sources.writers import SCHEMA_FILE, Warehouse
 from tests.covid_fixtures import DAYS, population_df, write_day_csvs
-from tests.test_sources import assert_reads_as_inferred, spark_jobs
+from tests.test_sources import assert_reads_as_inferred
 
 
 class _Collect(logging.Handler):

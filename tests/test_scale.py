@@ -8,13 +8,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
+from covid_data_pipeline_spark.observe import spark_jobs
 from covid_data_pipeline_spark.operators.scale import (
     salted_join,
     salted_sum,
     write_bucketed,
 )
 from tests.test_plans import plan_of
-from tests.test_sources import spark_jobs
 
 
 def _skewed(spark):

@@ -1,36 +1,22 @@
-"""Source readers and landing ingest: JSON round-trip, URL landing."""
+"""Source readers and landing ingest: JSON round-trip, URL landing, and
+the synthetic events source's option check."""
 
 from __future__ import annotations
 
 import functools
 import os
 import pathlib
-import uuid
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
+from covid_data_pipeline_spark.observe import spark_jobs
 from covid_data_pipeline_spark.sources.ingest import land_url, landing_key
 from covid_data_pipeline_spark.sources.readers import read_csv, read_json
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
 from covid_data_pipeline_spark.sources.writers import SCHEMA_FILE, Warehouse
-
-
-def spark_jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn started)``, counted by job group."""
-    sc = spark.sparkContext
-    group = f"spark_jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted call")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # The status store learns of jobs from the listener bus: drain it first.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def inferred(spark, wh, table_name):
@@ -407,3 +393,16 @@ def test_empty_partitioned_write_to_missing_table(spark, tmp_path):
     wh.append(spark.createDataFrame([(1, "a")], "p int, v string"), "l.t", partition_by=["p"])
     assert os.path.exists(os.path.join(wh.path("l.t"), SCHEMA_FILE))
     assert_reads_as_inferred(spark, wh, "l.t")
+
+
+def test_synthetic_source_rejects_unknown_option(spark):
+    """A misspelt option fails the read instead of falling back to the
+    8 x 1000-row defaults, naming the options the source accepts."""
+    from covid_data_pipeline_spark.sources.pyds import _Opts, register_synthetic_source
+
+    with pytest.raises(ValueError, match=r"\['n_rows'\]; accepted: .*'numpartitions'"):
+        _Opts({"n_rows": "16000000", "numpartitions": "64"})
+    register_synthetic_source(spark)
+    read = spark.read.format("synthetic_events").option("n_rows", 16).load()
+    with pytest.raises(Exception, match="n_rows"):
+        read.count()

@@ -37,9 +37,9 @@ def events_16m(big_spark):
     register_synthetic_source(big_spark)
     return (
         big_spark.read.format("synthetic_events")
-        .option("n_rows", 16_000_000)
-        .option("n_partitions", 64)
-        .option("n_users", 200_000)
+        .option("numPartitions", 64)
+        .option("rowsPerPartition", 250_000)
+        .option("nUsers", 200_000)
         .load()
     )
 

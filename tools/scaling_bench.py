@@ -59,7 +59,8 @@ def main() -> int:
     bench = {n: s for n, s in QUERIES.items() if s.bench}
 
     def timed(name: str, sf_dir: str) -> float:
-        return round(sum(run_once(spark, bench[name].fn, sf_dir)), 3)
+        build_s, exec_s, _ = run_once(spark, bench[name].fn, sf_dir)
+        return round(build_s + exec_s, 3)
 
     # Warmup at sf0.1 (codegen/JIT) — untimed.
     for n in bench:

@@ -25,34 +25,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 
-_EVENTS_16M_CHECKED = False
-
-
 def _events_16m(spark):
     """16M synthetic events (64 partitions x 250k rows, 200k users).
-
-    The option names MUST match what `sources/pyds._Opts` parses
-    (numPartitions / rowsPerPartition / nUsers) — rounds 3-5 passed
-    `n_rows`/`n_partitions`/`n_users`, which the source silently
-    ignored, so every "16m" case actually ran on the 8x1000-row
-    DEFAULTS while reporting a hardcoded 16M. The one-time count
-    assertion below is the tripwire against that drift recurring."""
+    The source rejects option names it does not know, so a misspelt
+    size cannot fall back to its 8 x 1000-row defaults."""
     from covid_data_pipeline_spark.sources.pyds import register_synthetic_source
 
     register_synthetic_source(spark)
-    df = (
+    return (
         spark.read.format("synthetic_events")
         .option("numPartitions", 64)
         .option("rowsPerPartition", 250_000)
         .option("nUsers", 200_000)
         .load()
     )
-    global _EVENTS_16M_CHECKED
-    if not _EVENTS_16M_CHECKED:
-        n = df.count()
-        assert n == 16_000_000, f"synthetic_events option drift: {n} rows"
-        _EVENTS_16M_CHECKED = True
-    return df
 
 
 def case_funnel_16m(spark):
