@@ -348,6 +348,12 @@ def minhash_dedup(
     # localCheckpoint, not persist(): persist() registers in the session
     # cache manager and leaks one cached relation per invocation in a
     # long-lived session; checkpoint blocks are GC'd with the plan.
+    # eager=False is not lazy under AQE: the call runs the input plan's
+    # query stages (one job per shuffle exchange or broadcast) before
+    # returning. These are this function's only build-time jobs. In
+    # curate_documents the input is the persisted exact-dedup relation
+    # (two aggregate exchanges and a broadcast join), and the call runs
+    # 4 jobs (3 for the same relation unpersisted; local[4], 5,000 docs).
     signed = with_minhash(
         df, text_col, shingle_k, num_hashes, portable=portable
     ).select(id_col, "shingle_hashes", "minhash").localCheckpoint(eager=False)

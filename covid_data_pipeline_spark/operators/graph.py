@@ -25,17 +25,76 @@ adjacency to one task; that skew case (power-law or single-hub graphs)
 is untested. The pair provably converges in O(log n) rounds regardless
 of graph diameter — unlike naive label propagation, whose round count
 is the component diameter (fatal for chain-shaped graphs at 100 TB).
-Rounds ``localCheckpoint`` eagerly: without lineage truncation the
-plan tree doubles per iteration and the driver, not the data, becomes
-the bottleneck.
+Rounds ``localCheckpoint``: without lineage truncation the plan tree
+doubles per iteration and the driver, not the data, becomes the
+bottleneck.
+
+Small edge sets skip the rounds. Star rounds shrink the edge set every
+round, and their convergence probe already counts it; once the live
+edge set (the input, or the residual after any round) has at most
+``_LOCAL_FINISH_EDGES`` edges, it is collected through Arrow and
+labelled by one union-find pass on the driver. Union-find roots are
+set minima, so that finish is exactly the converged star forest and the
+labels do not depend on the path. A small graph — the curation chain's
+near-duplicate pairs are a few hundred edges — then costs one collect
+job instead of a pre-contraction, star rounds of several jobs each and
+an ``exceptAll`` confirmation.
 """
 
 from __future__ import annotations
 
+import sys
+from typing import TYPE_CHECKING
+
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 __all__ = ["connected_components", "largest_components", "pagerank_int"]
+
+
+# Edge count at or below which the live edge set is collected and
+# labelled by one union-find pass on the driver instead of more star
+# rounds. Sized by the sweep in ABBENCH_r13_cc.json (tools/cc_sweep.py,
+# local[4], 4g driver; medians of 3, build + exec, finish vs rounds):
+# random sparse 10k edges 0.5 s vs 4.9 s, 100k 1.3 vs 6.7, 300k 3.2 vs
+# 10.2, 1M 10.5 vs 19.4, 2M 26.1 vs 42.7; 100k-leaf hub 1.1 vs 2.3;
+# 300k power-law 2.2 vs 6.6; labels equal in every run. The finish is
+# serial driver work that grows ~10 s per 1M edges while the rounds'
+# data-proportional part shrinks with more cores, so the constant sits
+# at 300k, where the finish wins 3x here, not at the 2M the sweep
+# reached: with 8x the cores the rounds would still lose at 300k but
+# could win at 1M. It also bounds the finish's driver memory (Python
+# peak 236 MB at 300k, 457 MB at 1M).
+_LOCAL_FINISH_EDGES = 300_000
+
+
+def _union_find(pairs) -> dict:
+    """Star forest of the components of ``pairs``: ``{node: root}`` for
+    every node that is not its component's root. A union always hangs
+    the larger root under the smaller, so each root is the minimum of
+    its set, and the forest is node → component minimum."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    # Only hung roots are keys, so every key is a non-root node.
+    return {x: find(x) for x in parent}
 
 
 def _local_contract(e: DataFrame) -> DataFrame:
@@ -54,32 +113,35 @@ def _local_contract(e: DataFrame) -> DataFrame:
     shuffle-partition sizing, the same invariant every hash aggregation
     already relies on. Output is ≤ one edge per non-root local node,
     so downstream rounds shuffle strictly less than the input."""
+    # Python workers need not be able to import this package: ship
+    # _union_find with the closure instead of by module reference.
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
     def contract(pdfs):
         import pandas as pd
 
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in pdfs:
-            for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        xs = [x for x in parent if find(x) != x]
-        if xs:
-            yield pd.DataFrame({"src": xs, "dst": [find(x) for x in xs]})
+        forest = _union_find(
+            pair
+            for pdf in pdfs
+            for pair in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist())
+        )
+        if forest:
+            yield pd.DataFrame({"src": list(forest), "dst": list(forest.values())})
 
     return e.mapInPandas(contract, e.schema)
+
+
+def _finish_on_driver(edges: pa.Table) -> pa.Table:
+    """The converged star forest of a collected edge set, as an Arrow
+    table of the same schema."""
+    import pyarrow as pa
+
+    forest = _union_find(
+        zip(edges.column(0).to_pylist(), edges.column(1).to_pylist())
+    )
+    return pa.Table.from_pydict(
+        {"src": list(forest), "dst": list(forest.values())}, schema=edges.schema
+    )
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -169,30 +231,46 @@ def connected_components(
         at 1M nodes). Disable for partitions too large to union-find in
         executor memory or for exotic id types pandas can't round-trip.
     stats : optional dict; on return carries ``{"rounds": N}`` — the
-        number of star rounds executed (convergence probe included).
+        number of star rounds executed (convergence probe included); 0
+        when the input is already small enough to finish on the driver.
+
+    Strategy follows the edge count the rounds already observe. Once
+    the live edge set has at most ``_LOCAL_FINISH_EDGES`` edges — the
+    input, the pre-contracted input, or the residual after any round —
+    it is collected through Arrow and labelled by one union-find pass
+    on the driver (:func:`_union_find`), whose roots are set minima: the
+    result is exactly the converged star forest, so labels do not
+    depend on which path ran. The input check is one
+    ``limit(T + 1)`` collect of the checkpointed edges that both decides
+    and fetches (one job; on a multi-partition input it gathers at most
+    ``T + 1`` rows per partition into one task); later checks reuse the
+    count of the round's convergence probe and add no job. A small
+    graph therefore never runs the pre-contraction, the star rounds or
+    the ``exceptAll`` confirmation.
 
     Returns ``(node, component)``. Deterministic: the label is the
     component min, independent of partitioning or iteration order.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
-        F.col(src) != F.col(dst)
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .where(F.col(src) != F.col(dst))
+        .localCheckpoint(eager=False)
     )
-    if pre_contract:
-        e = _local_contract(e)
-    e = e.localCheckpoint(eager=False)
 
-    # One-job convergence probe: (row count, order-independent hash sum).
+    # One-action convergence probe: (row count, order-independent hash sum).
     # A star round is a no-op iff the edge multiset is unchanged; equal
     # signatures make that overwhelmingly likely, and the single
     # exceptAll below CONFIRMS it exactly — so the exact (2-shuffle)
     # equality test runs once at convergence instead of every round that
-    # happens to keep the count stable. Checkpoints are LAZY: the probe
-    # aggregate is the action that materializes each round's checkpoint,
-    # so a round costs exactly one job (probe) instead of three
-    # (eager checkpoint + count + exceptAll). On job-overhead-bound
-    # graphs (small iterative steps) driver actions are the dominant
-    # cost; at real scale the saved job is a full extra pass over the
-    # edge set.
+    # happens to keep the count stable. The probe aggregate is also the
+    # action that finishes each round's checkpoint, so a round runs one
+    # probe instead of an eager checkpoint + count + exceptAll. The
+    # checkpoint is not fully lazy under AQE: localCheckpoint(eager=False)
+    # executes the round's shuffle stages when it is called, as jobs of
+    # their own, so a round costs those jobs plus the probe's, not one.
+    # On job-overhead-bound graphs (small iterative steps) driver actions
+    # are the dominant cost; at real scale each saved action is a full
+    # extra pass over the edge set.
     def _sig(df: DataFrame) -> tuple:
         # Decimal accumulator: a long sum of xxhash64 overflows under
         # ANSI mode; decimal(38,0) absorbs any realistic edge count.
@@ -205,16 +283,32 @@ def connected_components(
         ).collect()[0]
         return (r["c"], r["h"])
 
-    sig = _sig(e)
     rounds = 0
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        sig2 = _sig(e2)
-        converged = sig2 == sig and e2.exceptAll(e).isEmpty()
-        e, sig = e2, sig2
-        rounds += 1
-        if converged:
-            break
+    head = e.limit(_LOCAL_FINISH_EDGES + 1).toArrow()
+    small = head.num_rows <= _LOCAL_FINISH_EDGES
+    if not small:
+        if pre_contract:
+            e = _local_contract(e).localCheckpoint(eager=False)
+        sig = _sig(e)
+        small = sig[0] <= _LOCAL_FINISH_EDGES
+        while not small and rounds < max_iter:
+            e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
+            sig2 = _sig(e2)
+            converged = sig2 == sig and e2.exceptAll(e).isEmpty()
+            e, sig = e2, sig2
+            rounds += 1
+            if converged:
+                break
+            small = sig[0] <= _LOCAL_FINISH_EDGES
+        if small:
+            head = e.toArrow()
+    if small:
+        # Checkpointed so that the tail's two reads and every later action
+        # read the forest once from the block manager instead of each
+        # re-shipping a local relation from the driver.
+        e = e.sparkSession.createDataFrame(_finish_on_driver(head)).localCheckpoint(
+            eager=False
+        )
     if stats is not None:
         stats["rounds"] = rounds
     # At convergence e is a star forest: src → component root (= min).
@@ -367,8 +461,9 @@ def pagerank_int(
             )
         )
         if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-            # lazy: the next iteration's shuffle materializes it — no
-            # dedicated checkpoint job (same pattern as the star rounds)
+            # lazy: no collect of its own; under AQE the call still
+            # runs the shuffle stages beneath it as jobs, and the next
+            # iteration's shuffle materializes the rest
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
@@ -466,7 +561,7 @@ def shortest_paths(
     relation + one min-combine groupBy (map-side partial min), both
     sized by the reached frontier's edge boundary; ``localCheckpoint``
     truncates lineage; the convergence probe reuses the CC signature
-    trick (count + order-free hash sum — one job per round)."""
+    trick (count + order-free hash sum — one probe per round)."""
     w = F.col(weight_col).cast("bigint")
     e = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b"), w.alias("w")

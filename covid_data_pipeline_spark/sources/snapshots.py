@@ -14,6 +14,7 @@ per-version manifests — with no table format dependency:
       data/<batch-uuid>/_schema.json              (the batch's file schema)
       _snapshots/v<N>.json                        (manifest: file list)
       _snapshots/_current                         (current version number)
+      _snapshots/_current.lock                    (serializes its updates)
 
 A commit writes a new batch dir, then a manifest referencing the alive
 files — O(new data + |manifest|), never a table rewrite. Readers resolve
@@ -27,6 +28,7 @@ max_active_runs=1 Airflow cursor); the manifest write is atomic
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import json
 import os
 import shutil
@@ -167,30 +169,27 @@ class SnapshotWarehouse:
     def _advance_current(snap_dir: str, version: int) -> None:
         """Monotonically advance _current to at least ``version``.
 
-        read-then-replace is not atomic, so two concurrent advancers
-        (committers of v5 and v6) can land their replaces out of order
-        and briefly leave _current pointing at the OLDER version — a
-        non-monotonic read for snapshot readers. Re-check after the
-        replace and retry while the on-disk value is still behind the
-        target (bounded: each retry only races a finite set of in-
-        flight advancers, and any interleaving that writes >= version
-        terminates the loop)."""
+        Read-compare-replace is not atomic on its own: the committer of
+        v6 can read 5, the committer of v7 write 7 and return, and the
+        v6 replace then land last, leaving _current behind a claimed
+        version for good (seen as 6 against 7 in
+        test_intra_process_commit_race_never_tears_manifest). An
+        exclusive ``flock`` on ``_current.lock`` makes the three steps
+        one; each ``open`` is its own lock holder, so it excludes
+        threads of one process as well as other processes."""
         cur_path = os.path.join(snap_dir, "_current")
-
-        def on_disk() -> int:
+        with open(os.path.join(snap_dir, "_current.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
             try:
                 with open(cur_path) as f:
-                    return int(f.read().strip() or 0)
+                    on_disk = int(f.read().strip() or 0)
             except (FileNotFoundError, ValueError):
-                return 0
-
-        for _ in range(64):  # bounded; 1 iteration absent a race
-            if on_disk() >= version:
-                return
-            cur_tmp = os.path.join(snap_dir, f"._current.{uuid.uuid4().hex}.tmp")
-            with open(cur_tmp, "w") as f:
-                f.write(str(version))
-            os.replace(cur_tmp, cur_path)
+                on_disk = 0
+            if on_disk < version:
+                cur_tmp = os.path.join(snap_dir, f"._current.{uuid.uuid4().hex}.tmp")
+                with open(cur_tmp, "w") as f:
+                    f.write(str(version))
+                os.replace(cur_tmp, cur_path)
 
     def _write_batch(
         self,

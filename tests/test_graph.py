@@ -6,6 +6,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from covid_data_pipeline_spark.observe import spark_jobs
+from covid_data_pipeline_spark.operators import graph
 from covid_data_pipeline_spark.operators.graph import (
     connected_components,
     largest_components,
@@ -41,12 +43,18 @@ def test_singletons_via_nodes_param(spark):
     assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 3, 5: 5}
 
 
-def test_long_cycle_converges_within_log_rounds(spark):
+def test_long_cycle_converges_within_log_rounds(spark, monkeypatch):
     # 64-node ring: diameter 32, but star rounds need only ~log2(64).
+    # The finish constant is 0 so that the star rounds label the ring.
+    monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", 0)
     n = 64
     ring = [(i, (i + 1) % n) for i in range(n)]
-    got = _labels(connected_components(_edges(spark, ring), max_iter=14))
+    stats: dict = {}
+    got = _labels(
+        connected_components(_edges(spark, ring), max_iter=14, stats=stats)
+    )
     assert got == {i: 0 for i in range(n)}
+    assert 1 <= stats["rounds"] <= 14
 
 
 @pytest.mark.slow  # ~16s (r11 fast tier)
@@ -56,6 +64,18 @@ def test_labels_stable_under_partitioning(spark):
     a = _labels(connected_components(e))
     b = _labels(connected_components(e.repartition(7)))
     assert a == b
+
+
+def test_small_graph_job_budget(spark):
+    """A small graph is labelled by the driver finish: building CC over
+    a checkpointed 300-edge graph starts at most 2 Spark jobs (with the
+    constant at 0, the star rounds, their probes and the exceptAll
+    confirmation start 20)."""
+    e = _edges(spark, [(i, (i * 7 + 3) % 200) for i in range(300)])
+    e = e.repartition(4).localCheckpoint()
+    comps, jobs = spark_jobs(spark, lambda: connected_components(e))
+    assert jobs <= 2
+    assert comps.count() == 300
 
 
 def test_largest_components_head(spark):
