@@ -539,16 +539,11 @@ def cluster_aware_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination audit's first fix. One fingerprint window + the
     standard Knuth split; composes with `group_aware_split` (domain
     level) and row-level `hash_split` as the leakage-guard ladder."""
-    from covid_data_pipeline_spark.functions.text import normalized_text
+    from covid_data_pipeline_spark.operators.dedup import text_fingerprint
     from covid_data_pipeline_spark.operators.sampling import knuth_hash
 
     docs = table(spark, sf_dir, "documents")
-    keyed = docs.withColumn(
-        "__fp",
-        F.coalesce(
-            F.md5(normalized_text(F.col("text"))), F.lit("__NULL_TEXT__")
-        ),
-    )
+    keyed = docs.withColumn("__fp", text_fingerprint("text"))
     w = Window.partitionBy("__fp")
     rep = keyed.withColumn("cluster_rep", F.min("doc_id").over(w))
     pct = knuth_hash("cluster_rep") % 100

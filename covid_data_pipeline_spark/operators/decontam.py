@@ -27,13 +27,10 @@ from covid_data_pipeline_spark.functions.text import word_shingles
 __all__ = ["contaminated_ids", "decontaminate"]
 
 
-def _gram_keys(
-    df: DataFrame, text_col: str, ngram: int, hash_grams: bool
-) -> DataFrame:
+def _gram_keys(df: DataFrame, text_col: str, ngram: int) -> DataFrame:
     g = F.explode(word_shingles(text_col, k=ngram)).alias("_gram")
     out = df.select(*df.columns, g)
-    key = F.xxhash64("_gram") if hash_grams else F.col("_gram")
-    return out.select(*df.columns, key.alias("_gram_key"))
+    return out.select(*df.columns, F.xxhash64("_gram").alias("_gram_key"))
 
 
 def contaminated_ids(
@@ -42,20 +39,17 @@ def contaminated_ids(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 8,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Distinct ``id_col`` of corpus docs sharing ≥1 word n-gram with the
     benchmark. Documents shorter than ``ngram`` tokens fall back to a
     single whole-document gram (word_shingles semantics), so short exact
     copies are still caught."""
     bench = (
-        _gram_keys(benchmark.select(text_col), text_col, ngram, hash_grams)
+        _gram_keys(benchmark.select(text_col), text_col, ngram)
         .select("_gram_key")
         .distinct()
     )
-    corpus_grams = _gram_keys(
-        corpus.select(id_col, text_col), text_col, ngram, hash_grams
-    )
+    corpus_grams = _gram_keys(corpus.select(id_col, text_col), text_col, ngram)
     return (
         # bcast: model eval-suite gram keys (benchmarks are bounded by contract)
         corpus_grams.join(F.broadcast(bench), "_gram_key", "left_semi")
@@ -70,8 +64,7 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     ngram: int = 8,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Corpus minus contaminated docs (left anti on the id)."""
-    dirty = contaminated_ids(corpus, benchmark, text_col, id_col, ngram, hash_grams)
+    dirty = contaminated_ids(corpus, benchmark, text_col, id_col, ngram)
     return corpus.join(dirty, id_col, "left_anti")

@@ -212,7 +212,6 @@ def connected_components(
     dst: str = "dst",
     nodes: DataFrame | None = None,
     max_iter: int = 25,
-    pre_contract: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Label every node with its component's minimum node id.
@@ -226,10 +225,6 @@ def connected_components(
         output as their own singleton component. Without it the result
         covers only nodes incident to a real edge.
     max_iter : safety bound; convergence needs ~2·log2(n) rounds.
-    pre_contract : run :func:`_local_contract` (per-partition union-find)
-        before the star rounds — same labels, fewer rounds (3x measured
-        at 1M nodes). Disable for partitions too large to union-find in
-        executor memory or for exotic id types pandas can't round-trip.
     stats : optional dict; on return carries ``{"rounds": N}`` — the
         number of star rounds executed (convergence probe included); 0
         when the input is already small enough to finish on the driver.
@@ -246,7 +241,9 @@ def connected_components(
     ``T + 1`` rows per partition into one task); later checks reuse the
     count of the round's convergence probe and add no job. A small
     graph therefore never runs the pre-contraction, the star rounds or
-    the ``exceptAll`` confirmation.
+    the ``exceptAll`` confirmation. A larger one is first contracted by
+    :func:`_local_contract` (per-partition union-find: same labels,
+    fewer rounds, 3x measured at 1M nodes), then runs the star rounds.
 
     Returns ``(node, component)``. Deterministic: the label is the
     component min, independent of partitioning or iteration order.
@@ -287,8 +284,7 @@ def connected_components(
     head = e.limit(_LOCAL_FINISH_EDGES + 1).toArrow()
     small = head.num_rows <= _LOCAL_FINISH_EDGES
     if not small:
-        if pre_contract:
-            e = _local_contract(e).localCheckpoint(eager=False)
+        e = _local_contract(e).localCheckpoint(eager=False)
         sig = _sig(e)
         small = sig[0] <= _LOCAL_FINISH_EDGES
         while not small and rounds < max_iter:

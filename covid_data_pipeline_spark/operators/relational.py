@@ -38,9 +38,8 @@ def dim_join(
     dim: DataFrame,
     on: Sequence[str] | Column,
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Fact↔dimension equi-join with the dim broadcast by default.
+    """Fact↔dimension equi-join with the dim broadcast.
 
     Covers J1 (composite-key left join, reference process_covid_dds.py:60-64)
     and J2/J3 (inner fact↔dim, process_covid_data_mart.py:61 and the four
@@ -48,9 +47,8 @@ def dim_join(
     the fact-side shuffle entirely — the single most important join choice
     at 100 TB fact scale.
     """
-    # bcast: delta caller dim contract (broadcast_dim flag; size_gated_broadcast for unbounded dims)
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    # bcast: delta caller dim contract (dims are small; size_gated_broadcast for unbounded dims)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def anti_join(

@@ -426,7 +426,6 @@ def cosine_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized_assign: bool = True,
 ) -> DataFrame:
     """Approximate top-k via IVF: corpus rows are scanned only in the
     ``nprobe`` cells nearest each query — candidate generation is an
@@ -435,35 +434,25 @@ def cosine_topk_ivf(
     Pass precomputed ``centroids`` to amortize training across queries
     (at warehouse scale: train once, store the cell assignment as a
     partition column, and the probe join becomes partition pruning).
-    Corpus assignment defaults to the Arrow/BLAS twin
-    (:func:`with_ivf_cell_np`) — the expression form embeds
-    centroids × dim literals and its codegen cost grows with the
-    quantizer; the matmul path is flat. Both produce identical cells.
+    Corpus cells and query probes are assigned by the Arrow/BLAS maps
+    (:func:`with_ivf_cell_np`, :func:`with_probe_cells_np`) — the
+    expression form (:func:`with_ivf_cell`, kept as the tests'
+    reference) embeds centroids × dim literals and its codegen cost
+    grows with the quantizer; the matmul path is flat. Both produce
+    identical cells.
     """
     from covid_data_pipeline_spark.operators.windows import top_k_per_group
 
     if centroids is None:
         centroids = train_centroids(corpus, n_centroids, vec_col=vec_col)
-    assign = with_ivf_cell_np if vectorized_assign else with_ivf_cell
-    c = assign(corpus, centroids, vec_col, "cid")
-    q_src = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    if vectorized_assign:
-        q = with_probe_cells_np(q_src, centroids, nprobe, "__qvec", "cid")
-    else:
-        scored_cells = F.array(
-            *[
-                F.struct((-s).alias("d"), F.lit(i).alias("c"))
-                for i, s in enumerate(_centroid_scores(F.col("__qvec"), centroids))
-            ]
-        )
-        q = q_src.withColumn(
-            "cid",
-            F.explode(
-                F.transform(
-                    F.slice(F.array_sort(scored_cells), 1, nprobe), lambda s: s["c"]
-                )
-            ),
-        )
+    c = with_ivf_cell_np(corpus, centroids, vec_col, "cid")
+    q = with_probe_cells_np(
+        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")),
+        centroids,
+        nprobe,
+        "__qvec",
+        "cid",
+    )
     scored = (
         # bcast: delta query batch (probed)
         c.join(F.broadcast(q), on="cid")
@@ -562,7 +551,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = 10_000,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold), candidates restricted to same LSH bucket. The embedding
@@ -576,18 +564,16 @@ def embedding_neardup_pairs(
     definition a constant-embedding cluster better handled by exact
     dedup on the vector hash than by pair enumeration.
 
-    ``use_arrow`` (default) scores each bucket's pairs in ONE cogrouped
+    Integral id columns score each bucket's pairs in ONE cogrouped
     numpy task (:func:`_cogroup_neardup_scores`) instead of one
     interpreted HOF cosine per joined pair — bit-identical (same
     fold/op order; exact-set equality asserted in pytest, same DuckDB
     oracle) at a fraction of the CPU. The cogrouped scorer emits a
     fixed ``long`` id schema, so non-integral id columns (string /
-    decimal ids) are routed to the HOF path automatically — same
-    result, no silent miscast."""
+    decimal ids) take the HOF path — same result, no silent
+    miscast."""
     from pyspark.sql import Window
 
-    if use_arrow and not _is_integral(df, id_col):
-        use_arrow = False
     b = with_lsh_bucket(df, dim, num_planes, vec_col, "bucket")
     if max_bucket_size is not None:
         w = Window.partitionBy("bucket")
@@ -596,7 +582,7 @@ def embedding_neardup_pairs(
             .filter(F.col("__bsz") <= max_bucket_size)
             .drop("__bsz")
         )
-    if use_arrow:
+    if _is_integral(df, id_col):
         return _cogroup_neardup_scores(
             b.select("bucket", F.col(id_col).alias("__id"),
                      _as_double(F.col(vec_col)).alias("__v")),
@@ -821,7 +807,6 @@ def knn_graph_lsh(
     multiprobe_bits: int = 1,
     max_bucket_size: int | None = 10_000,
     label_col: str | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Approximate kNN graph — the scale path for kNN-graph consumers
     (SemDeDup-style semantic dedup, graph clustering, diversity
@@ -845,20 +830,18 @@ def knn_graph_lsh(
     better served by exact dedup). Recall vs the exact graph is asserted
     in pytest, tunable via num_planes × multiprobe_bits.
 
-    ``use_arrow`` (default) scores candidates through the cogrouped
-    numpy scorer (:func:`_cogroup_bucket_scores`) — bit-identical to
-    the HOF fold (exact-set equality asserted in pytest; both paths
-    hash-match the same DuckDB oracle) at ~10x less CPU: the dominant
-    stress-scale cost was one interpreted fold per candidate pair.
-    Like :func:`embedding_neardup_pairs`, non-integral id columns fall
-    back to the HOF path (the cogrouped scorer's output schema is
+    Integral id columns are scored through the cogrouped numpy scorer
+    (:func:`_cogroup_bucket_scores`) — bit-identical to the HOF fold
+    (exact-set equality asserted in pytest; both paths hash-match the
+    same DuckDB oracle) at ~10x less CPU: the dominant stress-scale
+    cost was one interpreted fold per candidate pair. Like
+    :func:`embedding_neardup_pairs`, non-integral id columns take the
+    HOF path (the cogrouped scorer's output schema is
     ``long``-typed)."""
     from pyspark.sql import Window
 
     from covid_data_pipeline_spark.operators.windows import top_k_per_group
 
-    if use_arrow and not _is_integral(df, id_col):
-        use_arrow = False
     b = with_lsh_bucket(df, dim, num_planes, vec_col, "bucket")
     if max_bucket_size is not None:
         w = Window.partitionBy("bucket")
@@ -912,7 +895,7 @@ def knn_graph_lsh(
     # No pair dedup needed: pair (a,b) can only collide through the ONE
     # probe mask equal to bucket(a) XOR bucket(b), so candidates are
     # already unique per (src, nbr).
-    if use_arrow:
+    if _is_integral(df, id_col):
         scored = _cogroup_bucket_scores(l, r, k, with_labels=label_col is not None)
     else:
         scored = l.join(r, on="bucket").filter(

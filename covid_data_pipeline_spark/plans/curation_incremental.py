@@ -39,16 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from covid_data_pipeline_spark.functions.text import (
-    bpe_token_count,
-    normalized_text,
-    quality_score,
-)
+from covid_data_pipeline_spark.functions.text import bpe_token_count, quality_score
 from covid_data_pipeline_spark.operators.decontam import contaminated_ids
 from covid_data_pipeline_spark.operators.dedup import (
     incremental_lsh_pairs,
     jaccard_verify,
     lsh_candidate_pairs,
+    text_fingerprint,
     with_minhash,
 )
 from covid_data_pipeline_spark.operators.graph import connected_components
@@ -184,10 +181,7 @@ class IncrementalCurator:
         )
 
         # 2. exact dedup — within the delta, then against the fps state
-        keyed = dq.withColumn(
-            "__fp",
-            F.coalesce(F.md5(normalized_text(F.col(t))), F.lit("__NULL_TEXT__")),
-        )
+        keyed = dq.withColumn("__fp", text_fingerprint(t))
         reps = keyed.groupBy("__fp").agg(F.min(F.col(i)).alias(i))
         fps_state = self._state(self.t_fps)
         if fps_state is not None:

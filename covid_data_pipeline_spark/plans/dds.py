@@ -57,8 +57,7 @@ def build_fact_day(ods_day: DataFrame, dim: DataFrame) -> DataFrame:
         dim,
         on=(enriched.country_region == dim.country_name)
         & (enriched.report_year == dim.population_year),
-        how="left",
-        broadcast_dim=True,  # dim is ~|countries|×|years| rows — tiny
+        how="left",  # dim is ~|countries|×|years| rows — tiny, broadcast
     )
     return joined.select(*[F.col(c) for c in FACT_COLUMNS])
 

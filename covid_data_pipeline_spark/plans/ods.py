@@ -54,17 +54,18 @@ def build_ods_day(raw_df: DataFrame, report_date: str) -> DataFrame:
 
 
 def process_ods(spark: SparkSession, wh: Warehouse, report_date: str) -> int:
-    """ODS stage: read raw (pruned to the day's ingest_date partition when
-    present), roll up, dynamic-partition-overwrite ods.daily_country_stats.
+    """ODS stage: read raw (pruned to the day's ingest_date partition),
+    roll up, dynamic-partition-overwrite ods.daily_country_stats.
     Returns the rows written; 0 when the day has no raw rows (reference's
     skip guard, process_covid_ods.py:37-40). The count is an Observation
     on the write itself: an empty day's partitioned write leaves no data
     files, and the count costs no extra Spark job."""
-    raw_df = wh.read(S.RAW_TABLE)
-    if "ingest_date" in raw_df.columns:
-        # Partition-pruned read — the engine's fix for the reference's
-        # full-raw-scan-per-day wart (SURVEY.md §4).
-        raw_df = raw_df.filter(F.col("ingest_date") == F.lit(report_date).cast("date"))
+    # Partition-pruned read (``process_raw`` partitions raw by
+    # ingest_date) — the engine's fix for the reference's
+    # full-raw-scan-per-day wart (SURVEY.md §4).
+    raw_df = wh.read(S.RAW_TABLE).filter(
+        F.col("ingest_date") == F.lit(report_date).cast("date")
+    )
     obs = Observation()
     ods_df = build_ods_day(raw_df, report_date).observe(
         obs, F.count(F.lit(1)).alias("rows")

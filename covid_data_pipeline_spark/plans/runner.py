@@ -52,10 +52,10 @@ def run_day(
     wh: Warehouse,
     report_date: str,
     csv_path: str | None = None,
-    with_alerts: bool = True,
 ) -> DayResult:
-    """Process one simulated day end-to-end. ``csv_path=None`` skips the
-    landing step (raw already contains the day, e.g. on a re-run)."""
+    """Process one simulated day end-to-end, ending with its alerts.
+    ``csv_path=None`` skips the landing step (raw already contains the
+    day, e.g. on a re-run)."""
     result = DayResult(report_date=report_date)
     rows, stages = result.rows, result.stages
     if csv_path is not None:
@@ -68,6 +68,5 @@ def run_day(
         stages["dds"] = rows["fact"] > 0
         rows["mart"] = process_mart(spark, wh, report_date)
         stages["mart"] = rows["mart"] > 0
-        if with_alerts:
-            result.new_alerts = run_all_alerts(spark, wh, report_date)
+        result.new_alerts = run_all_alerts(spark, wh, report_date)
     return result

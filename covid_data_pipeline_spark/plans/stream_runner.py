@@ -34,10 +34,9 @@ def stream_medallion(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    with_alerts: bool = False,
 ) -> StreamingQuery:
-    """Drive ods→dds→mart (and optionally the alert queries) from a
-    stream over ``raw.daily_reports``. Population must be bootstrapped
+    """Drive ods→dds→mart→alerts from a stream over
+    ``raw.daily_reports``, the same chain as ``run_day``. Population must be bootstrapped
     first (``bootstrap_population``). Alerts stay idempotent under
     micro-batch replay via their anti-join dedup."""
     raw_schema = wh.read(S.RAW_TABLE).schema
@@ -75,9 +74,8 @@ def stream_medallion(
             )
             for d in fact_dates:
                 process_mart(spark, wh, d)
-        if with_alerts:
-            for d in new_dates:
-                run_all_alerts(spark, wh, d)
+        for d in new_dates:
+            run_all_alerts(spark, wh, d)
 
     writer = (
         stream.writeStream.foreachBatch(_micro_batch)

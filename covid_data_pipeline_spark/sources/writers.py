@@ -14,7 +14,8 @@ semantics over plain partitioned Parquet so the engine runs anywhere
                           the partitions present in the incoming frame —
                           idempotent day re-runs — whatever the session
                           conf says; a missing table is created)
-  replace               → mode("overwrite") of the whole table
+  replace               → mode("overwrite") of the whole table, with
+                          partitionOverwriteMode=static on the write
 
 Each table directory also holds ``_schema.json``: the schema of its data
 files, saved by the write that made them. Reads hand it to Spark, so a
@@ -223,9 +224,11 @@ class Warehouse:
         dim_location wholesale every run, process_covid_dds.py:41-44)."""
         path = self.path(table)
         remove_schema(path)
-        self._writer(df, partition_by, sort_within_partitions_by).mode(
-            "overwrite"
-        ).save(path)
+        # Static mode on the write itself: under a session set to dynamic
+        # (session.get_spark sets it), a partitioned overwrite would keep
+        # every partition absent from ``df``.
+        writer = self._writer(df, partition_by, sort_within_partitions_by)
+        writer.option("partitionOverwriteMode", "static").mode("overwrite").save(path)
         if self.exists(table):
             save_schema(path, data_schema(df.schema, partition_by))
 

@@ -46,13 +46,36 @@ def test_short_docs_fall_back_to_whole_gram(spark):
     assert dirty == {1}  # doc 2's whole-gram differs — no overlap
 
 
-def test_hashed_and_raw_gram_paths_agree(spark):
-    rows = [(i, f"document {i} body {BENCH_SENT if i % 3 == 0 else 'clean text here'} end") for i in range(12)]
-    corpus = _docs(spark, rows)
-    bench = _docs(spark, [(100, BENCH_SENT)])
-    hashed = {r["doc_id"] for r in contaminated_ids(corpus, bench, hash_grams=True).collect()}
-    raw = {r["doc_id"] for r in contaminated_ids(corpus, bench, hash_grams=False).collect()}
-    assert hashed == raw == {0, 3, 6, 9}
+def _py_grams(text: str, k: int) -> set[str]:
+    """word_shingles on single-space lowercase text: the distinct
+    k-token grams, or the whole text when it has fewer than k tokens."""
+    toks = text.split(" ")
+    if len(toks) < k:
+        return {text}
+    return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+
+
+def test_hashed_grams_match_python_reference(spark):
+    """The hashed-gram semi-join flags exactly the docs whose raw string
+    grams meet the benchmark's: an overlap of k tokens is caught, one of
+    k - 1 is not, and a short doc matches only a short benchmark doc."""
+    words = BENCH_SENT.split(" ")
+    texts = {
+        i: f"document {i} body {BENCH_SENT if i % 3 == 0 else 'clean text here'} end"
+        for i in range(12)
+    }
+    texts[20] = "prefix " + " ".join(words[2:]) + " suffix"  # last 8 tokens
+    texts[21] = "prefix " + " ".join(words[3:]) + " suffix"  # last 7 tokens
+    texts[22] = "tiny eval answer"
+    texts[23] = "tiny eval"
+    bench_texts = [BENCH_SENT, "tiny eval answer"]
+    k = 8
+    bench_grams = set().union(*(_py_grams(t, k) for t in bench_texts))
+    want = {i for i, t in texts.items() if _py_grams(t, k) & bench_grams}
+    corpus = _docs(spark, sorted(texts.items()))
+    bench = _docs(spark, list(enumerate(bench_texts, start=100)))
+    got = {r["doc_id"] for r in contaminated_ids(corpus, bench, ngram=k).collect()}
+    assert got == want == {0, 3, 6, 9, 20, 22}
 
 
 def test_scrub_pii_redacts_emails_and_ids(spark):

@@ -498,7 +498,19 @@ def test_knn_graph_lsh_recall_vs_exact(spark, sf_dir):
     assert all(s != n for s, n in ap)
 
 
-def test_knn_graph_lsh_arrow_equals_hof(spark, sf_dir):
+def _arrow_and_hof(monkeypatch, build):
+    """``build()``'s rows on the Arrow path (integral ids), then on the
+    HOF path (``_is_integral`` patched to say no)."""
+    from covid_data_pipeline_spark.operators import similarity
+
+    arrow = sorted(map(tuple, build().collect()))
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_is_integral", lambda df, col: False)
+        hof = sorted(map(tuple, build().collect()))
+    return arrow, hof
+
+
+def test_knn_graph_lsh_arrow_equals_hof(spark, sf_dir, monkeypatch):
     """The cogrouped numpy scorer must be BIT-identical to the HOF fold
     (same dim-sequential accumulation order, rounding left in the JVM,
     margin prune a strict superset of the rounded top-k) — in both the
@@ -511,20 +523,43 @@ def test_knn_graph_lsh_arrow_equals_hof(spark, sf_dir):
         {"label_col": "label"},
         {"num_planes": 4, "multiprobe_bits": 1},
     ):
-        hof = sorted(
-            map(tuple, knn_graph_lsh(
-                e, dim=64, k=5, use_arrow=False, **kwargs
-            ).collect())
-        )
-        arrow = sorted(
-            map(tuple, knn_graph_lsh(
-                e, dim=64, k=5, use_arrow=True, **kwargs
-            ).collect())
+        arrow, hof = _arrow_and_hof(
+            monkeypatch, lambda: knn_graph_lsh(e, dim=64, k=5, **kwargs)
         )
         assert hof == arrow and len(hof) > 0, kwargs
 
 
-def test_embedding_neardup_arrow_equals_hof(spark, sf_dir):
+def test_string_ids_take_the_hof_path(spark, sf_dir, monkeypatch):
+    """Non-integral ids never reach the cogrouped scorers (their output
+    schema is ``long``): zero-padded string ids sort like the integers,
+    so both operators return the integral-id result, relabelled."""
+    from covid_data_pipeline_spark.operators import similarity
+
+    e = table(spark, sf_dir, "embeddings")
+    s = e.withColumn("vec_id", F.format_string("%08d", "vec_id"))
+
+    def pad(rows):
+        return sorted((f"{a:08d}", f"{b:08d}", sim) for a, b, sim in rows)
+
+    want_knn = pad(similarity.knn_graph_lsh(e, dim=64, k=5).collect())
+    want_dup = pad(
+        similarity.embedding_neardup_pairs(e, dim=64, threshold=0.3).collect()
+    )
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("string ids reached a cogrouped scorer")
+
+    monkeypatch.setattr(similarity, "_cogroup_bucket_scores", refuse)
+    monkeypatch.setattr(similarity, "_cogroup_neardup_scores", refuse)
+    got_knn = sorted(map(tuple, similarity.knn_graph_lsh(s, dim=64, k=5).collect()))
+    got_dup = sorted(
+        map(tuple, similarity.embedding_neardup_pairs(s, dim=64, threshold=0.3).collect())
+    )
+    assert got_knn == want_knn and len(want_knn) > 0
+    assert got_dup == want_dup and len(want_dup) > 0
+
+
+def test_embedding_neardup_arrow_equals_hof(spark, sf_dir, monkeypatch):
     """The cogrouped within-bucket pair scorer must be BIT-identical to
     the HOF cosine join (same dot/norm fold order, division op order,
     ROUND + threshold in the JVM). Low threshold so real pairs exist."""
@@ -533,15 +568,8 @@ def test_embedding_neardup_arrow_equals_hof(spark, sf_dir):
     )
 
     e = table(spark, sf_dir, "embeddings")
-    hof = sorted(
-        map(tuple, embedding_neardup_pairs(
-            e, dim=64, threshold=0.3, use_arrow=False
-        ).collect())
-    )
-    arrow = sorted(
-        map(tuple, embedding_neardup_pairs(
-            e, dim=64, threshold=0.3, use_arrow=True
-        ).collect())
+    arrow, hof = _arrow_and_hof(
+        monkeypatch, lambda: embedding_neardup_pairs(e, dim=64, threshold=0.3)
     )
     assert hof == arrow and len(hof) > 0
 
@@ -567,7 +595,7 @@ def test_knn_graph_lsh_caps_degenerate_bucket(spark):
     assert uncapped.count() == 300 * 5
 
 
-def test_cogroup_scorer_chunked_path_equals_hof(spark):
+def test_cogroup_scorer_chunked_path_equals_hof(spark, monkeypatch):
     """Force the Arrow scorer's 1024-row chunk boundary (sf0.01 buckets
     are ~40 rows, so oracle parity alone never exercises chunking): a
     2.5k-vector corpus collapsed into few buckets must still equal the
@@ -583,15 +611,8 @@ def test_cogroup_scorer_chunked_path_equals_hof(spark):
         for i in range(2500)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    hof = sorted(
-        map(tuple, knn_graph_lsh(
-            df, dim=dim, k=5, num_planes=4, use_arrow=False
-        ).collect())
-    )
-    arrow = sorted(
-        map(tuple, knn_graph_lsh(
-            df, dim=dim, k=5, num_planes=4, use_arrow=True
-        ).collect())
+    arrow, hof = _arrow_and_hof(
+        monkeypatch, lambda: knn_graph_lsh(df, dim=dim, k=5, num_planes=4)
     )
     assert hof == arrow and len(hof) == 2500 * 5
 

@@ -77,28 +77,33 @@ def test_cc_matches_reference_union_find(spark, monkeypatch, finish_edges, edges
 @_props
 @given(edges=_edges, parts=st.sampled_from([1, 3, 7]))
 def test_pre_contraction_is_label_invisible(spark, monkeypatch, edges, parts):
-    """pre_contract=True/False must produce identical labels on any
-    graph under any partitioning (the contraction is union-preserving,
-    so this is the invariant that makes it safe to default on). The
-    constant is 0 so that both calls run the rounds."""
+    """Labels with and without the pre-contraction (``_local_contract``
+    patched to the identity) must be identical on any graph under any
+    partitioning (the contraction is union-preserving, so this is the
+    invariant that makes it safe to always run). The constant is 0 so
+    that both calls run the rounds."""
     monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", 0)
     df = spark.createDataFrame(edges, "src long, dst long").repartition(parts)
-    with_pc = _labels(connected_components(df, pre_contract=True))
-    without_pc = _labels(connected_components(df, pre_contract=False))
+    with_pc = _labels(connected_components(df))
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_local_contract", lambda e: e)
+        without_pc = _labels(connected_components(df))
     assert with_pc == without_pc
 
 
 def test_finish_crossed_mid_loop(spark, monkeypatch):
     """The complete graph on 20 nodes (190 edges) shrinks to a 19-edge
     star after one round, so a constant of 50 finishes after round 1
-    where the rounds alone need a second round to confirm convergence."""
+    where the rounds alone need a second round to confirm convergence.
+    The pre-contraction is the identity so that the rounds see K20."""
+    monkeypatch.setattr(graph, "_local_contract", lambda e: e)
     k20 = [(a, b) for a in range(20) for b in range(a + 1, 20)]
     df = spark.createDataFrame(k20, "src long, dst long")
     got = {}
     for finish_edges in (0, 50):
         monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", finish_edges)
         stats: dict = {}
-        labels = _labels(connected_components(df, pre_contract=False, stats=stats))
+        labels = _labels(connected_components(df, stats=stats))
         got[finish_edges] = (stats["rounds"], labels)
     everyone_zero = {n: 0 for n in range(20)}
     assert got[0] == (2, everyone_zero)

@@ -62,8 +62,9 @@ def test_partition_pruning_survives_snapshot_read(spark, sw):
 @pytest.mark.slow  # over 3 s at 4 CPUs
 def test_pipeline_runs_on_snapshot_backend(spark, tmp_path):
     """The covid medallion pipeline runs unchanged on SnapshotWarehouse;
-    the mart matches the plain-Warehouse run, and a re-run of the final
-    day creates a new snapshot whose predecessor is still readable."""
+    the mart and the alerts match the plain-Warehouse run, and a re-run
+    of the final day creates a new mart snapshot whose predecessor is
+    still readable and appends no alert row."""
     from covid_data_pipeline_spark.plans import schemas as S
     from covid_data_pipeline_spark.plans.runner import bootstrap_population, run_day
     from covid_data_pipeline_spark.sources.writers import Warehouse
@@ -78,18 +79,24 @@ def test_pipeline_runs_on_snapshot_backend(spark, tmp_path):
     for wh in (wh_p, wh_s):
         bootstrap_population(spark, wh, population_df(spark))
         for day in DAYS:
-            run_day(spark, wh, day, csv_path=paths[day], with_alerts=False)
+            run_day(spark, wh, day, csv_path=paths[day])
 
     cols = ["report_date", "country_name", "new_cases_today", "cases_per_100k"]
     got = sorted(map(tuple, wh_s.read(S.MART_TABLE).select(*cols).collect()))
     want = sorted(map(tuple, wh_p.read(S.MART_TABLE).select(*cols).collect()))
     assert got == want and len(want) > 0
+    acols = ["alert_date", "country", "alert_type"]
+    alerts = sorted(map(tuple, wh_s.read(S.ALERTS_TABLE).select(*acols).collect()))
+    want_alerts = sorted(map(tuple, wh_p.read(S.ALERTS_TABLE).select(*acols).collect()))
+    assert alerts == want_alerts and len(want_alerts) > 0
 
     # Idempotent re-run of the last day → same current rows, new version,
     # previous snapshot still readable (time travel across the re-run).
     v_before = wh_s.current_version(S.MART_TABLE)
-    run_day(spark, wh_s, DAYS[-1], csv_path=None, with_alerts=False)
+    rerun = run_day(spark, wh_s, DAYS[-1], csv_path=None)
     assert wh_s.current_version(S.MART_TABLE) > v_before
+    assert rerun.new_alerts == 0
+    assert wh_s.read(S.ALERTS_TABLE).count() == len(alerts)
     again = sorted(map(tuple, wh_s.read(S.MART_TABLE).select(*cols).collect()))
     assert again == want
     old = sorted(

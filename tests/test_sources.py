@@ -243,6 +243,27 @@ def test_overwrite_partitions_is_dynamic_under_static_session(spark, tmp_path):
         spark.conf.set(key, previous)
 
 
+def test_replace_is_full_under_dynamic_session(spark, tmp_path):
+    """The write carries its own static mode: under a session set to
+    dynamic, replacing a partitioned table drops every partition absent
+    from the new frame, and leaves the session conf as it was."""
+    from covid_data_pipeline_spark.sources.writers import Warehouse
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        wh = Warehouse(spark, str(tmp_path))
+        schema = "p int, v string"
+        wh.replace(spark.createDataFrame([(1, "x"), (2, "y")], schema), "l.t", ["p"])
+        wh.replace(spark.createDataFrame([(3, "x")], schema), "l.t", ["p"])
+        got = sorted(map(tuple, wh.read("l.t").select("p", "v").collect()))
+        assert got == [(3, "x")]
+        assert spark.conf.get(key) == "dynamic"
+    finally:
+        spark.conf.set(key, previous)
+
+
 def test_max_records_per_file_rolls_output_files(spark, tmp_path):
     from covid_data_pipeline_spark.sources.writers import Warehouse
 

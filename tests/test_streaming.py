@@ -239,7 +239,7 @@ def test_stream_medallion_equals_batch_pipeline(spark, tmp_path):
     wh_b = Warehouse(spark, str(tmp_path / "wh_batch"))
     bootstrap_population(spark, wh_b, population_df(spark))
     for day in DAYS:
-        run_day(spark, wh_b, day, csv_path=paths[day], with_alerts=True)
+        run_day(spark, wh_b, day, csv_path=paths[day])
 
     # Streaming run: raw landed up front, derived layers stream-driven.
     wh_s = Warehouse(spark, str(tmp_path / "wh_stream"))
@@ -251,7 +251,6 @@ def test_stream_medallion_equals_batch_pipeline(spark, tmp_path):
         wh_s,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=2,
-        with_alerts=True,
     )
     _drain(q)
 
