@@ -33,7 +33,7 @@ Layout:
   operators  — dataframe-level operators (relational, windows, dedup,
                similarity, multimodal)
   plans      — the covid medallion pipeline (raw/ods/dds/mart/alerts)
-  streaming  — Structured Streaming variants of the incremental layer
+  streaming  — event-time windows (batch, or watermarked on a stream)
   observe    — the Spark-job counter (job tags read back from the
                AppStatusStore)
 """

@@ -90,19 +90,11 @@ def clamped_delta(cur: Column | str, prev: Column | str | Column) -> Column:
 
     Negative day-over-day corrections in cumulative counters clamp to zero
     (reference process_covid_data_mart.py:70-78). NOTE the alert queries
-    deliberately do NOT clamp (SURVEY.md §7.3) — use ``raw_delta`` there.
+    deliberately do NOT clamp (SURVEY.md §7.3) — they use a plain ``cur - prev``.
     """
     c = F.col(cur) if isinstance(cur, str) else cur
     p = F.col(prev) if isinstance(prev, str) else prev
     return F.greatest(F.coalesce(c - p, F.lit(0)), F.lit(0))
-
-
-def raw_delta(cur: Column | str, prev: Column | str) -> Column:
-    """Unclamped delta ``cur - prev`` (NULL when either side is NULL) — the
-    alert-query policy (reference alert_case_spike.sql:28-46)."""
-    c = F.col(cur) if isinstance(cur, str) else cur
-    p = F.col(prev) if isinstance(prev, str) else prev
-    return c - p
 
 
 def per_100k(numerator: Column | str, population: Column | str) -> Column:

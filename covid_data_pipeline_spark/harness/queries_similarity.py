@@ -1207,9 +1207,9 @@ _PQ_BOOKS: dict[str, list] = {}
     bench=True,
 )
 def similarity_topk_pq_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Amortized PQ path: codebooks are trained once per corpus (the
-    warehouse persists them via save_ann_model; memoized per sf_dir
-    here exactly like the IVF pretrained twin), so the benched cost is
+    """Amortized PQ path: codebooks are trained once per corpus
+    (memoized per sf_dir here exactly like the IVF pretrained twin;
+    a serving deployment would persist them), so the benched cost is
     the steady state — encode + ADC scan + shortlist re-rank — split
     from the one-time training the cold ``similarity_topk_pq`` number
     includes. Same oracle as the cold path: memoization cannot change

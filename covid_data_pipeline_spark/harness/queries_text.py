@@ -675,10 +675,8 @@ def quality_classifier_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/classifier.py::logreg_lattice_scores`) — the same trick
     that made k-means oracle-able: the DuckDB oracle replays all 40
     gradient steps as unrolled MATERIALIZED CTEs and the emitted
-    logit_micro is exact BIGINT. The float L-BFGS path
-    (`train_quality_classifier`) remains for callers who want MLlib —
-    its separation/holdout behavior is pytest-proven in
-    tests/test_classifier.py."""
+    logit_micro is exact BIGINT. Separation and partitioning
+    independence are pytest-proven in tests/test_classifier.py."""
     from covid_data_pipeline_spark.operators.classifier import (
         logreg_lattice_scores,
     )

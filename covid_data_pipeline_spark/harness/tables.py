@@ -62,12 +62,3 @@ def dim_count(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every testdata table as a temp view so users can work in
-    pure SQL (`spark.sql(...)`) — the engine's interactive/Thrift surface
-    (SURVEY.md §3.3: the reference serves Superset through Trino/Thrift
-    over the same tables)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.operators.dedup import portable_hash31
 
-__all__ = ["bloom_build", "bloom_contains", "bloom_prefilter"]
+__all__ = ["bloom_build", "bloom_contains"]
 
 _BITS_PER_WORD = 63
 
@@ -118,22 +118,3 @@ def bloom_contains(
         mask = _mask_at(p % _BITS_PER_WORD)
         cond = cond & (word.bitwiseAND(mask) != 0)
     return cond
-
-
-def bloom_prefilter(
-    probe: DataFrame,
-    probe_key: str,
-    build: DataFrame,
-    build_key: str,
-    m_words: int = 8,
-    k: int = 3,
-    flag_col: str = "bloom_maybe",
-) -> DataFrame:
-    """Annotate ``probe`` with a ``flag_col`` boolean: key *might* be in
-    ``build`` (false ⇒ definitely not — callers drop those rows before
-    the exact join). Build cost: one aggregation over the build side;
-    probe cost: a map-only filter expression."""
-    words = bloom_build(build, build_key, m_words=m_words, k=k)
-    return probe.withColumn(
-        flag_col, bloom_contains(F.col(probe_key), words, k=k)
-    )

@@ -1,19 +1,11 @@
-"""Model-based document quality classification (MLlib logistic regression).
+"""Model-based document quality classification (logistic regression).
 
 The GPT-3/LLaMA-lineage curation step the heuristic text rows can't
 express: train a linear classifier to score "reference-like" quality
 (GPT-3 appendix A: LR over features, positives = curated corpus,
 negatives = raw crawl; CCNet and fastText variants do the same). The
-engine side is what matters here:
-
-- Features are the engine's existing codegen'd text signals (token
-  count, punctuation/stopword ratios, mean token length, repetition) —
-  a pure projection, no UDF, no shuffle.
-- Training is MLlib ``LogisticRegression`` (JVM L-BFGS over
-  ``treeAggregate`` — gradient passes scale out with executors; the
-  driver holds only the coefficient vector).
-- Scoring is ``model.transform`` — a broadcast of the coefficients and
-  a map-side projection; nothing shuffles at any corpus size.
+trainer here runs on an integer lattice (see below), so the registry's
+``quality_classifier_scores`` query replays bit-for-bit in DuckDB.
 
 In production the caller supplies labeled frames (positives = curated
 reference, negatives = crawl sample). :func:`corrupted_negatives`
@@ -29,45 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from covid_data_pipeline_spark.functions.text import (
-    STOPWORDS_EN,
-    let,
-    punct_ratio,
-    repetition_fraction,
-    stopword_ratio,
-    token_count,
-    tokens,
-)
-
-FEATURE_COLS = (
-    "f_log_tokens",
-    "f_punct_ratio",
-    "f_stopword_ratio",
-    "f_mean_tok_len",
-    "f_repetition",
-)
-
-
-def text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the classifier's feature columns — all built-in-function
-    projections (whole-stage codegen, null-safe via coalesce)."""
-    mean_len = let(
-        tokens(text_col),
-        lambda t: F.when(
-            F.size(t) > 0,
-            F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x)).cast("double")
-            / F.size(t),
-        ),
-    )
-    return (
-        df.withColumn("f_log_tokens", F.log1p(token_count(text_col)))
-        .withColumn("f_punct_ratio", F.coalesce(punct_ratio(text_col), F.lit(0.0)))
-        .withColumn(
-            "f_stopword_ratio", F.coalesce(stopword_ratio(text_col), F.lit(0.0))
-        )
-        .withColumn("f_mean_tok_len", F.coalesce(mean_len, F.lit(0.0)))
-        .withColumn("f_repetition", repetition_fraction(text_col))
-    )
+from covid_data_pipeline_spark.functions.text import STOPWORDS_EN, let, tokens
 
 
 def corrupted_negatives(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -79,69 +33,8 @@ def corrupted_negatives(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def train_quality_classifier(
-    positives: DataFrame,
-    negatives: DataFrame,
-    text_col: str = "text",
-    max_iter: int = 50,
-    reg_param: float = 0.01,
-):
-    """Fit LR on the feature projection of labeled frames. Returns the
-    fitted ``LogisticRegressionModel`` (coefficients only on the
-    driver — broadcastable to any cluster size)."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    labeled = text_features(
-        positives.select(text_col).withColumn("label", F.lit(1.0)).unionByName(
-            negatives.select(text_col).withColumn("label", F.lit(0.0))
-        ),
-        text_col,
-    )
-    assembled = VectorAssembler(
-        inputCols=list(FEATURE_COLS), outputCol="features"
-    ).transform(labeled)
-    lr = LogisticRegression(
-        maxIter=max_iter, regParam=reg_param, standardization=True
-    )
-    return lr.fit(assembled)
-
-
-def score_quality(
-    docs: DataFrame,
-    model,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id_col, quality_prob): P(reference-like). Map-side only —
-    feature projection + broadcast coefficient dot product."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.functions import vector_to_array
-
-    assembled = VectorAssembler(
-        inputCols=list(FEATURE_COLS), outputCol="features"
-    ).transform(text_features(docs, text_col))
-    return (
-        model.transform(assembled)
-        .withColumn("quality_prob", vector_to_array("probability")[1])
-        .select(id_col, F.round("quality_prob", 4).alias("quality_prob"))
-    )
-
-
-def quality_classifier_scores(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Self-supervised end-to-end: train against the corpus's corrupted
-    twins, score the corpus. One training pass (corpus + twins), one
-    scoring projection."""
-    model = train_quality_classifier(
-        docs, corrupted_negatives(docs, text_col), text_col
-    )
-    return score_quality(docs, model, text_col, id_col)
-
-
 # ---------------------------------------------------------------------------
-# Integer-lattice logistic regression (exact-replay twin of the MLlib path)
+# Integer-lattice logistic regression (exact-replay trainer)
 #
 # Same idea that made k-means oracle-able (operators/clustering.py): keep
 # every training-state transition on an integer lattice so the WHOLE

@@ -340,40 +340,6 @@ def kmeans_silhouette_oracle_sql(
     )
 
 
-def lattice_dist2(q_col: Column | str, coords: list[int]) -> "F.Column":
-    """Exact integer L2² from a micro-quantized vector column to one
-    centroid literal (array literal, not per-element lits — the
-    _centroid_scores lesson)."""
-    q = F.col(q_col) if isinstance(q_col, str) else q_col
-    return F.aggregate(
-        F.zip_with(q, F.lit(coords), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def nearest_centroid(
-    cents: list[tuple[int, list[int]]], q_col: str = "q"
-) -> "F.Column":
-    """struct(d, cid) of the nearest centroid — a PURE PROJECTION
-    (array_min over exact integer distances; struct order ties to the
-    smallest cid, identical to the groupBy struct-min in
-    :func:`_assign`). With driver-side centroids there is no reason to
-    pay the crossJoin+groupBy shuffle per assignment: this form keeps
-    cell assignment map-side (measured 3.4x on the benched IVF)."""
-    return F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    lattice_dist2(q_col, coords).alias("d"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, coords in cents
-            ]
-        )
-    )
-
-
 def lattice_assign_np(
     df: DataFrame,
     cents: list[tuple[int, list[int]]],
@@ -381,7 +347,7 @@ def lattice_assign_np(
     cid_col: str = "cid",
     nprobe: int = 1,
 ) -> DataFrame:
-    """Arrow/numpy twin of :func:`nearest_centroid` over a PRE-QUANTIZED
+    """Nearest-centroid assignment in Arrow/numpy over a PRE-QUANTIZED
     integer vector column (``q_col``, array<long> from
     :func:`quantize_vectors` — quantization stays Spark-side so no
     numpy float rounding semantics ever enter the trajectory). All

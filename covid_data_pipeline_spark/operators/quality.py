@@ -6,8 +6,9 @@ SURVEY.md §2.2 P7) into an engine facility.
 Row-level rules (not-null / range / set membership / custom predicate)
 compile to ``sum(violation)`` aggregates over one scan — no shuffle
 beyond the final 1-row agg, any number of rules. Dataset-level rules
-(uniqueness, referential integrity) need their own shapes (distinct
-count, anti-join) and run as separate small plans.
+(referential integrity, ``fk_audit``; functional dependencies,
+``fd_profile``) need their own shapes (anti-join, distinct count) and
+run as separate small plans.
 
 ``dq_report`` returns a DataFrame (rule, violations, total, pass_ratio)
 — pipeline-composable; ``check`` raises on violation for use as a gate.
@@ -76,27 +77,6 @@ def dq_report(df: DataFrame, rules: list[Rule]) -> DataFrame:
             .otherwise(F.lit(1.0)),
             6,
         ),
-    )
-
-
-def unique_violations(df: DataFrame, cols: list[str]) -> int:
-    """Dataset-level uniqueness: rows beyond the first per key."""
-    dup = df.groupBy(*cols).count().filter(F.col("count") > 1)
-    row = dup.agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("v")).collect()[0]
-    return int(row["v"])
-
-
-def fk_violations(df: DataFrame, col: str, ref: DataFrame, ref_col: str) -> int:
-    """Dataset-level referential integrity: non-null FK values with no
-    parent (anti-join count — the scalable form of NOT EXISTS)."""
-    return (
-        df.filter(F.col(col).isNotNull())
-        .join(
-            ref.select(F.col(ref_col).alias(col)).distinct(),
-            on=col,
-            how="left_anti",
-        )
-        .count()
     )
 
 
@@ -322,9 +302,8 @@ def fk_audit(
     FK edge ``(name, child, fk_col, parent, pk_col)``: how many child
     rows carry a non-null FK with no parent (orphans, the scalable
     anti-join form of NOT EXISTS), how many are null, and whether the
-    edge holds. The relation-returning sibling of :func:`fk_violations`
-    (which collects one scalar) — a schema's whole FK graph audits in
-    one DataFrame a contract gate or dashboard consumes.
+    edge holds. A schema's whole FK graph audits in one DataFrame a
+    contract gate or dashboard consumes.
 
     Per edge, ONE scan of the child (ADVICE r9 — the previous form
     scanned it twice: full/null counts plus a separate orphan

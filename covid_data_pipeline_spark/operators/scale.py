@@ -266,62 +266,6 @@ def skew_profile(
     )
 
 
-# Runtime bloom-filter join pruning (Catalyst InjectRuntimeFilter): when
-# a shuffle join's build side carries a selective filter, Spark can build
-# a bloom filter of the build-side join keys and push a MightContain
-# probe into the other side's SCAN — rows that cannot match die before
-# the shuffle. The 100 TB win: a fact-table shuffle shrinks by the dim
-# filter's selectivity without bucketing or broadcasting. The defaults
-# gate on a 10 GB application-side scan, so small-SF tests (and modest
-# tables) must lower the thresholds explicitly.
-BLOOM_JOIN_CONFS: dict[str, str] = {
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # create a filter for any build side up to 100 MB of plan stats
-    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
-    # apply it regardless of probe-side scan size (default gate: 10 GB)
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-}
-
-
-def with_bloom_join_confs(spark: SparkSession) -> dict[str, str]:
-    """Enable runtime bloom-filter join pruning on this session and
-    return the previous values (all are runtime-settable SQL confs) so
-    callers can restore them. Pair with a plan assertion on
-    ``bloom_filter_agg`` / ``might_contain`` — the rule silently
-    declines when a side is broadcastable or stats are missing."""
-    before = {
-        k: spark.conf.get(k, None) for k in BLOOM_JOIN_CONFS
-    }
-    for k, v in BLOOM_JOIN_CONFS.items():
-        spark.conf.set(k, v)
-    return before
-
-
-# Parquet footer-aggregate pushdown: MIN / MAX / COUNT answered from
-# row-group STATISTICS instead of scanning data pages — the V2 parquet
-# reader's PushedAggregation. At 100 TB a `SELECT max(ts) FROM events`
-# freshness probe or a partition-count audit becomes a metadata read
-# (KBs per file) instead of a full-column scan. Limits: no filters, no
-# group-by with unsupported types, and MIN/MAX decline on columns whose
-# footer stats are absent — Spark falls back to a normal scan, so the
-# confs are always safe to leave on for a maintenance session. The V1
-# reader ignores the feature, hence the empty useV1SourceList.
-FOOTER_AGG_CONFS: dict[str, str] = {
-    "spark.sql.sources.useV1SourceList": "",
-    "spark.sql.parquet.aggregatePushdown": "true",
-}
-
-
-def with_footer_agg_confs(spark: SparkSession) -> dict[str, str | None]:
-    """Enable footer-aggregate pushdown on this session; returns prior
-    values for restore (same contract as :func:`with_bloom_join_confs`).
-    Assert effectiveness via ``PushedAggregation`` in the BatchScan."""
-    before = {k: spark.conf.get(k, None) for k in FOOTER_AGG_CONFS}
-    for k, v in FOOTER_AGG_CONFS.items():
-        spark.conf.set(k, v)
-    return before
-
-
 def rendezvous_assign(
     df: DataFrame,
     id_col: str,

@@ -1702,38 +1702,6 @@ def pq_lattice_oracle_sql(
     return "".join(parts)
 
 
-def save_ann_model(path: str, model: dict) -> None:
-    """Persist an ANN model artifact (IVF centroids, PQ codebooks, LSH
-    seed/planes, standardization stats — any JSON-shaped dict of
-    lists/floats/ints) next to the warehouse tables it indexes.
-
-    The artifact is KILOBYTES (n_centroids × dim, or n_sub × n_codes ×
-    d_sub scalars) — the one part of an ANN index that legitimately
-    lives driver-side; the heavy part (codes / cell assignments) is a
-    regular table column. Atomic write (tmp + rename) so a crashed save
-    never leaves a half-written model for the next loader."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".__tmp"
-    with open(tmp, "w") as f:
-        json.dump(model, f)
-    os.replace(tmp, path)
-
-
-def load_ann_model(path: str) -> dict:
-    """Load a model artifact written by :func:`save_ann_model`. Feed
-    the pieces to the pretrained paths (``cosine_topk_ivf(centroids=…)``,
-    ``pq_encode(codebooks)``, ``standardize_embeddings(stats=…)``) so
-    query/encode runs — batch or streaming — skip training entirely and
-    reproduce the training run's outputs bit-identically."""
-    import json
-
-    with open(path) as f:
-        return json.load(f)
-
-
 def margin_mutual_pairs(
     edges: DataFrame,
     threshold_bp: int = 10_000,

@@ -455,8 +455,7 @@ def cusum_changepoints(
 
     Pass BOTH ``mu``/``sigma`` to monitor against a pre-calibrated
     reference regime (the production deployment: fit on history, watch
-    the live feed — and what :func:`streaming.stateful.stream_cusum`
-    does per micro-batch); defaults derive them from the data itself.
+    the live feed); defaults derive them from the data itself.
     """
     daily = (
         events.where(F.col(ts_col).isNotNull())

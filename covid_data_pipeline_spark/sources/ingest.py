@@ -2,8 +2,8 @@
 URL and land it under hive-style date keys — the engine twin of the
 reference's GitHub→MinIO landing step (covid_to_s3.py:48-80, key layout
 :41). Driver-side Python by design: landing is orchestration I/O, not a
-relational operator; Spark picks the file up from the landing dir (batch
-scan or file stream).
+relational operator; Spark picks the file up with a batch scan of the
+landing dir.
 
 Stdlib-only (urllib) so it runs anywhere; at scale the landing dir is an
 object store mount and this function is called once per arriving file by
@@ -40,16 +40,23 @@ def land_url(
 ) -> str:
     """GET ``url`` and stream it to ``<landing_root>/<landing_key>``.
     Returns the landed path. Raises on HTTP errors (the reference checks
-    status and aborts the day, covid_to_s3.py:58-59). Writes via a temp
-    name + rename so readers never see a partial file."""
+    status and aborts the day, covid_to_s3.py:58-59). Writes to a
+    ``.``-prefixed temp name in the same directory, which Spark's file
+    index skips, then renames it into place, so readers never see a
+    partial file; a failed copy removes the temp file."""
     dest = os.path.join(landing_root, landing_key(report_date, suffix))
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    tmp = dest + ".inprogress"
-    with urllib.request.urlopen(url, timeout=timeout) as resp:
-        status = getattr(resp, "status", 200)
-        if status and status >= 400:
-            raise OSError(f"GET {url} -> HTTP {status}")
-        with open(tmp, "wb") as f:
-            shutil.copyfileobj(resp, f, chunk_bytes)
-    os.replace(tmp, dest)
+    head, name = os.path.split(dest)
+    os.makedirs(head, exist_ok=True)
+    tmp = os.path.join(head, f".{name}.inprogress")
+    try:
+        with urllib.request.urlopen(url, timeout=timeout) as resp:
+            status = getattr(resp, "status", 200)
+            if status and status >= 400:
+                raise OSError(f"GET {url} -> HTTP {status}")
+            with open(tmp, "wb") as f:
+                shutil.copyfileobj(resp, f, chunk_bytes)
+        os.replace(tmp, dest)
+    finally:
+        if os.path.exists(tmp):  # the copy failed before the rename
+            os.remove(tmp)
     return dest

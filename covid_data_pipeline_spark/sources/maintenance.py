@@ -14,9 +14,8 @@ before scheduling compaction or re-clustering on a 100 TB warehouse.
   (`write_zordered` / sortWithinPartitions) would pay.
 
 Both are driver-side METADATA passes (os.walk + pyarrow footer reads,
-KBs per file) — the one place driver-side work is the honest design, as
-with ANN model artifacts; at 1000-table scale, run them per-table from
-the scheduler.
+KBs per file) — the one place driver-side work is the honest design;
+at 1000-table scale, run them per-table from the scheduler.
 """
 
 from __future__ import annotations
@@ -113,52 +112,4 @@ def clustering_overlap(path: str, column: str) -> dict:
         "overlapping_pairs": overlapping,
         "overlap_pct": round(100 * overlapping / all_pairs, 2),
         "prunable": n - len(overlapped_files),
-    }
-
-
-def schema_diff(wh, table: str, v_from: int, v_to: int) -> dict:
-    """Schema drift between two snapshot versions, from parquet FOOTERS
-    only (no data read): ``{added, removed, retyped}`` column reports.
-    The audit a consumer runs when a pipeline starts failing after an
-    upstream "additive" change that wasn't (a retype shows up here
-    before it shows up as a cast error three jobs downstream).
-
-    Reads ONE footer per distinct batch dir per version (files within a
-    batch share a write schema), so cost is O(commits), not O(files)."""
-    import pyarrow.parquet as pq
-
-    def _schema(version: int) -> dict[str, str]:
-        files = wh._manifest(table, version)["files"]
-        cols: dict[str, str] = {}
-        seen_batches: set[str] = set()
-        for f in files:
-            batch = f.split(os.sep, 1)[0]
-            if batch in seen_batches:
-                continue
-            seen_batches.add(batch)
-            sch = pq.read_schema(os.path.join(wh._data_dir(table), f))
-            for field in sch:
-                t = str(field.type)
-                prev = cols.get(field.name)
-                if prev is not None and prev != t:
-                    raise ValueError(
-                        f"{table} v{version}: column {field.name!r} has "
-                        f"conflicting types across batches ({prev} vs {t})"
-                    )
-                cols.setdefault(field.name, t)
-        return cols
-
-    old, new = _schema(v_from), _schema(v_to)
-    return {
-        "added": sorted(
-            {c: new[c] for c in new.keys() - old.keys()}.items()
-        ),
-        "removed": sorted(
-            {c: old[c] for c in old.keys() - new.keys()}.items()
-        ),
-        "retyped": sorted(
-            (c, old[c], new[c])
-            for c in old.keys() & new.keys()
-            if old[c] != new[c]
-        ),
     }

@@ -31,8 +31,9 @@ without reading a byte of input I/O:
   by one query shape.
 * **streaming**: a `SimpleDataSourceStreamReader` replays the same
   deterministic rows in bounded micro-batches with exact offset
-  tracking, so streaming operators can be tested against their batch
-  twins on identical data.
+  tracking, so the watermarked windows in ``streaming/windows.py`` can
+  be tested against their batch results on identical data
+  (tests/test_pyds.py).
 
 Determinism: every field derives from splitmix64(seed ^ event_id) — no
 RNG state anywhere, so task retries and offset replays reproduce

@@ -305,42 +305,6 @@ class Warehouse:
         shutil.rmtree(backup)
 
 
-def merge_upsert(
-    wh: Warehouse,
-    df: DataFrame,
-    table: str,
-    keys: Sequence[str],
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """MERGE/upsert by key: incoming rows replace same-key rows, others
-    append (the lakehouse `MERGE INTO ... WHEN MATCHED UPDATE / WHEN NOT
-    MATCHED INSERT` for whole-row updates).
-
-    Scale shape: when the table is partitioned and the incoming frame
-    carries the partition column, only the touched partitions are read
-    and rewritten (existing rows outside them are untouched by dynamic
-    partition overwrite); the key match is a left_anti join inside those
-    partitions. Unpartitioned tables fall back to a full rewrite.
-    """
-    keys = list(keys)
-    if not wh.exists(table):
-        wh.append(df, table, partition_by=partition_by)
-        return
-    existing = wh.read(table)
-    if partition_by:
-        # Restrict to touched partitions (join-based, no collect):
-        # semi-join keeps existing rows in partitions the batch touches.
-        parts = df.select(*partition_by).distinct()
-        # bcast: delta batch partition set (bounded by the incoming batch)
-        touched = existing.join(F.broadcast(parts), on=list(partition_by), how="left_semi")
-        survivors = touched.join(df.select(*keys), on=keys, how="left_anti")
-        out = survivors.unionByName(df)
-        wh.overwrite_partitions(out, table, partition_by=list(partition_by))
-    else:
-        survivors = existing.join(df.select(*keys), on=keys, how="left_anti")
-        wh.replace(survivors.unionByName(df), table)
-
-
 def write_jdbc(
     df: DataFrame,
     url: str,
@@ -472,82 +436,3 @@ class IcebergWarehouse:
         if partition_by:
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         writer.createOrReplace()
-
-
-def write_audit_publish(
-    wh: Warehouse,
-    df: "DataFrame",
-    table: str,
-    rules: list,
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """Write-Audit-Publish: stage the data, gate it with DQ rules, then
-    publish atomically — readers NEVER see unvalidated rows.
-
-    1. WRITE: materialize ``df`` to ``<table>__wap`` (full compute +
-       I/O happens here, against the staging path).
-    2. AUDIT: run the declarative rule set against the STAGED files —
-       auditing what was actually written, not the logical plan, so
-       nondeterminism or a partial write is caught too.
-    3. PUBLISH: swap staging into place via the same crash-safe rename
-       choreography as :meth:`Warehouse.compact` (backup kept until the
-       new data is in place).
-
-    On audit failure the staging dir is removed and the live table is
-    untouched — the pattern Iceberg ships as branch-based WAP,
-    reproduced on plain parquet paths. Raises the gate's ValueError.
-    """
-    from covid_data_pipeline_spark.operators.quality import check
-
-    staging_table = table + "__wap"
-    staging = wh.path(staging_table)
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # stale staging from a prior crash
-    try:
-        wh.replace(df, staging_table, partition_by=partition_by)
-        check(wh.read(staging_table), rules)
-    except Exception:
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        raise
-
-    final = wh.path(table)
-    backup = final + "__old"
-    if os.path.isdir(backup):
-        shutil.rmtree(backup)
-    if os.path.isdir(final):
-        os.replace(final, backup)
-    os.replace(staging, final)
-    if os.path.isdir(backup):
-        shutil.rmtree(backup)
-
-
-def table_report(wh: Warehouse, table: str) -> dict:
-    """Operational health snapshot of a table: file count, bytes,
-    row count, and derived averages — the numbers that decide when to
-    run :meth:`Warehouse.compact` (many small files) or raise
-    ``max_records_per_file`` (files too large for parallel reads).
-
-    File stats come from a driver-side directory walk (metadata only,
-    no data read); the row count is the one Spark job. At object-store
-    scale the walk becomes a manifest listing — same shape, same
-    fields.
-    """
-    root = wh.path(table)
-    files = []
-    for dirpath, _dirnames, filenames in os.walk(root):
-        for fn in filenames:
-            if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
-                continue
-            files.append(os.path.join(dirpath, fn))
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    rows = wh.read(table).count() if files else 0
-    n = len(files)
-    return {
-        "table": table,
-        "num_files": n,
-        "total_bytes": total_bytes,
-        "rows": rows,
-        "avg_file_bytes": total_bytes // n if n else 0,
-        "avg_rows_per_file": rows // n if n else 0,
-    }

@@ -3,7 +3,8 @@
 ``window()`` / ``session_window()`` evaluate identically on batch and
 streaming DataFrames, so every function here is tested two ways: against
 the DuckDB oracle in batch mode, and stream-vs-batch equivalence with an
-``availableNow`` trigger (tests/test_streaming.py).
+``availableNow`` trigger over parquet files (tests/test_streaming.py) and
+over the synthetic events stream (tests/test_pyds.py).
 
 Scale notes: watermarks bound state (late rows beyond the watermark are
 dropped); the shuffle is keyed on (window, *keys) so skewed keys behave

@@ -17,11 +17,7 @@ import pytest
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
-from covid_data_pipeline_spark.operators.bloom import (
-    bloom_build,
-    bloom_contains,
-    bloom_prefilter,
-)
+from covid_data_pipeline_spark.operators.bloom import bloom_build, bloom_contains
 
 
 def _keys(spark, ids):
@@ -53,22 +49,6 @@ def test_word_layout_dense_and_bounded(spark):
     assert len(words) == 4
     assert all(isinstance(w, int) and w >= 0 for w in words)
     assert any(w != 0 for w in words)
-
-
-def test_prefilter_flag_matches_contains(spark):
-    members = _keys(spark, [1, 2, 3])
-    probe = _keys(spark, range(10)).withColumnRenamed("k", "pk")
-    flagged = bloom_prefilter(probe, "pk", members, "k", m_words=4, k=2)
-    words = bloom_build(members, "k", m_words=4, k=2)
-    expect = {
-        r["pk"]: r["m"]
-        for r in probe.select(
-            "pk", bloom_contains(F.col("pk"), words, k=2).alias("m")
-        ).collect()
-    }
-    got = {r["pk"]: r["bloom_maybe"] for r in flagged.collect()}
-    assert got == expect
-    assert all(got[k] for k in (1, 2, 3))
 
 
 def test_probe_plan_is_shuffle_free(spark):

@@ -1,5 +1,5 @@
-"""Quality classifier: separation, generalization to held-out docs, and
-scoring-path purity (no shuffle in the scoring plan)."""
+"""Quality classifier: the integer-lattice trainer separates clean docs
+from corrupted twins and is partitioning-independent."""
 
 from __future__ import annotations
 
@@ -14,53 +14,13 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
-from covid_data_pipeline_spark.operators.classifier import (
-    corrupted_negatives,
-    quality_classifier_scores,
-    score_quality,
-    train_quality_classifier,
-)
+from covid_data_pipeline_spark.operators.classifier import corrupted_negatives
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_separates_clean_from_corrupted(spark):
-    docs = table(spark, SF, "documents").limit(200)
-    scored = quality_classifier_scores(docs)
-    corrupted = corrupted_negatives(docs)
-    scored_bad = score_quality(corrupted, _train(spark, docs), id_col="doc_id")
-    mean_good = scored.agg(F.avg("quality_prob")).first()[0]
-    mean_bad = scored_bad.agg(F.avg("quality_prob")).first()[0]
-    assert mean_good > 0.9 and mean_bad < 0.1
-
-
-def _train(spark, docs):
-    return train_quality_classifier(docs, corrupted_negatives(docs))
-
-
-def test_generalizes_to_holdout(spark):
-    docs = table(spark, SF, "documents")
-    train = docs.filter(F.col("doc_id") < 300)
-    hold = docs.filter(F.col("doc_id") >= 300)
-    model = _train(spark, train)
-    good = score_quality(hold, model).agg(F.avg("quality_prob")).first()[0]
-    bad = (
-        score_quality(corrupted_negatives(hold), model)
-        .agg(F.avg("quality_prob"))
-        .first()[0]
-    )
-    assert good > 0.9 and bad < 0.1
-
-
-def test_scoring_plan_is_map_side(spark):
-    docs = table(spark, SF, "documents").filter(F.col("doc_id") < 50)
-    model = _train(spark, docs)
-    plan = score_quality(docs, model)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # scoring must not shuffle
-
-
 def test_lattice_logreg_separates_and_is_deterministic(spark):
-    """The exact-replay (integer-lattice hard-sigmoid GD) twin: every
+    """The exact-replay (integer-lattice hard-sigmoid GD) trainer: every
     corpus doc must outscore every corrupted twin, and the trained
     weights must be partitioning-independent (pure integer trajectory)."""
     from covid_data_pipeline_spark.operators.classifier import (

@@ -303,8 +303,8 @@ def test_empty_day_skips_every_layer(pipeline, spark):
 
 
 def test_layer_counts_outside_run_day(pipeline, spark):
-    """A layer called on its own, as stream_medallion calls it, returns
-    the rows its write counted."""
+    """A layer called on its own, outside run_day, returns the rows its
+    write counted."""
     wh, _ = pipeline
     assert process_ods(spark, wh, DAYS[2]) == 5
     assert process_ods(spark, wh, "2021-05-05") == 0

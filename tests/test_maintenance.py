@@ -51,28 +51,3 @@ def test_clustering_overlap_sorted_vs_shuffled(spark, tmp_path):
     # round-robin: every file overlaps every other
     assert bad["overlap_pct"] == 100.0
     assert bad["prunable"] == 0
-
-
-def test_schema_diff_reports_drift(spark, tmp_path):
-    from covid_data_pipeline_spark.sources.maintenance import schema_diff
-    from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
-
-    wh = SnapshotWarehouse(spark, str(tmp_path / "wh"))
-    wh.append(
-        spark.createDataFrame([(1, "a", 1.0)], "id bigint, x string, v double"),
-        "t",
-    )
-    # additive evolution + a retype in a fully-rewritten snapshot
-    wh.replace(
-        spark.createDataFrame(
-            [(2, "b", 5, "new")], "id bigint, x string, v int, extra string"
-        ),
-        "t",
-    )
-    d = schema_diff(wh, "t", 1, 2)
-    assert d["added"] == [("extra", "string")]
-    assert d["removed"] == []
-    assert d["retyped"] == [("v", "double", "int32")]
-    # self-diff is clean
-    clean = schema_diff(wh, "t", 2, 2)
-    assert clean == {"added": [], "removed": [], "retyped": []}

@@ -485,35 +485,6 @@ def test_char_entropy_deterministic_under_repartition(spark):
 
 
 # ---------------------------------------------------------------------------
-# ANN model persistence
-# ---------------------------------------------------------------------------
-
-
-def test_ann_model_roundtrip_reproduces_codes(spark, tmp_path):
-    from covid_data_pipeline_spark.operators.similarity import (
-        load_ann_model,
-        pq_encode,
-        pq_train_codebooks,
-        save_ann_model,
-        train_centroids,
-    )
-
-    e = table(spark, SF, "embeddings")
-    books = pq_train_codebooks(e, dim=64, n_sub=8, n_codes=16, iters=1)
-    cents = train_centroids(e, n_centroids=8, iters=1)
-    p = str(tmp_path / "ann" / "model.json")
-    save_ann_model(p, {"pq_codebooks": books, "ivf_centroids": cents})
-    loaded = load_ann_model(p)
-    assert loaded["ivf_centroids"] == cents
-    a = {r["vec_id"]: tuple(r["pq_code"])
-         for r in pq_encode(e, books).select("vec_id", "pq_code").collect()}
-    b = {r["vec_id"]: tuple(r["pq_code"])
-         for r in pq_encode(e, loaded["pq_codebooks"])
-         .select("vec_id", "pq_code").collect()}
-    assert a == b
-
-
-# ---------------------------------------------------------------------------
 # burst detection
 # ---------------------------------------------------------------------------
 

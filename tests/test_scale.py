@@ -210,57 +210,6 @@ def test_compact_recovers_from_crashed_swap(spark, sf_dir, tmp_path):
     assert wh.read("raw.orders").schema == spark.read.parquet(final).schema
 
 
-def test_bloom_filter_join_prunes_probe_side(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from covid_data_pipeline_spark.harness.registry import table
-    from covid_data_pipeline_spark.operators.scale import (
-        with_bloom_join_confs,
-    )
-
-    before = with_bloom_join_confs(spark)
-    # force a shuffle join: bloom injection declines broadcast joins
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe_bcast = spark.conf.get(
-        "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        li = table(spark, sf_dir, "lineitem")
-        o = table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        plan = j._jdf.queryExecution().optimizedPlan().toString().lower()
-        assert "bloom_filter_agg" in plan, "runtime bloom filter not injected"
-        assert "might_contain" in plan, "probe side carries no bloom probe"
-        # and it is semantics-preserving
-        got = {r["o_orderpriority"]: r["n"] for r in j.collect()}
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "false"
-        )
-        want = {r["o_orderpriority"]: r["n"] for r in j.collect()}
-        assert got == want and sum(want.values()) > 0
-    finally:
-        for k, v in before.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
-        if prev_aqe_bcast is None:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", prev_aqe_bcast
-            )
-
-
 def test_skew_profile_flags_planted_hot_key(spark):
     """A key holding ~half the rows must surface first with is_hot set;
     uniform keys must not be flagged."""
@@ -374,52 +323,6 @@ def test_split_skew_join_rejects_reserved_columns(spark):
     right = spark.createDataFrame([(1, 2)], "k long, rv long")
     with pytest.raises(ValueError, match="__hot"):
         split_skew_join(left, right, on=["k"])
-
-
-
-def test_footer_aggregate_pushdown(spark, sf_dir):
-    """MIN/MAX/COUNT pushed into the parquet footers (V2 BatchScan
-    PushedAggregation): the scan reads row-group statistics, not data
-    pages — what makes freshness probes and count audits metadata-cost
-    at 100 TB. Values must equal the normal scan's."""
-    from covid_data_pipeline_spark.operators.scale import (
-        with_footer_agg_confs,
-    )
-
-    path = f"{sf_dir}/lineitem.parquet"
-    plain = spark.read.parquet(path).agg(
-        F.min("l_quantity").alias("mn"),
-        F.max("l_extendedprice").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-
-    before = with_footer_agg_confs(spark)
-    try:
-        agg = spark.read.parquet(path).agg(
-            F.min("l_quantity").alias("mn"),
-            F.max("l_extendedprice").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "PushedAggregation" in plan, plan[:600]
-        assert "BatchScan" in plan
-        got = agg.collect()[0]
-        assert (got["mn"], got["mx"], got["n"]) == (
-            plain["mn"], plain["mx"], plain["n"],
-        )
-        # with a residual filter the pushdown must DECLINE (stats can't
-        # answer it) and fall back to a correct full scan
-        filt = spark.read.parquet(path).filter(
-            F.col("l_discount") > 0.05
-        ).agg(F.count(F.lit(1)).alias("n"))
-        fplan = filt._jdf.queryExecution().executedPlan().toString()
-        assert "PushedAggregation: []" in fplan or "PushedAggregation" not in fplan
-    finally:
-        for k, v in before.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_rendezvous_preserves_duplicates_and_map_columns(spark):

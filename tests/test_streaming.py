@@ -1,6 +1,6 @@
-"""Structured Streaming layer tests: stream-vs-batch equivalence of the
-window operators, the stateful cumulative→delta operator vs its batch LAG
-twin, and the foreachBatch medallion bridge."""
+"""Stream-vs-batch equivalence of the operators that run unchanged on a
+Structured Streaming frame: the watermarked event-time windows, the PQ
+encoder and the BPE tokenizer, each over a parquet file stream."""
 
 from __future__ import annotations
 
@@ -8,14 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
-from covid_data_pipeline_spark.operators.windows import with_deltas
-from covid_data_pipeline_spark.sources.writers import Warehouse
-from covid_data_pipeline_spark.streaming.pipeline import (
-    stream_append_to_table,
-    stream_transform_to_table,
-)
-from covid_data_pipeline_spark.streaming.sources import file_stream
-from covid_data_pipeline_spark.streaming.stateful import cumulative_to_delta_stream
 from covid_data_pipeline_spark.streaming.windows import session_agg, tumbling_agg
 
 
@@ -36,8 +28,10 @@ def _drain(query) -> None:
 @pytest.mark.slow
 def test_tumbling_stream_equals_batch(spark, events_dir, tmp_path):
     batch_df = spark.read.parquet(events_dir)
-    stream_df = file_stream(
-        spark, events_dir, batch_df.schema, max_files_per_trigger=2
+    stream_df = (
+        spark.readStream.schema(batch_df.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(events_dir)
     )
     agg = dict(
         ts_col="ts",
@@ -75,7 +69,7 @@ def test_tumbling_stream_equals_batch(spark, events_dir, tmp_path):
 
 def test_session_stream_equals_batch(spark, events_dir, tmp_path):
     batch_df = spark.read.parquet(events_dir)
-    stream_df = file_stream(spark, events_dir, batch_df.schema)
+    stream_df = spark.readStream.schema(batch_df.schema).parquet(events_dir)
     agg = dict(
         ts_col="ts",
         gap="5 minutes",
@@ -105,58 +99,6 @@ def test_session_stream_equals_batch(spark, events_dir, tmp_path):
         .collect()
     }
     assert got == want and len(want) > 0
-
-
-@pytest.mark.slow
-def test_stateful_delta_matches_batch_lag(spark, tmp_path):
-    """cumulative_to_delta_stream (state = last row per key) must equal
-    the batch LAG formulation across micro-batch boundaries: day 1-5 in
-    one file, 6-10 in another → maxFilesPerTrigger=1 forces the state
-    hand-off."""
-    rows = [
-        (c, f"2021-01-{d:02d}", (100 if c == "AA" else 7) * d + (d % 3))
-        for c in ("AA", "BB")
-        for d in range(1, 11)
-    ]
-    df = spark.createDataFrame(rows, "country string, report_date string, confirmed long")
-    land = tmp_path / "land"
-    df.filter(F.col("report_date") <= "2021-01-05").coalesce(1).write.mode(
-        "append"
-    ).parquet(str(land))
-    df.filter(F.col("report_date") > "2021-01-05").coalesce(1).write.mode(
-        "append"
-    ).parquet(str(land))
-
-    stream_df = file_stream(spark, str(land), df.schema, max_files_per_trigger=1)
-    out = cumulative_to_delta_stream(
-        stream_df,
-        key_cols=["country"],
-        order_col="report_date",
-        value_cols=["confirmed"],
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("delta_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    got = {
-        (r["country"], r["report_date"]): r["new_confirmed"]
-        for r in spark.table("delta_out").collect()
-    }
-    want = {
-        (r["country"], r["report_date"]): r["new_confirmed"]
-        for r in with_deltas(
-            df,
-            partition_by=["country"],
-            order_by=["report_date"],
-            cols=["confirmed"],
-        ).collect()
-    }
-    assert got == want and len(got) == 20
 
 
 @pytest.mark.slow
@@ -193,7 +135,11 @@ def test_append_mode_emits_each_window_once(spark, tmp_path):
             os.utime(f, (now + 60 * i, now + 60 * i))
         seen |= new
 
-    stream = file_stream(spark, land, batches[0].schema, max_files_per_trigger=1)
+    stream = (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(land)
+    )
     q = (
         tumbling_agg(
             stream,
@@ -221,408 +167,6 @@ def test_append_mode_emits_each_window_once(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_medallion_equals_batch_pipeline(spark, tmp_path):
-    """Land the covid fixture days into raw only, then drive ods→dds→mart
-    from the stream runner; the mart must equal the batch pipeline's mart
-    row-for-row."""
-    from covid_data_pipeline_spark.plans import schemas as S
-    from covid_data_pipeline_spark.plans.raw import process_raw
-    from covid_data_pipeline_spark.plans.runner import bootstrap_population, run_day
-    from covid_data_pipeline_spark.plans.stream_runner import stream_medallion
-    from tests.covid_fixtures import DAYS, population_df, write_day_csvs
-
-    csv_dir = tmp_path / "csvs"
-    csv_dir.mkdir()
-    paths = write_day_csvs(str(csv_dir))
-
-    # Batch reference run.
-    wh_b = Warehouse(spark, str(tmp_path / "wh_batch"))
-    bootstrap_population(spark, wh_b, population_df(spark))
-    for day in DAYS:
-        run_day(spark, wh_b, day, csv_path=paths[day])
-
-    # Streaming run: raw landed up front, derived layers stream-driven.
-    wh_s = Warehouse(spark, str(tmp_path / "wh_stream"))
-    bootstrap_population(spark, wh_s, population_df(spark))
-    for day in DAYS:
-        process_raw(spark, wh_s, paths[day], source_file=paths[day])
-    q = stream_medallion(
-        spark,
-        wh_s,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=2,
-    )
-    _drain(q)
-
-    cols = [
-        "report_date",
-        "country_name",
-        "new_cases_today",
-        "new_deaths_today",
-        "cases_per_100k",
-        "risk_category",
-    ]
-    got = sorted(map(tuple, wh_s.read(S.MART_TABLE).select(*cols).collect()))
-    want = sorted(map(tuple, wh_b.read(S.MART_TABLE).select(*cols).collect()))
-    assert got == want and len(want) > 0
-
-    # Alert parity: the stream-driven alert stage fires the same alerts.
-    acols = ["alert_date", "country", "alert_type"]
-    a_got = sorted(map(tuple, wh_s.read(S.ALERTS_TABLE).select(*acols).collect()))
-    a_want = sorted(map(tuple, wh_b.read(S.ALERTS_TABLE).select(*acols).collect()))
-    assert a_got == a_want and len(a_want) > 0
-
-
-@pytest.mark.slow
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    from covid_data_pipeline_spark.streaming.stateful import stream_dedup
-
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:01:00")],
-        "event_id long, ts_s string",
-    ).select("event_id", F.to_timestamp("ts_s").alias("ts"))
-    land = str(tmp_path / "land")
-    # Same two events land twice (redelivery) in separate files/batches.
-    df.coalesce(1).write.mode("append").parquet(land)
-    df.coalesce(1).write.mode("append").parquet(land)
-
-    stream = file_stream(spark, land, df.schema, max_files_per_trigger=1)
-    q = (
-        stream_dedup(stream, keys=["event_id"], ts_col="ts", watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    got = [r["event_id"] for r in spark.table("dedup_out").collect()]
-    assert sorted(got) == [1, 2]  # each event exactly once despite redelivery
-
-
-def test_stream_static_dim_enrichment(spark, events_dir, tmp_path):
-    from covid_data_pipeline_spark.streaming.stateful import enrich_with_dim
-
-    batch_df = spark.read.parquet(events_dir)
-    dim = spark.createDataFrame(
-        [("click", "interaction"), ("view", "interaction"), ("error", "fault")],
-        "event_type string, category string",
-    )
-    stream = file_stream(spark, events_dir, batch_df.schema)
-    q = (
-        enrich_with_dim(stream, dim, on=["event_type"])
-        .groupBy("category")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .writeStream.format("memory")
-        .queryName("enrich_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    got = {r["category"]: r["cnt"] for r in spark.table("enrich_out").collect()}
-    want = {
-        r["category"]: r["cnt"]
-        for r in batch_df.join(dim, "event_type", "left")
-        .groupBy("category")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    assert got == want and len(got) >= 2
-
-
-@pytest.mark.slow
-def test_foreachbatch_medallion_bridge(spark, events_dir, tmp_path):
-    """Stream → append landing + transform → partition-overwrite rollup;
-    the rollup table must equal the batch groupBy of the full input."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    batch_df = spark.read.parquet(events_dir)
-    stream_df = file_stream(spark, events_dir, batch_df.schema, max_files_per_trigger=2)
-
-    q1 = stream_append_to_table(
-        stream_df, wh, "raw.events", checkpoint_dir=str(tmp_path / "c1")
-    )
-    _drain(q1)
-    assert wh.read("raw.events").count() == batch_df.count()
-
-    def rollup(df):
-        return df.groupBy(F.to_date("ts").alias("event_date"), "event_type").agg(
-            F.count(F.lit(1)).alias("events_cnt")
-        )
-
-    # availableNow over an already-complete dir → one logical load; each
-    # micro-batch overwrite covers only the dates present in that batch.
-    stream2 = file_stream(spark, events_dir, batch_df.schema)
-    q2 = stream_transform_to_table(
-        stream2,
-        rollup,
-        wh,
-        "ods.events_daily",
-        checkpoint_dir=str(tmp_path / "c2"),
-        partition_by=["event_date"],
-    )
-    _drain(q2)
-    cols = ["event_date", "event_type", "events_cnt"]
-    got = {tuple(r) for r in wh.read("ods.events_daily").select(*cols).collect()}
-    want = {tuple(r) for r in rollup(batch_df).select(*cols).collect()}
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.slow
-def test_stream_interval_join_equals_batch_range_join(spark, events_dir, tmp_path):
-    """Stream-stream interval join (watermarked state-bounded) must emit
-    exactly the batch bucketed range join's pairs."""
-    from covid_data_pipeline_spark.operators.rangejoin import time_range_join
-    from covid_data_pipeline_spark.streaming.stateful import stream_interval_join
-
-    ev = spark.read.parquet(events_dir)
-
-    def purchases(df):
-        return df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("p_ts")
-        )
-
-    def clicks(df):
-        return df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-
-    want_df = time_range_join(
-        purchases(ev),
-        clicks(ev).withColumnRenamed("c_user", "user_id"),
-        keys=["user_id"],
-        left_ts="p_ts",
-        right_ts="c_ts",
-        lower_s=-6 * 3600,
-        upper_s=0,
-    )
-    want = {(r["purchase_id"], r["click_id"]) for r in want_df.collect()}
-
-    ps = purchases(file_stream(spark, events_dir, ev.schema, max_files_per_trigger=2))
-    cs = clicks(file_stream(spark, events_dir, ev.schema, max_files_per_trigger=2))
-    joined = stream_interval_join(
-        ps,
-        cs.withColumnRenamed("c_user", "user_id"),
-        keys=["user_id"],
-        left_ts="p_ts",
-        right_ts="c_ts",
-        lower_s=-6 * 3600,
-        upper_s=0,
-        watermark="40 days",
-    )
-    q = (
-        joined.select("purchase_id", "click_id")
-        .writeStream.format("memory")
-        .queryName("interval_join_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ij"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.table("interval_join_out").collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas arm: the plan and output
-    schema must construct everywhere; execution (and batch parity)
-    runs only where protobuf is installed — the state-server protocol
-    dependency pyspark needs for this API (honest gate, like the
-    Iceberg arm)."""
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_running_totals,
-        transform_with_state_available,
-    )
-
-    rows1 = [("u1", 1.0), ("u1", 2.0), ("u2", 5.0)]
-    rows2 = [("u1", 3.0), ("u3", 7.0)]
-    schema = "user_id string, value double"
-    land = tmp_path / "land_tws"
-    spark.createDataFrame(rows1, schema).coalesce(1).write.mode("append").parquet(str(land))
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(str(land))
-
-    stream = file_stream(
-        spark, str(land), spark.createDataFrame(rows1, schema).schema, max_files_per_trigger=1
-    )
-    out = stream_running_totals(stream, ["user_id"], "value")
-    assert [f.name for f in out.schema.fields] == [
-        "user_id",
-        "batch_rows",
-        "running_cnt",
-        "running_sum",
-    ]
-    assert out.isStreaming
-
-    if not transform_with_state_available():
-        pytest.skip("protobuf absent: transformWithState cannot execute here")
-
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    rows = spark.table("tws_out").collect()
-    final = {}
-    for r in rows:
-        if r.user_id not in final or r.running_cnt > final[r.user_id][0]:
-            final[r.user_id] = (r.running_cnt, r.running_sum)
-    assert final == {"u1": (3, 6.0), "u2": (1, 5.0), "u3": (1, 7.0)}
-    # u1 appears in both micro-batches → two emissions (state carried)
-    assert sum(1 for r in rows if r.user_id == "u1") == 2
-
-
-def test_exactly_once_append_skips_replayed_batch(spark, tmp_path):
-    """Simulate a micro-batch replay: the same batch id delivered twice
-    must land exactly once; a new batch id still appends."""
-    from covid_data_pipeline_spark.sources.writers import Warehouse
-    from covid_data_pipeline_spark.streaming.pipeline import (
-        append_once,
-        stream_append_exactly_once,
-    )
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    spark.range(0, 10).toDF("id").write.mode("overwrite").parquet(
-        str(src_dir / "a.parquet")
-    )
-    stream = spark.readStream.schema("id long").parquet(str(src_dir / "*"))
-    q = stream_append_exactly_once(
-        stream, wh, "evt", str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination()
-    assert wh.read("evt").count() == 10
-
-    # restart-after-sink-crash = the same batch id delivered again:
-    # the marker suppresses the duplicate append through the REAL path
-    batch = spark.range(0, 10).toDF("id")
-    assert append_once(wh, "evt", batch, batch_id=0) is False
-    assert wh.read("evt").count() == 10
-    # a genuinely new batch id still lands
-    assert append_once(wh, "evt", spark.range(10, 15).toDF("id"), batch_id=1) is True
-    assert wh.read("evt").count() == 15
-    # and replaying THAT id is suppressed too
-    assert append_once(wh, "evt", spark.range(10, 15).toDF("id"), batch_id=1) is False
-    assert wh.read("evt").count() == 15
-
-
-@pytest.mark.slow
-def test_stream_funnel_equals_batch_fold(spark, tmp_path):
-    """stream_funnel_stage_times across micro-batch boundaries (state
-    hand-off forced by maxFilesPerTrigger=1, events in event-time order)
-    must equal the batch funnel fold over the full corpus."""
-    import datetime as dt
-
-    from covid_data_pipeline_spark.operators.funnel import funnel_stage_times
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_funnel_stage_times,
-    )
-
-    t = lambda m: dt.datetime(2024, 1, 1) + dt.timedelta(minutes=m)  # noqa: E731
-    early = [
-        (1, t(0), "view"),
-        (1, t(5), "click"),
-        (2, t(1), "purchase"),  # out of order: never counts
-        (2, t(2), "view"),
-        (3, t(3), "view"),
-        (4, t(0), "view"),
-        (4, t(0), "click"),  # equal-ts: must not advance
-    ]
-    late = [
-        (1, t(70), "purchase"),  # completes user 1 across the boundary
-        (2, t(80), "click"),     # advances user 2 with state t0 from batch 1
-        (3, t(90), "noise"),     # non-stage event
-        (4, t(95), "purchase"),  # blocked: t1 never set for user 4
-    ]
-    schema = "user_id long, ts timestamp, event_type string"
-    land = tmp_path / "funnel_land"
-    spark.createDataFrame(early, schema).coalesce(1).write.mode("append").parquet(str(land))
-    spark.createDataFrame(late, schema).coalesce(1).write.mode("append").parquet(str(land))
-
-    batch_df = spark.read.parquet(str(land))
-    stream_df = file_stream(spark, str(land), batch_df.schema, max_files_per_trigger=1)
-    out = stream_funnel_stage_times(
-        stream_df, "user_id", "ts", "event_type", ("view", "click", "purchase")
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_state")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "funnel_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    # last update per user = final state
-    got = {
-        r["user_id"]: (r["t0"], r["t1"], r["t2"])
-        for r in spark.sql(
-            """SELECT * FROM (
-                 SELECT *, row_number() OVER (
-                   PARTITION BY user_id ORDER BY t2 DESC NULLS LAST,
-                                                 t1 DESC NULLS LAST,
-                                                 t0 DESC NULLS LAST) rn
-                 FROM funnel_state) WHERE rn = 1"""
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["t0"], r["t1"], r["t2"])
-        for r in funnel_stage_times(
-            batch_df, "user_id", "ts", "event_type", ("view", "click", "purchase")
-        ).collect()
-    }
-    assert got == want
-    assert want[1][2] is not None  # user 1 completed across the boundary
-    assert want[4] == (t(0), None, None)  # equal-ts click never advanced
-
-
-def test_stream_quarantine_split_loses_nothing(spark, tmp_path):
-    from covid_data_pipeline_spark.operators.quality import in_range, not_null
-    from covid_data_pipeline_spark.streaming.pipeline import (
-        stream_split_quarantine,
-    )
-
-    rows = [
-        (1, 10.0), (2, -5.0),      # negative: quarantined
-        (3, None), (4, 99.0),      # null value: quarantined via not_null
-        (None, 7.0),               # null id: quarantined
-    ]
-    df = spark.createDataFrame(rows, "id long, value double")
-    land = tmp_path / "dlq_land"
-    df.coalesce(1).write.mode("append").parquet(str(land))
-
-    wh = Warehouse(spark, str(tmp_path / "dlq_wh"))
-    stream_df = file_stream(spark, str(land), df.schema, max_files_per_trigger=1)
-    q = stream_split_quarantine(
-        stream_df,
-        wh,
-        good_table="clean.events",
-        quarantine_table="dlq.events",
-        rules=[not_null("id"), not_null("value"), in_range("value", lo=0.0)],
-        checkpoint_dir=str(tmp_path / "dlq_ckpt"),
-    )
-    _drain(q)
-    good = wh.read("clean.events")
-    bad = wh.read("dlq.events")
-    assert {r["id"] for r in good.collect()} == {1, 4}
-    assert good.count() + bad.count() == 5  # nothing lost
-    flagged = {r["id"]: r["failed_rules"] for r in bad.collect()}
-    assert "in_range" in flagged[2] and "not_null" in flagged[None]
-
-
-@pytest.mark.slow
 def test_stream_pq_encode_equals_batch(spark, sf_dir, tmp_path):
     """pq_encode is a pure Arrow map, so it composes with Structured
     Streaming unchanged: encoding a file stream of embeddings must give
@@ -643,7 +187,9 @@ def test_stream_pq_encode_equals_batch(spark, sf_dir, tmp_path):
 
     land = str(tmp_path / "embed_land")
     e.repartition(3).write.mode("overwrite").parquet(land)
-    stream = file_stream(spark, land, e.schema, max_files_per_trigger=1)
+    stream = (
+        spark.readStream.schema(e.schema).option("maxFilesPerTrigger", 1).parquet(land)
+    )
     q = (
         pq_encode(stream, books)
         .select("vec_id", "pq_code")
@@ -660,259 +206,6 @@ def test_stream_pq_encode_equals_batch(spark, sf_dir, tmp_path):
         for r in spark.sql("SELECT * FROM pq_stream").collect()
     }
     assert stream_codes == batch_codes
-
-
-@pytest.mark.slow
-def test_stream_maintained_aggregate_equals_batch(spark, tmp_path):
-    """stream_maintain_aggregate: MV refreshed per micro-batch must
-    equal a full recompute of the base table after the stream drains;
-    replayed batches change nothing (append suppressed -> cursor noop)."""
-    from covid_data_pipeline_spark.sources.matview import (
-        MaterializedAggregate,
-        aggregate_state,
-    )
-    from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
-    from covid_data_pipeline_spark.streaming.pipeline import (
-        append_once,
-        stream_maintain_aggregate,
-    )
-
-    swh = SnapshotWarehouse(spark, str(tmp_path / "swh"))
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "id bigint, grp string, amount double"
-    ).write.parquet(str(src_dir / "f1.parquet"))
-    spark.createDataFrame(
-        [(3, "a", 3.0), (4, "c", None)], "id bigint, grp string, amount double"
-    ).write.parquet(str(src_dir / "f2.parquet"))
-
-    mv = MaterializedAggregate(
-        swh, "sales", keys=["id"], group_cols=["grp"], sum_cols=["amount"]
-    )
-    stream = (
-        spark.readStream.schema("id bigint, grp string, amount double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = stream_maintain_aggregate(stream, mv, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-
-    def rows(df):
-        return sorted(
-            (r["grp"], r["mv_count"], r["sum_amount"]) for r in df.collect()
-        )
-
-    base = swh.read("sales")
-    assert base.count() == 4
-    assert rows(mv.read()) == rows(aggregate_state(base, ["grp"], ["amount"]))
-    # maxFilesPerTrigger=1 -> the view was refreshed per batch
-    assert mv.refreshed_version() == swh.current_version("sales") >= 2
-
-    # replay of an already-committed micro-batch: append suppressed,
-    # cursor already current, view version unchanged
-    v_before = swh.current_version(mv.view_table)
-    replay = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "id bigint, grp string, amount double"
-    )
-    assert append_once(swh, "sales", replay, batch_id=0) is False
-    assert mv.refresh()["mode"] == "noop"
-    assert swh.current_version(mv.view_table) == v_before
-    assert rows(mv.read()) == rows(aggregate_state(base, ["grp"], ["amount"]))
-
-
-@pytest.mark.slow
-def test_stream_heavy_hitters_mergeable_guarantee(spark, tmp_path):
-    """Streaming MG summaries across forced micro-batch boundaries must
-    keep every item the batch EXACT operator certifies (frequency >
-    n/(k+1)) — the mergeable-summaries guarantee — with underestimating
-    counts within the n/(k+1) bound."""
-    import random
-
-    from covid_data_pipeline_spark.operators.heavyhitters import heavy_hitters
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_heavy_hitters,
-    )
-
-    rng = random.Random(17)
-    # skewed stream: per grp, items h0/h1 dominate a long uniform tail
-    rows = []
-    for grp in ("a", "b"):
-        for _ in range(600):
-            r = rng.random()
-            item = (
-                f"{grp}_h0" if r < 0.30
-                else f"{grp}_h1" if r < 0.50
-                else f"t{rng.randrange(200)}"
-            )
-            rows.append((grp, item))
-    rng.shuffle(rows)
-    half = len(rows) // 2
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    for name, chunk in (("f1", rows[:half]), ("f2", rows[half:])):
-        spark.createDataFrame(chunk, "grp string, item string").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{name}.parquet"))
-
-    k = 8
-    stream = (
-        spark.readStream.schema("grp string, item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_heavy_hitters(stream, ["grp"], "item", k=k)
-        .writeStream.format("memory")
-        .queryName("hh")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.sql("SELECT * FROM hh").collect()
-    # latest summary per key = rows at that key's max n_seen
-    latest: dict = {}
-    for r in got:
-        cur = latest.setdefault(r["grp"], {})
-        if not cur or r["n_seen"] >= max(x["n_seen"] for x in cur.values()):
-            if cur and r["n_seen"] > max(x["n_seen"] for x in cur.values()):
-                cur.clear()
-            cur[r["item"]] = r
-    batch_df = spark.createDataFrame(rows, "grp string, item string")
-    n_per_grp = 600
-    found_any = False
-    for grp in ("a", "b"):
-        exact = heavy_hitters(
-            batch_df.filter(F.col("grp") == grp), "item", k=k
-        ).collect()
-        assert exact  # the planted hitters exceed n/(k+1)
-        found_any = True
-        for e in exact:
-            item = str(e["item"])
-            assert item in latest[grp], (
-                f"exact hitter {item} missing from stream summary"
-            )
-            assert latest[grp][item]["mg_count"] <= e["cnt"]
-            assert latest[grp][item]["mg_count"] >= e["cnt"] - n_per_grp // (k + 1)
-    assert found_any
-
-
-@pytest.mark.slow
-def test_stream_srm_guard_matches_batch(spark, tmp_path):
-    from covid_data_pipeline_spark.operators.experiment import srm_check
-    from covid_data_pipeline_spark.streaming.stateful import stream_srm_guard
-
-    # exp "ok": balanced; exp "bad": 2:1 realized vs 1:1 design
-    rows = []
-    for i in range(900):
-        rows.append(("ok", i, i % 2 == 0))
-        rows.append(("bad", i, i % 3 != 0))
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    half = len(rows) // 2
-    for name, chunk in (("f1", rows[:half]), ("f2", rows[half:])):
-        spark.createDataFrame(
-            chunk, "exp string, unit long, treat boolean"
-        ).coalesce(1).write.parquet(str(src_dir / f"{name}.parquet"))
-
-    stream = (
-        spark.readStream.schema("exp string, unit long, treat boolean")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_srm_guard(stream, ["exp"], "treat")
-        .writeStream.format("memory")
-        .queryName("srm")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM srm").collect()
-    final = {}
-    for r in got:
-        if r["exp"] not in final or r["n_seen"] > final[r["exp"]]["n_seen"]:
-            final[r["exp"]] = r
-    assert not final["ok"]["srm_detected"]
-    assert final["bad"]["srm_detected"]
-    # exact equality with the batch guard on the same rows
-    batch = spark.createDataFrame(rows, "exp string, unit long, treat boolean")
-    for exp in ("ok", "bad"):
-        b = srm_check(batch.filter(F.col("exp") == exp), "treat").collect()[0]
-        s = final[exp]
-        assert (s["n_treat"], s["n_ctrl"], s["chi2_milli"], s["srm_detected"]) == (
-            b["n_treat"], b["n_ctrl"], b["chi2_milli"], b["srm_detected"]
-        )
-
-
-@pytest.mark.slow
-def test_stream_srm_guard_drops_null_assignments(spark, tmp_path):
-    """A NULL treat value must be dropped from BOTH arms (batch parity),
-    not corrupt counts via object-dtype bitwise negation."""
-    from covid_data_pipeline_spark.streaming.stateful import stream_srm_guard
-
-    rows = [("e", i, [True, False, None][i % 3]) for i in range(300)]
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    spark.createDataFrame(
-        rows, "exp string, unit long, treat boolean"
-    ).coalesce(1).write.parquet(str(src_dir / "f.parquet"))
-    stream = spark.readStream.schema(
-        "exp string, unit long, treat boolean"
-    ).parquet(str(src_dir / "*"))
-    q = (
-        stream_srm_guard(stream, ["exp"], "treat")
-        .writeStream.format("memory")
-        .queryName("srmnull")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    r = spark.sql("SELECT * FROM srmnull").collect()[-1]
-    assert (r["n_treat"], r["n_ctrl"]) == (100, 100)
-    assert not r["srm_detected"]
-
-
-@pytest.mark.slow
-def test_stream_maintained_distinct_equals_batch(spark, tmp_path):
-    from covid_data_pipeline_spark.sources.matview import MaterializedDistinct
-    from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
-    from covid_data_pipeline_spark.streaming.pipeline import (
-        stream_maintain_distinct,
-    )
-
-    swh = SnapshotWarehouse(spark, str(tmp_path / "swh"))
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 1)], "grp string, user_id bigint"
-    ).write.parquet(str(src_dir / "f1.parquet"))
-    spark.createDataFrame(
-        [("a", 2), ("a", 3), ("b", 70_000)], "grp string, user_id bigint"
-    ).write.parquet(str(src_dir / "f2.parquet"))
-
-    mvd = MaterializedDistinct(swh, "visits", key_col="user_id", group_cols=["grp"])
-    stream = (
-        spark.readStream.schema("grp string, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = stream_maintain_distinct(stream, mvd, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-    got = {r["grp"]: r["distinct_count"] for r in mvd.read().collect()}
-    full = {
-        r["grp"]: r["n"]
-        for r in swh.read("visits")
-        .groupBy("grp")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert got == full == {"a": 3, "b": 2}
-    assert mvd.refreshed_version() == swh.current_version("visits") >= 2
 
 
 @pytest.mark.slow
@@ -933,8 +226,10 @@ def test_stream_bpe_tokenize_equals_batch(spark, sf_dir, tmp_path):
         (r["left_sym"], r["right_sym"])
         for r in learn_bpe_merges(docs, num_merges=4).collect()
     ]
-    stream_df = file_stream(
-        spark, land, docs.schema, max_files_per_trigger=1
+    stream_df = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(land)
     )
     q = (
         apply_bpe_merges(stream_df, rules)
@@ -955,917 +250,3 @@ def test_stream_bpe_tokenize_equals_batch(spark, sf_dir, tmp_path):
         for r in apply_bpe_merges(spark.read.parquet(land), rules).collect()
     }
     assert got == want and len(want) == docs.count()
-
-
-@pytest.mark.slow
-def test_stream_cusum_matches_batch_on_closed_days(spark, tmp_path):
-    import datetime as dt
-
-    from covid_data_pipeline_spark.operators.temporal import (
-        cusum_changepoints,
-    )
-    from covid_data_pipeline_spark.streaming.stateful import stream_cusum
-
-    counts = [10, 11, 9, 10, 12, 10, 9, 30, 31, 29, 30, 28]
-    rows = []
-    for i, c in enumerate(counts):
-        for j in range(c):
-            rows.append((dt.datetime(2024, 5, 1 + i, 8, j % 60), "x"))
-
-    src_dir = tmp_path / "cusum_src"
-    src_dir.mkdir()
-    # day-ordered micro-batches: days 0-4 / 5-8 / 9-11
-    cuts = [(0, 5), (5, 9), (9, 12)]
-    for n, (lo, hi) in enumerate(cuts):
-        chunk = [r for r in rows if lo <= r[0].day - 1 < hi]
-        spark.createDataFrame(
-            chunk, "ts timestamp, event_type string"
-        ).coalesce(1).write.parquet(str(src_dir / f"f{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_cusum(stream, mu=10.0, sigma=1.0)
-        .writeStream.format("memory")
-        .queryName("cusum_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["day"]: (r["cusum_pos"], r["cusum_neg"], r["breach"])
-        for r in spark.sql("SELECT * FROM cusum_stream").collect()
-    }
-    # every day except the still-open last one must be emitted
-    assert len(got) == len(counts) - 1
-
-    batch = cusum_changepoints(
-        spark.createDataFrame(rows, "ts timestamp, event_type string"),
-        mu=10.0,
-        sigma=1.0,
-    )
-    expected = {
-        r["day"]: (r["cusum_pos"], r["cusum_neg"], r["breach"])
-        for r in batch.collect()
-    }
-    for day, vals in got.items():
-        assert vals == expected[day], day
-    # the planted 3x shift must breach on the stream side too
-    assert any(b for (_, _, b) in got.values())
-
-
-@pytest.mark.slow
-def test_stream_cusum_rejects_out_of_order_days(spark, tmp_path):
-    import datetime as dt
-
-    from covid_data_pipeline_spark.streaming.stateful import stream_cusum
-
-    src_dir = tmp_path / "cusum_bad"
-    src_dir.mkdir()
-    # batch 1 holds days 1-2 (closing day 1); batch 2 replays day 1
-    spark.createDataFrame(
-        [(dt.datetime(2024, 6, 1, 8), "x"), (dt.datetime(2024, 6, 2, 8), "x")],
-        "ts timestamp, event_type string",
-    ).coalesce(1).write.parquet(str(src_dir / "f0.parquet"))
-    spark.createDataFrame(
-        [(dt.datetime(2024, 6, 1, 9), "x")],
-        "ts timestamp, event_type string",
-    ).coalesce(1).write.parquet(str(src_dir / "f1.parquet"))
-
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_cusum(stream, mu=1.0, sigma=1.0)
-        .writeStream.format("memory")
-        .queryName("cusum_bad")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="day-ordered arrival violated"):
-        q.awaitTermination()
-
-
-@pytest.mark.slow
-def test_stream_holt_winters_matches_batch_on_closed_days(spark, tmp_path):
-    import datetime as dt
-
-    from covid_data_pipeline_spark.operators.temporal import (
-        holt_winters_seasonal,
-    )
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_holt_winters,
-    )
-
-    season = {"x": [5, 1, 2, 8, 3, 9, 4], "y": [2, 2, 7, 1, 6, 3, 5]}
-    n_days = 20
-    rows = []
-    for et, s in season.items():
-        for t in range(n_days):
-            cnt = s[t % 7] + t + (3 if et == "y" else 0)
-            for j in range(cnt):
-                rows.append((dt.datetime(2024, 5, 1 + t, 8, j % 60), et))
-
-    src_dir = tmp_path / "hw_src"
-    src_dir.mkdir()
-    # day-ordered micro-batches: days 0-9 / 10-15 / 16-19
-    for n, (lo, hi) in enumerate([(0, 10), (10, 16), (16, 20)]):
-        chunk = [r for r in rows if lo <= r[0].day - 1 < hi]
-        spark.createDataFrame(
-            chunk, "ts timestamp, event_type string"
-        ).coalesce(1).write.parquet(str(src_dir / f"f{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_holt_winters(stream)
-        .writeStream.format("memory")
-        .queryName("hw_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM hw_stream").collect()
-    by_key = {}
-    for r in got:
-        by_key.setdefault(r["event_type"], []).append(r)
-    # closed days = 19 of 20; folds start at day 8 -> 12 emissions/key
-    assert {k: len(v) for k, v in by_key.items()} == {"x": 12, "y": 12}
-
-    # final emitted row per key == batch fit over the closed-day prefix
-    closed = [r for r in rows if r[0].day - 1 < n_days - 1]
-    batch = {
-        r["event_type"]: r
-        for r in holt_winters_seasonal(
-            spark.createDataFrame(closed, "ts timestamp, event_type string")
-        ).collect()
-    }
-    for et, emitted in by_key.items():
-        last = max(emitted, key=lambda r: r["day"])
-        assert last["level"] == batch[et]["level"], et
-        assert last["trend"] == batch[et]["trend"], et
-        assert last["forecast_1"] == batch[et]["forecast_1"], et
-
-
-@pytest.mark.slow
-def test_stream_repair_monotone_matches_batch(spark, tmp_path):
-    import datetime as dt
-
-    from covid_data_pipeline_spark.operators.temporal import (
-        repair_cumulative_monotone,
-    )
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_repair_monotone,
-    )
-
-    reported = [10, 15, 12, 18, 17, 25, 24, 30]
-    rows = [
-        ("k", dt.date(2024, 7, 1 + i), v) for i, v in enumerate(reported)
-    ] + [("z", dt.date(2024, 7, 1), 5)]
-
-    src_dir = tmp_path / "repair_src"
-    src_dir.mkdir()
-    for n, (lo, hi) in enumerate([(0, 3), (3, 6), (6, 9)]):
-        spark.createDataFrame(
-            rows[lo:hi], "event_type string, day date, reported long"
-        ).coalesce(1).write.parquet(str(src_dir / f"f{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("event_type string, day date, reported long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_repair_monotone(stream)
-        .writeStream.format("memory")
-        .queryName("repair_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["event_type"], str(r["day"])): (
-            r["reported"], r["repaired"], r["was_corrected"]
-        )
-        for r in spark.sql("SELECT * FROM repair_stream").collect()
-    }
-    assert len(got) == len(rows)  # every reading emitted exactly once
-
-    batch = repair_cumulative_monotone(
-        spark.createDataFrame(
-            rows, "event_type string, day date, reported long"
-        ),
-        keys=["event_type"], day_col="day", cum_col="reported",
-    )
-    expected = {
-        (r["event_type"], str(r["day"])): (
-            r["reported"], r["repaired"], r["was_corrected"]
-        )
-        for r in batch.collect()
-    }
-    assert got == expected
-    assert got[("k", "2024-07-03")] == (12, 15, True)
-
-
-@pytest.mark.slow
-def test_stream_markov_counts_matches_batch(spark, tmp_path):
-    """Summed per-user streaming transition counts on closed data must
-    equal the batch LAG estimator exactly, including transitions that
-    span a micro-batch boundary (carried last-type state)."""
-    from pyspark.sql.window import Window
-
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_markov_counts,
-    )
-
-    types = ["view", "click", "purchase"]
-    rows = []
-    eid = 0
-    for uid in range(30):
-        for i in range(20):
-            # deterministic pseudo-random walk; ts strictly increasing
-            # per user so the batch LAG order is unambiguous
-            t = types[(uid * 7 + i * i) % 3]
-            rows.append((uid, eid, f"2024-01-01 00:{i:02d}:00", t))
-            eid += 1
-    schema = "user_id bigint, event_id bigint, ts_s string, event_type string"
-    src_dir = tmp_path / "mkv"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, schema).withColumn(
-            "ts", F.to_timestamp("ts_s")
-        ).drop("ts_s").coalesce(1).write.parquet(
-            str(src_dir / f"b{i}.parquet")
-        )
-
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, event_id bigint, ts timestamp"
-            ", event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_markov_counts(stream)
-        .writeStream.format("memory")
-        .queryName("mkv")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.sql("SELECT * FROM mkv").collect()
-    # keyed upsert: latest (max n_trans) snapshot per user, then sum
-    latest: dict = {}
-    for r in got:
-        cur = latest.get(r["user_id"])
-        if cur is None or r["n_trans"] > cur[0]["n_trans"]:
-            latest[r["user_id"]] = [r]
-        elif r["n_trans"] == cur[0]["n_trans"]:
-            latest[r["user_id"]].append(r)
-    stream_counts: dict = {}
-    for rs in latest.values():
-        for r in rs:
-            k = (r["prev_type"], r["next_type"])
-            stream_counts[k] = stream_counts.get(k, 0) + r["c"]
-
-    batch = spark.createDataFrame(rows, schema).withColumn(
-        "ts", F.to_timestamp("ts_s")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    bc = (
-        batch.select(
-            F.lag("event_type").over(w).alias("prev_type"),
-            F.col("event_type").alias("next_type"),
-        )
-        .where(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "next_type")
-        .count()
-        .collect()
-    )
-    batch_counts = {
-        (r["prev_type"], r["next_type"]): r["count"] for r in bc
-    }
-    assert stream_counts == batch_counts
-    assert sum(batch_counts.values()) == 30 * 19
-
-
-@pytest.mark.slow
-def test_stream_mann_whitney_matches_batch(spark, tmp_path):
-    """The drained streaming rank-sum monitor's final integers must be
-    bit-identical to the batch mann_whitney_u on the same rows,
-    including values and transitions split across micro-batches."""
-    from covid_data_pipeline_spark.operators.experiment import mann_whitney_u
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_mann_whitney,
-    )
-
-    rows = []
-    for i in range(1200):
-        treat = i % 2 == 1
-        # planted +7 shift on the treated arm over a 0..49 base
-        rows.append(("exp_a", (i * 13) % 50 + (7 if treat else 0), treat))
-        rows.append(("exp_b", (i * 29) % 50, treat))  # no shift
-    src_dir = tmp_path / "mw_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (
-        ("f1", rows[:third]),
-        ("f2", rows[third : 2 * third]),
-        ("f3", rows[2 * third :]),
-    ):
-        spark.createDataFrame(
-            chunk, "exp string, value_cents long, treat boolean"
-        ).coalesce(1).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("exp string, value_cents long, treat boolean")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_mann_whitney(stream, ["exp"], "treat", "value_cents")
-        .writeStream.format("memory")
-        .queryName("mw")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM mw").collect()
-    final = {}
-    for r in got:
-        if r["exp"] not in final or r["n_seen"] > final[r["exp"]]["n_seen"]:
-            final[r["exp"]] = r
-    batch = spark.createDataFrame(
-        rows, "exp string, value_cents long, treat boolean"
-    )
-    for exp in ("exp_a", "exp_b"):
-        b = mann_whitney_u(
-            batch.filter(F.col("exp") == exp), "treat", "value_cents"
-        ).collect()[0]
-        s = final[exp]
-        assert (s["n_treat"], s["n_ctrl"], s["u2_treat"]) == (
-            b["n_treat"], b["n_ctrl"], b["u2_treat"]
-        ), exp
-    # the planted shift is visible in the doubled U (auc > 0.5 <=> u2 > nt*nc)
-    a = final["exp_a"]
-    assert a["u2_treat"] > a["n_treat"] * a["n_ctrl"]
-
-
-@pytest.mark.slow
-def test_stream_hll_matches_batch_sketch(spark, tmp_path):
-    """The drained streaming HLL's (pres, s_hi, s_lo) must be
-    bit-identical to the batch portable sketch on the same rows, with
-    keys split across micro-batches (register MAX-merge is
-    order/batching-invariant)."""
-    from covid_data_pipeline_spark.operators.sketches import (
-        _TWO61,
-        hll_registers,
-    )
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_hll_distinct,
-    )
-
-    rows = [("g%d" % (i % 2), (i * 7) % 900) for i in range(3000)]
-    src_dir = tmp_path / "hll_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (
-        ("f1", rows[:third]),
-        ("f2", rows[third : 2 * third]),
-        ("f3", rows[2 * third :]),
-    ):
-        spark.createDataFrame(chunk, "g string, uid long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("g string, uid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_hll_distinct(stream, ["g"], "uid", p=10)
-        .writeStream.format("memory")
-        .queryName("hllq")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM hllq").collect()
-    final = {}
-    for r in got:
-        if r["g"] not in final or r["n_seen"] > final[r["g"]]["n_seen"]:
-            final[r["g"]] = r
-
-    batch = spark.createDataFrame(rows, "g string, uid long")
-    reg = hll_registers(batch, "uid", ["g"], p=10)
-    m = 1 << 10
-    by_g = {}
-    for r in reg.collect():
-        by_g.setdefault(r["g"], {})[r["bucket"]] = r["rho"]
-    for g, regs in by_g.items():
-        s = sum(1 << (61 - rho) for rho in regs.values())
-        s += (m - len(regs)) * _TWO61
-        st = final[g]
-        assert (st["pres"], st["s_hi"], st["s_lo"]) == (
-            len(regs), s >> 62, s & ((1 << 62) - 1)
-        ), g
-        assert st["n_seen"] == 1500
-
-
-@pytest.mark.slow
-def test_stream_interval_union_matches_batch_merge(spark, tmp_path):
-    """The drained streaming interval union (max-seq rows per key) must
-    equal operators/intervals.merge_intervals on the same rows, with
-    intervals scattered across micro-batches in NON-time order (the
-    fold is associative/commutative, so batching cannot matter)."""
-    from covid_data_pipeline_spark.operators.intervals import (
-        merge_intervals,
-    )
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_interval_union,
-    )
-
-    rows = []
-    for i in range(600):
-        k = "k%d" % (i % 3)
-        s = (i * 377) % 5000          # scrambled arrival order
-        rows.append((k, s, s + 40))
-    src_dir = tmp_path / "iv_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (
-        ("f1", rows[:third]),
-        ("f2", rows[third : 2 * third]),
-        ("f3", rows[2 * third :]),
-    ):
-        spark.createDataFrame(chunk, "k string, s long, e long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("k string, s long, e long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_interval_union(stream, ["k"], "s", "e")
-        .writeStream.format("memory")
-        .queryName("ivq")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got_rows = spark.sql("SELECT * FROM ivq").collect()
-    max_seq = {}
-    for r in got_rows:
-        max_seq[r["k"]] = max(max_seq.get(r["k"], 0), r["seq"])
-    got = sorted(
-        (r["k"], r["island_no"], r["s"], r["e"], r["n_source"])
-        for r in got_rows
-        if r["seq"] == max_seq[r["k"]]
-    )
-    batch = spark.createDataFrame(rows, "k string, s long, e long")
-    want = sorted(
-        (r["k"], r["island_no"], r["s"], r["e"], r["n_source"])
-        for r in merge_intervals(batch, ["k"], "s", "e").collect()
-    )
-    assert got == want and len(want) > 3
-
-
-@pytest.mark.slow
-def test_stream_ams_matches_batch_signed_sums(spark, tmp_path):
-    """The drained streaming AMS state (max-seq signed sums per group)
-    must square to the batch sketch's x values on the same rows —
-    addition is commutative/associative, so micro-batch splits can't
-    matter."""
-    from covid_data_pipeline_spark.operators.sketches import ams_f2_sketch
-    from covid_data_pipeline_spark.streaming.stateful import stream_ams_f2
-
-    rows = [("g%d" % (i % 2), (i * 13) % 400) for i in range(3000)]
-    src_dir = tmp_path / "ams_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (
-        ("f1", rows[:third]),
-        ("f2", rows[third : 2 * third]),
-        ("f3", rows[2 * third :]),
-    ):
-        spark.createDataFrame(chunk, "g string, uid long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("g string, uid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_ams_f2(stream, ["g"], "uid", depth=8)
-        .writeStream.format("memory")
-        .queryName("amsq")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got_rows = spark.sql("SELECT * FROM amsq").collect()
-    final = {}
-    for r in got_rows:
-        if r["g"] not in final or r["seq"] > final[r["g"]]["seq"]:
-            final[r["g"]] = r
-    batch = spark.createDataFrame(rows, "g string, uid long")
-    want = {
-        (r["g"], r["j"]): int(r["x"])
-        for r in ams_f2_sketch(batch, "uid", group_cols=["g"], depth=8)
-        .collect()
-    }
-    assert len(final) == 2
-    for g, r in final.items():
-        assert r["n_seen"] == 1500
-        for j, s in enumerate(r["s"]):
-            assert int(s) * int(s) == want[(g, j)], (g, j)
-
-
-@pytest.mark.slow
-def test_stream_cm_sketch_matches_batch_counters(spark, tmp_path):
-    """The drained streaming CM state must equal the batch sketch's
-    (d, slot, cnt) relation exactly — counters are additive, so the
-    3-file micro-batch split cannot matter — and feed cm_inner_product
-    unchanged."""
-    from covid_data_pipeline_spark.operators.sketches import cm_sketch
-    from covid_data_pipeline_spark.streaming.stateful import stream_cm_sketch
-
-    rows = [("g%d" % (i % 2), (i * 17) % 300) for i in range(3000)]
-    src_dir = tmp_path / "cm_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (
-        ("f1", rows[:third]),
-        ("f2", rows[third : 2 * third]),
-        ("f3", rows[2 * third :]),
-    ):
-        spark.createDataFrame(chunk, "g string, uid long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("g string, uid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_cm_sketch(stream, ["g"], "uid", depth=4, width=64)
-        .writeStream.format("memory")
-        .queryName("cmq")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got_rows = spark.sql("SELECT * FROM cmq").collect()
-    final = {}
-    for r in got_rows:
-        if r["g"] not in final or r["seq"] > final[r["g"]]["seq"]:
-            final[r["g"]] = r
-    batch = spark.createDataFrame(rows, "g string, uid long")
-    want = {
-        (r["g"], r["d"], r["slot"]): int(r["cnt"])
-        for r in cm_sketch(
-            batch, "uid", group_cols=["g"], depth=4, width=64
-        ).collect()
-    }
-    assert len(final) == 2
-    for g, r in final.items():
-        assert r["n_seen"] == 1500
-        for j in range(4):
-            for slot in range(64):
-                assert r["counters"][j * 64 + slot] == want.get(
-                    (g, j, slot), 0
-                ), (g, j, slot)
-
-
-@pytest.mark.slow
-def test_stream_cm_sketch_through_medallion_bridge(spark, tmp_path):
-    """VERDICT r8 ask #7: drive stream_cm_sketch through the
-    foreachBatch medallion bridge like the other stateful ops — the
-    stateful stream's per-group updates dynamic-partition-overwrite a
-    warehouse table keyed by group, so after the drain the table holds
-    each group's LATEST counter state, which must equal the batch
-    sketch counter-for-counter."""
-    from covid_data_pipeline_spark.operators.sketches import cm_sketch
-    from covid_data_pipeline_spark.streaming.stateful import stream_cm_sketch
-
-    rows = [("g%d" % (i % 3), (i * 29) % 500) for i in range(3000)]
-    src_dir = tmp_path / "cm_src2"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (
-        ("f1", rows[:third]),
-        ("f2", rows[third : 2 * third]),
-        ("f3", rows[2 * third :]),
-    ):
-        spark.createDataFrame(chunk, "g string, uid long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    wh = Warehouse(spark, str(tmp_path / "wh_cm"))
-    stream = (
-        spark.readStream.schema("g string, uid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    updates = stream_cm_sketch(stream, ["g"], "uid", depth=4, width=64)
-    q = stream_transform_to_table(
-        updates,
-        transform=lambda df: df,
-        wh=wh,
-        table="serve.cm_state",
-        checkpoint_dir=str(tmp_path / "ckpt_cm"),
-        partition_by=["g"],
-    )
-    _drain(q)
-
-    got = {r["g"]: r for r in wh.read("serve.cm_state").collect()}
-    batch = spark.createDataFrame(rows, "g string, uid long")
-    want = {
-        (r["g"], r["d"], r["slot"]): int(r["cnt"])
-        for r in cm_sketch(
-            batch, "uid", group_cols=["g"], depth=4, width=64
-        ).collect()
-    }
-    assert len(got) == 3
-    for g, r in got.items():
-        assert r["n_seen"] == 1000
-        for j in range(4):
-            for slot in range(64):
-                assert r["counters"][j * 64 + slot] == want.get(
-                    (g, j, slot), 0
-                ), (g, j, slot)
-
-
-@pytest.mark.slow
-def test_stream_psi_matches_batch_formula(spark, tmp_path):
-    """20th stateful op: PSI drift monitor. The drained per-group
-    state must equal the whole-input Python recomputation exactly
-    (additive counts -> micro-batch split invariant), the psi term
-    arithmetic must match the batch events_psi_drift formula, and a
-    planted shifted group must cross the 0.1 drift threshold while an
-    in-distribution group must not."""
-    import math
-
-    from covid_data_pipeline_spark.streaming.stateful import stream_psi
-
-    bins = 10
-    # reference histogram: uniform for both groups
-    ref = {"stable": [100] * bins, "shifted": [100] * bins}
-    # stable group draws uniform bins; shifted group piles into bin 10
-    rows = [("stable", (i % bins) + 1) for i in range(600)] + [
-        ("shifted", 10 if i % 4 else 1) for i in range(600)
-    ]
-    src_dir = tmp_path / "psi_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (("f1", rows[:third]), ("f2", rows[third:2 * third]),
-                     ("f3", rows[2 * third:])):
-        spark.createDataFrame(chunk, "g string, bin long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("g string, bin long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_psi(stream, ["g"], "bin", ref, bins=bins)
-        .writeStream.format("memory")
-        .queryName("psiq")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_psi"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = {}
-    for r in spark.sql("SELECT * FROM psiq").collect():
-        if r["g"] not in final or r["seq"] > final[r["g"]]["seq"]:
-            final[r["g"]] = r
-
-    def psi_nano(rc, counts):
-        # half-away-from-zero per term, matching SQL ROUND (ADVICE r9)
-        nr, nc = sum(rc), sum(counts)
-        total = 0
-        for r, c in zip(rc, counts):
-            p = (r + 0.5) / (nr + bins * 0.5)
-            q2 = (c + 0.5) / (nc + bins * 0.5)
-            t = (p - q2) * math.log(p / q2) * 1e9
-            total += int(math.floor(t + 0.5) if t >= 0
-                         else math.ceil(t - 0.5))
-        return total
-
-    assert set(final) == {"stable", "shifted"}
-    for g in final:
-        want_counts = [0] * bins
-        for gg, b in rows:
-            if gg == g:
-                want_counts[b - 1] += 1
-        r = final[g]
-        assert list(r["counts"]) == want_counts, g
-        assert r["n_seen"] == 600
-        assert r["psi_nano"] == psi_nano(ref[g], want_counts), g
-    assert not final["stable"]["drifted"]
-    assert final["shifted"]["drifted"]
-    assert final["shifted"]["psi_nano"] > 100_000_000
-
-
-@pytest.mark.slow
-def test_stream_psi_through_medallion_bridge(spark, tmp_path):
-    """VERDICT r9 ask #6: drive stream_psi through the foreachBatch
-    medallion bridge like stream_cm_sketch — per-group PSI updates
-    dynamic-partition-overwrite a warehouse table keyed by group, so
-    after the drain the serving table holds each group's LATEST drift
-    state, which must match the whole-input recomputation and the
-    planted drift verdicts."""
-    import math
-
-    from covid_data_pipeline_spark.streaming.stateful import stream_psi
-
-    bins = 10
-    ref = {"stable": [100] * bins, "shifted": [100] * bins}
-    rows = [("stable", (i % bins) + 1) for i in range(600)] + [
-        ("shifted", 10 if i % 4 else 1) for i in range(600)
-    ]
-    src_dir = tmp_path / "psi_src2"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (("f1", rows[:third]), ("f2", rows[third:2 * third]),
-                     ("f3", rows[2 * third:])):
-        spark.createDataFrame(chunk, "g string, bin long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    wh = Warehouse(spark, str(tmp_path / "wh_psi"))
-    stream = (
-        spark.readStream.schema("g string, bin long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    updates = stream_psi(stream, ["g"], "bin", ref, bins=bins)
-    q = stream_transform_to_table(
-        updates,
-        transform=lambda df: df,
-        wh=wh,
-        table="serve.psi_state",
-        checkpoint_dir=str(tmp_path / "ckpt_psi2"),
-        partition_by=["g"],
-    )
-    _drain(q)
-
-    got = {r["g"]: r for r in wh.read("serve.psi_state").collect()}
-    assert set(got) == {"stable", "shifted"}
-
-    def psi_nano(rc, counts):
-        nr, nc = sum(rc), sum(counts)
-        total = 0
-        for r, c in zip(rc, counts):
-            p = (r + 0.5) / (nr + bins * 0.5)
-            q2 = (c + 0.5) / (nc + bins * 0.5)
-            t = (p - q2) * math.log(p / q2) * 1e9
-            total += int(math.floor(t + 0.5) if t >= 0
-                         else math.ceil(t - 0.5))
-        return total
-
-    for g, r in got.items():
-        want_counts = [0] * bins
-        for gg, b in rows:
-            if gg == g:
-                want_counts[b - 1] += 1
-        assert list(r["counts"]) == want_counts, g
-        assert r["n_seen"] == 600
-        assert r["psi_nano"] == psi_nano(ref[g], want_counts), g
-    assert not got["stable"]["drifted"]
-    assert got["shifted"]["drifted"]
-
-
-def test_stream_psi_rejects_bad_config(spark):
-    from covid_data_pipeline_spark.streaming.stateful import stream_psi
-
-    df = spark.createDataFrame([("g", 1)], "g string, bin long")
-    with pytest.raises(ValueError):
-        stream_psi(df, ["g"], "bin", {"g": [1]}, bins=1)
-    with pytest.raises(ValueError):
-        stream_psi(df, ["g"], "bin", {"g": [1, 2, 3]}, bins=10)
-
-
-@pytest.mark.slow
-def test_stream_wasserstein_matches_batch_formula(spark, tmp_path):
-    """22nd stateful op: W1 drift monitor. Drained per-group counts
-    must equal the whole-input recomputation (additive state ->
-    micro-batch split invariant); w1_micro must equal the exact
-    integer CDF-gap formula; a one-bin shift and a nine-bin shift of
-    the same mass must differ ~9x (the distance semantics PSI cannot
-    see); the in-distribution group must not drift."""
-    from covid_data_pipeline_spark.streaming.stateful import (
-        stream_wasserstein,
-    )
-
-    bins = 10
-    ref = {g: [100] * bins for g in ("stable", "near", "far")}
-    # all groups start uniform (60 per bin); near moves 40 bin-1 rows
-    # ONE bin right, far moves the same 40 rows NINE bins right — same
-    # moved mass, 9x the distance, so W1 must differ exactly 9x
-    def uniform():
-        return [(i % bins) + 1 for i in range(600)]
-
-    def moved(dest):
-        out, moved_n = [], 0
-        for b in uniform():
-            if b == 1 and moved_n < 40:
-                out.append(dest)
-                moved_n += 1
-            else:
-                out.append(b)
-        return out
-
-    rows = (
-        [("stable", b) for b in uniform()]
-        + [("near", b) for b in moved(2)]
-        + [("far", b) for b in moved(10)]
-    )
-    src_dir = tmp_path / "w1_src"
-    src_dir.mkdir()
-    third = len(rows) // 3
-    for n, chunk in (("f1", rows[:third]), ("f2", rows[third:2 * third]),
-                     ("f3", rows[2 * third:])):
-        spark.createDataFrame(chunk, "g string, bin long").coalesce(
-            1
-        ).write.parquet(str(src_dir / f"{n}.parquet"))
-
-    stream = (
-        spark.readStream.schema("g string, bin long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir / "*"))
-    )
-    q = (
-        stream_wasserstein(stream, ["g"], "bin", ref, bins=bins)
-        .writeStream.format("memory")
-        .queryName("w1q")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_w1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = {}
-    for r in spark.sql("SELECT * FROM w1q").collect():
-        if r["g"] not in final or r["seq"] > final[r["g"]]["seq"]:
-            final[r["g"]] = r
-
-    def w1_micro(rc, counts):
-        nr, nc = sum(rc), sum(counts)
-        num = cr = cc = 0
-        for r, c in zip(rc[:-1], counts[:-1]):
-            cr += r
-            cc += c
-            num += abs(cr * nc - cc * nr)
-        return (1_000_000 * num) // (nr * nc)
-
-    assert set(final) == {"stable", "near", "far"}
-    for g in final:
-        want = [0] * bins
-        for gg, b in rows:
-            if gg == g:
-                want[b - 1] += 1
-        assert list(final[g]["counts"]) == want, g
-        assert final[g]["n_seen"] == 600
-        assert final[g]["w1_micro"] == w1_micro(ref[g], want), g
-    assert not final["stable"]["drifted"]
-    assert final["stable"]["w1_micro"] == 0
-    # the same moved mass at 9x the distance -> exactly 9x the W1:
-    # 40/600 of a bin vs 9*40/600
-    near, far = final["near"]["w1_micro"], final["far"]["w1_micro"]
-    assert near == 66_666 and far == 600_000  # floor(1e6*40/600), x9
-    assert not final["near"]["drifted"] and final["far"]["drifted"]

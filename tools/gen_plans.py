@@ -62,7 +62,7 @@ NOTES = {
     "strip_duplicate_spans_docs": "Two gram-keyed shuffles (distinct doc-gram collapse -> df count; hot-start regroup); the gram projection is recomputed per consumer rather than materialized (cheap codegen map beats persisting the token-mass explode); interval merge + token filtering are in-row HOFs - per-token rows never shuffle.",
     "knn_graph_lsh": "Both-sides-large candidate generation restricted to LSH bucket collisions (work ~ sum of bucket^2, hot buckets capped), scored in a COGROUPED Arrow task per bucket: numpy accumulates every pair's dot dim-sequentially (bitwise equal to the HOF fold - shared oracle), emits a margin-pruned per-src superset of the rounded top-k, and the downstream WindowGroupLimit sees <= (k+ties) rows per (src,bucket) instead of the full fan-out. 12x at 100k vectors vs the per-pair interpreted fold.",
     "similarity_topk_pq": "Codebook training shuffles codebook-sized partial sums only (Arrow batches pre-combine); encode is a zero-shuffle Arrow map; ADC search scans the 32x-compressed code column with per-batch top-k so the window sees O(batches x queries x k) rows; the shortlist rides a broadcast into the exact re-rank join - the full-precision corpus is probed, never scanned.",
-    "similarity_topk_pq_pretrained": "Same encode+ADC+rerank plan as the cold PQ query minus the training jobs (codebooks memoized per corpus, the save_ann_model warehouse pattern) - the steady-state number a serving workload pays.",
+    "similarity_topk_pq_pretrained": "Same encode+ADC+rerank plan as the cold PQ query minus the training jobs (codebooks memoized per corpus) - the steady-state number a serving workload pays.",
     "bitext_margin_pairs_lsh": "LSH bucket candidates (sum of bucket^2, hot buckets capped) scored by the cogrouped Arrow scorer replace the quadratic exact graph; the margin miner downstream is bounded by the EDGE LIST either way. Mining cost is bounded by the kNN EDGE LIST, never the vectors: the compact edge projection and the per-node best relation are lineage-cut (r10) so the graph builds ONCE for totals/scored/mutuality consumers; per-node totals re-enter via two node-keyed hash joins; rank-1 windows see <= k rows per key. Swap in knn_graph_lsh edges and the same plan mines a billion-pair graph.",
     "events_mad_outliers": "Domain compression: both medians are selected from the distinct-value COUNT relation (|groups x distinct cents| rows), so no stage sorts or windows raw events; the per-group (median, MAD) pair re-enters through one group-keyed join for a map-side flag.",
     "bm25_search_docs": "One token shuffle builds the posting relation; query terms explode, dedupe and BROADCAST against it; document frequencies are computed over postings semi-joined to the query vocabulary (never |vocab|-wide). Post-match shuffles carry matched postings only; integer-ratio scoring keeps everything codegen'd JVM-side.",
