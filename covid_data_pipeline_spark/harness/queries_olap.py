@@ -1819,7 +1819,7 @@ def zorder_locality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout diagnostics: Morton-interleave each order's
     (order-day, customer-bucket) coordinates
     (`operators/scale.py::morton_key` — the sort key
-    `write_zordered` lays files out by) and report per z-range-bucket
+    `SnapshotWarehouse.compact(zorder_by=...)` lays files out by) and report per z-range-bucket
     row counts and min/max extents on BOTH dimensions. Tight extents
     on both axes are exactly why a z-ordered table prunes row groups
     for predicates on EITHER column, where a lexicographic

@@ -31,11 +31,9 @@ from covid_data_pipeline_spark.operators.multimodal import (
 from covid_data_pipeline_spark.operators.similarity import (
     cosine_topk_bruteforce,
     cosine_topk_bruteforce_np,
-    cosine_topk_ivf,  # noqa: F401 — float path kept as public API
     cosine_topk_ivf_lattice,
     cosine_topk_lsh,
     embedding_neardup_pairs,
-    train_centroids,  # noqa: F401 — float path kept as public API
 )
 
 EMBED_DIM = 64

@@ -15,7 +15,7 @@ hash. Window ORDER BYs always carry a unique tiebreaker column.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 

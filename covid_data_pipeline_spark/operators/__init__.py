@@ -28,7 +28,6 @@ from covid_data_pipeline_spark.operators.sampling import (
 from covid_data_pipeline_spark.operators.scale import (
     salted_join,
     salted_sum,
-    write_bucketed,
 )
 from covid_data_pipeline_spark.operators.similarity import (
     cosine_topk_bruteforce,
@@ -65,7 +64,6 @@ __all__ = [
     "semi_join",
     "salted_join",
     "salted_sum",
-    "write_bucketed",
     "cosine_topk_bruteforce",
     "cosine_topk_bruteforce_np",
     "cosine_topk_ivf",

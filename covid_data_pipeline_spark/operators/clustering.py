@@ -45,7 +45,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from pyspark.sql.window import Window
 
 _CENT_SCHEMA = StructType(
     [

@@ -212,8 +212,7 @@ def _banded(
     portable: bool = False,
 ) -> DataFrame:
     """(id, band_idx, band_hash) rows: the signature split into band
-    hashes — shared by the batch and incremental candidate generators
-    so both sides of an incremental join bucket identically.
+    hashes.
 
     ``portable=True`` folds each band as ``acc = (acc*31 + v) mod M``
     (seeded with the band index, M < 2^58 so the fold is ANSI-safe) —
@@ -761,66 +760,6 @@ def passage_dedup(
     )
 
 
-def incremental_lsh_pairs(
-    corpus_signed: DataFrame,
-    delta_signed: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
-    """Candidate pairs involving AT LEAST ONE delta document: the
-    incremental-maintenance form of :func:`lsh_candidate_pairs`.
-
-    A daily curation run should not re-compare yesterday's corpus with
-    itself — at 100 TB that is the whole cost. Signatures are computed
-    once per document and persisted (``with_minhash`` output is a plain
-    table); each increment bands ONLY the delta and joins it against
-    the banded union, so work per day is O(|delta| x bucket sizes)
-    while corpus-internal pairs (already known from previous runs) are
-    never regenerated. Union of the historical pairs and each
-    increment's pairs equals a from-scratch run — asserted exactly in
-    tests.
-
-    Broadcast bound: the ``ids`` relation below is |delta|-sized — the
-    operator's contract is |delta| << |corpus| (a daily increment). A
-    bulk BACKFILL delta breaks that bound; route those through the
-    from-scratch :func:`lsh_candidate_pairs` instead of forcing a
-    corpus-sized broadcast through this path.
-    """
-    ids = delta_signed.select(F.col(id_col).alias("__delta_id")).distinct()
-    all_signed = corpus_signed.select(id_col, "minhash").unionByName(
-        delta_signed.select(id_col, "minhash")
-    )
-    banded_all = _banded(all_signed, id_col, num_hashes, bands)
-    if max_bucket_size is not None:
-        w = Window.partitionBy("band_idx", "band_hash")
-        banded_all = (
-            banded_all.withColumn("__bsz", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bsz") <= max_bucket_size)
-            .drop("__bsz")
-        )
-    banded_delta = banded_all.join(
-        # bcast: delta incremental-batch ids (|delta| contract documented above; bulk backfills route to from-scratch)
-        F.broadcast(ids), banded_all[id_col] == ids["__delta_id"]
-    ).drop("__delta_id")
-    l, r = banded_delta.alias("l"), banded_all.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("id_b"),
-        )
-        .distinct()
-    )
-    return pairs
-
-
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -893,66 +832,6 @@ def containment_pairs(
             F.col("n").alias("n_a"),
         )
     )
-
-
-def optimal_lsh_params(
-    threshold: float,
-    num_hashes: int,
-    fp_weight: float = 0.5,
-    integration_steps: int = 1000,
-) -> tuple[int, int]:
-    """Pick the banding ``(bands, rows_per_band)`` that minimizes the
-    weighted false-positive/false-negative mass of the MinHash-LSH
-    S-curve for a target Jaccard ``threshold`` (the datasketch
-    ``_optimal_param`` construction, public knowledge from Leskovec et
-    al., *Mining of Massive Datasets* §3.4).
-
-    For a pair with true similarity s, banded LSH with b bands of r
-    rows collides with probability ``1 − (1 − s^r)^b``. The tuner
-    integrates that curve's false-positive area below the threshold and
-    false-negative area above it (midpoint rule, ``integration_steps``
-    slices — deterministic, driver-side, microseconds) for every
-    ``b·r ≤ num_hashes`` and returns the argmin of
-    ``fp_weight·FP + (1−fp_weight)·FN``.
-
-    Raise ``fp_weight`` when verification (exact Jaccard on candidate
-    pairs) is expensive and spurious candidates hurt; lower it when
-    missing a true duplicate is the costlier error (e.g. dedup before
-    a training run, where a miss leaks a duplicate into the corpus).
-
-    Use it to size :func:`minhash_dedup` /
-    :func:`lsh_candidate_pairs`::
-
-        bands, _r = optimal_lsh_params(0.8, num_hashes=128)
-        minhash_dedup(docs, num_hashes=128, bands=bands, threshold=0.8)
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-
-    def _fp(b: int, r: int) -> float:
-        area = 0.0
-        step = threshold / integration_steps
-        for i in range(integration_steps):
-            s = (i + 0.5) * step
-            area += (1.0 - (1.0 - s**r) ** b) * step
-        return area
-
-    def _fn(b: int, r: int) -> float:
-        area = 0.0
-        step = (1.0 - threshold) / integration_steps
-        for i in range(integration_steps):
-            s = threshold + (i + 0.5) * step
-            area += (1.0 - (1.0 - s**r) ** b) * step
-        return (1.0 - threshold) - area
-
-    best, best_cost = None, None
-    for b in range(1, num_hashes + 1):
-        for r in range(1, num_hashes // b + 1):
-            cost = fp_weight * _fp(b, r) + (1.0 - fp_weight) * _fn(b, r)
-            if best_cost is None or cost < best_cost:
-                best, best_cost = (b, r), cost
-    assert best is not None
-    return best
 
 
 def sortkey_prefix7(text_col: Column | str) -> Column:

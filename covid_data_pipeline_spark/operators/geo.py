@@ -35,15 +35,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 __all__ = [
     "grid_cells",
     "cell_density",
     "zorder_key",
     "hilbert_key",
-    "hilbert_keys_np",
-    "write_hilbert",
     "haversine_meters",
     "radius_pairs",
     "radius_join",
@@ -783,95 +780,3 @@ def hilbert_key(x_col: str, y_col: str, bits: int = 18) -> Column:
     return F.when(
         cx.isNull() | cy.isNull(), F.lit(None).cast("long")
     ).otherwise(F.aggregate(sizes, init, step, lambda acc: acc["d"]))
-
-
-def hilbert_keys_np(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bits: int = 18,
-    out_col: str = "hkey",
-) -> DataFrame:
-    """Arrow-vectorized twin of :func:`hilbert_key` for WRITE-path
-    volume: the identical xy2d state machine run as numpy int64 bit
-    ops over whole record batches (one mapInArrow pass, ~10x the
-    interpreted fold's throughput at 16M points) — exact integer
-    arithmetic, so the keys are bit-identical to the fold's
-    (asserted in tests/test_geo.py). Use the fold in oracle-verified
-    queries (SQL-replayable); use this when clustering terabytes.
-
-    Null contract: rows with a NULL coordinate get a NULL key (numpy
-    path computes on 0-filled copies, then masks back)."""
-    if not 1 <= bits <= 31:
-        raise ValueError(f"bits must be in [1, 31], got {bits}")
-    import pyarrow as pa
-
-    in_fields = df.schema.fieldNames()
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(out_col, LongType(), True)]
-    )
-
-    def fn(batches):
-        import numpy as np
-
-        for batch in batches:
-            tbl = pa.table(batch)
-            xr = tbl.column(x_col).to_numpy(zero_copy_only=False)
-            yr = tbl.column(y_col).to_numpy(zero_copy_only=False)
-            null_mask = pa.compute.or_(
-                pa.compute.is_null(tbl.column(x_col)),
-                pa.compute.is_null(tbl.column(y_col)),
-            ).to_numpy(zero_copy_only=False)
-            x = np.nan_to_num(
-                np.asarray(xr, dtype="float64"), nan=0.0
-            ).astype(np.int64)
-            y = np.nan_to_num(
-                np.asarray(yr, dtype="float64"), nan=0.0
-            ).astype(np.int64)
-            d = np.zeros(len(x), dtype=np.int64)
-            s = np.int64(1 << (bits - 1))
-            while s > 0:
-                rx = ((x & s) > 0).astype(np.int64)
-                ry = ((y & s) > 0).astype(np.int64)
-                d += s * s * ((3 * rx) ^ ry)
-                swap = ry == 0
-                flip = swap & (rx == 1)
-                xf = np.where(flip, s - 1 - x, x)
-                yf = np.where(flip, s - 1 - y, y)
-                x = np.where(swap, yf, xf)
-                y = np.where(swap, xf, yf)
-                s >>= 1
-            out = pa.array(d, type=pa.int64(), mask=null_mask)
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(c).combine_chunks() for c in in_fields]
-                + [out],
-                names=in_fields + [out_col],
-            )
-
-    return df.mapInArrow(fn, out_schema)
-
-
-def write_hilbert(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    num_files: int = 8,
-    bits: int = 18,
-) -> None:
-    """Write parquet Hilbert-ordered on two dimensions — the twin of
-    `operators/scale.py::write_zordered` on the tighter-locality
-    curve: range-partition by the vectorized Hilbert key (balanced
-    files via range-exchange sampling), sort within each file, drop
-    the key. Consecutive Hilbert indices are always 4-neighbors, so
-    per-file (x, y) zone-map extents come out tighter than Morton's
-    at the same file count."""
-    keyed = hilbert_keys_np(df, x_col, y_col, bits=bits, out_col="__h")
-    (
-        keyed.repartitionByRange(num_files, "__h")
-        .sortWithinPartitions("__h")
-        .drop("__h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -26,7 +26,7 @@ item domain; this shuffles ``≤ k × partitions`` candidate rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -1,10 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns.
 
 The Spark-side contract is real and tested: schema (binary payload +
-typed metadata struct), Arrow-batched ``mapInPandas`` operators with
-bounded batch sizes, partition-count preservation, and deterministic
-fake decoders where the actual media libraries (PIL/ffmpeg/torchaudio)
-are unavailable in this environment.
+typed metadata struct), Arrow-batched ``mapInPandas`` operators,
+partition-count preservation, and deterministic fake decoders where the
+actual media libraries (PIL/ffmpeg/torchaudio) are unavailable in this
+environment.
 
 Decode internals are STUBBED — ``decode_image`` raises
 NotImplementedError unless ``fake=True``, which produces deterministic
@@ -12,11 +12,13 @@ pseudo-features derived from the payload bytes so downstream operators
 (dedup over media fingerprints, embedding joins) are testable.
 
 Scale notes: media bytes never pass through Python row-at-a-time — every
-operator is an Arrow-batched iterator over pandas frames;
-``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds memory per batch
-(set it so batch_bytes ≈ payload × records stays well under executor
-memory). Payload columns should be pruned early: all metadata-only
-queries must select away the binary column before any shuffle.
+operator is an Arrow-batched iterator over pandas frames; the session's
+``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds memory per batch.
+Set it when the session is built, so batch_bytes ≈ payload × records
+stays well under executor memory: Spark reads it when an action plans,
+so an operator cannot scope it to its own plan. Payload columns should
+be pruned early: all metadata-only queries must select away the binary
+column before any shuffle.
 """
 
 from __future__ import annotations
@@ -70,7 +72,6 @@ def decode_and_featurize_images(
     df: DataFrame,
     fake: bool = False,
     feature_dim: int = 8,
-    batch_rows: int = 64,
 ) -> DataFrame:
     """Decode image payloads and emit feature vectors via mapInPandas.
 
@@ -79,10 +80,6 @@ def decode_and_featurize_images(
     computes deterministic sha-derived features; the Spark plumbing
     (Arrow batching, schema, partitioning) is identical either way.
     """
-    spark = df.sparkSession
-    # Bound Arrow batch memory: payloads are opaque blobs.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
-
     def op(batches: Iterator) -> Iterator:
         import pandas as pd
 
@@ -136,7 +133,6 @@ def resize_images(
     width: int,
     height: int,
     fake: bool = False,
-    batch_rows: int = 64,
 ) -> DataFrame:
     """Resize image payloads via mapInPandas; output keeps the MEDIA
     schema with ``meta.width/height`` set to the target and the payload
@@ -144,11 +140,9 @@ def resize_images(
 
     ``fake=False`` raises NotImplementedError in the task (needs
     PIL/opencv); ``fake=True`` passes payload bytes through and rewrites
-    only the metadata, so the Arrow plumbing, schema evolution, and
-    batch-size bounding are exercised end-to-end either way.
+    only the metadata, so the Arrow plumbing and schema evolution are
+    exercised end-to-end either way.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
 
     def op(batches: Iterator) -> Iterator:
         import pandas as pd

@@ -237,10 +237,9 @@ def build_positional_index(
     queries need and a bag-of-words index (:func:`bm25_topk`'s term
     frequencies) cannot answer.
 
-    Pure projection + posexplode, no shuffle; materialize it
-    partitioned/bucketed by ``tok`` (``operators/scale.py::
-    write_bucketed``) to make every phrase query a co-located join at
-    warehouse scale."""
+    Pure projection + posexplode, no shuffle; materialize it bucketed by
+    ``tok`` (``DataFrameWriter.bucketBy``) to make every phrase query a
+    co-located join at warehouse scale."""
     return df.select(
         id_col, F.posexplode(tokens(text_col)).alias("pos0", "tok")
     ).select(id_col, "tok", (F.col("pos0") + 1).alias("pos"))

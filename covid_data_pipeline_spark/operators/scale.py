@@ -1,7 +1,7 @@
 """Skew and co-location machinery for 100 TB execution.
 
-Three tools the brief's scale posture calls for explicitly, each a thin,
-tested composition of DataFrame built-ins:
+Skew and layout tools, each a thin, tested composition of DataFrame
+built-ins:
 
 * salted two-stage aggregation — when ONE group key dominates (a
   boilerplate country, an empty-string fingerprint), the final aggregate
@@ -15,18 +15,15 @@ tested composition of DataFrame built-ins:
   probe row meets exactly one replica of each matching build row).
   Prefer AQE's skew-join splitting when it fires; salting is for the
   cases it can't see (e.g. skew introduced after the last shuffle).
-* bucketed tables — pre-shuffle both sides of a recurring join into the
-  same bucket layout so the join itself needs NO exchange (asserted on
-  the physical plan in tests/test_scale.py). The parquet analogue of the
-  reference's identity-partitioned Iceberg layout, applied to join keys
-  instead of dates.
+* Morton key — the Z-order sort key that `SnapshotWarehouse.compact`
+  and the `zorder_locality_orders` query lay files out by.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__salt"
@@ -147,29 +144,6 @@ def split_skew_join(
     return cold.unionByName(hot_joined)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) catalog table.
-    Two tables bucketed identically on their join key join with zero
-    exchanges — pay the shuffle once at write time, reuse it every query."""
-    writer = df.write.format("parquet").mode(mode).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
 def morton_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:
     """Z-order (Morton) interleave of two non-negative ints, ``bits``
     low bits each → one long sort key. Bit i of x lands at position 2i,
@@ -191,30 +165,6 @@ def morton_key(x: Column | str, y: Column | str, bits: int = 16) -> Column:
             F.shiftleft(F.shiftright(cy, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return key
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: Column | str,
-    y: Column | str,
-    num_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet Z-ordered on two dimensions: range-partition by the
-    Morton key (balanced files via range exchange sampling), sort within
-    each partition, drop the key. Every output file then covers a small
-    square-ish region of (x, y) space, so parquet row-group min/max
-    stats prune scans filtered on EITHER column — asserted on real
-    footer statistics in tests/test_scale.py."""
-    keyed = df.withColumn("__z", morton_key(x, y, bits))
-    (
-        keyed.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def skew_profile(

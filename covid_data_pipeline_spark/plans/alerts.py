@@ -37,17 +37,6 @@ from covid_data_pipeline_spark.operators.windows import with_deltas
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse, write_jdbc
 
-ALERT_COLUMNS = (
-    "alert_date",
-    "country",
-    "alert_type",
-    "severity",
-    "metric_value",
-    "description",
-    "created_at",
-)
-
-
 @dataclass(frozen=True)
 class AlertSpec:
     """One alert query: measure, rate derivation, threshold, rendering."""

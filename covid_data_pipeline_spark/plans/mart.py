@@ -23,23 +23,6 @@ from covid_data_pipeline_spark.operators.windows import with_deltas
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.sources.writers import Warehouse
 
-MART_COLUMNS = (
-    "report_date",
-    "country_name",
-    "population",
-    "total_confirmed",
-    "total_deaths",
-    "total_recovered",
-    "current_active_cases",
-    "new_cases_today",
-    "new_deaths_today",
-    "cases_per_100k",
-    "fatality_rate_percent",
-    "recovery_rate_percent",
-    "risk_category",
-)
-
-
 def _joined_base(fact: DataFrame, dim: DataFrame) -> DataFrame:
     """raw_joined CTE: fact INNER JOIN dim with population guards
     (reference :60-64); Active recomputed from counters, never trusted

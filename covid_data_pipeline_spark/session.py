@@ -79,37 +79,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def cluster_profile(
-    executors: int = 1000,
-    cores_per_executor: int = 4,
-    target_partition_mb: int = 256,
-) -> dict[str, str]:
-    """Recommended conf overrides for warehouse-scale deployments (pass as
-    ``get_spark(extra_conf=cluster_profile())``). Local tests don't need
-    these; they document how the same code is sized for ~100 TB inputs.
-
-    Rationale per key:
-    - shuffle.partitions ≈ 2–3× total cores so every wave is full and AQE
-      coalescing (enabled by default above) trims the small ones.
-    - files.maxPartitionBytes up from 128 MB: with ~100k+ input splits
-      per scan, fewer/bigger splits cut scheduling overhead; columnar
-      parquet readers stream within a split, so memory stays bounded.
-    - adaptive advisory size matches the input split target so post-AQE
-      partitions neither spill nor fragment.
-    - autoBroadcastJoinThreshold raised: dims up to ~256 MB are cheaper
-      to broadcast than to shuffle 100 TB of probe side.
-    - shuffle spill compression + zstd: shuffle volume dominates cost at
-      this scale; zstd trades a little CPU for ~30% less I/O.
-    """
-    total_cores = executors * cores_per_executor
-    return {
-        "spark.sql.shuffle.partitions": str(total_cores * 2),
-        "spark.sql.files.maxPartitionBytes": f"{target_partition_mb}m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": f"{target_partition_mb}m",
-        "spark.sql.autoBroadcastJoinThreshold": "256m",
-        "spark.io.compression.codec": "zstd",
-        "spark.shuffle.compress": "true",
-        "spark.sql.parquet.filterPushdown": "true",
-    }

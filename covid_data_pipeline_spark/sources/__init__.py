@@ -3,8 +3,6 @@
 from covid_data_pipeline_spark.sources.readers import (  # noqa: F401
     read_csv,
     read_jdbc,
-    read_json,
-    read_orc,
 )
 from covid_data_pipeline_spark.sources.writers import (  # noqa: F401
     IcebergWarehouse,

@@ -193,102 +193,3 @@ class MaterializedAggregate:
         state = merge_state(self.read(), delta, self.group_cols)
         v = self._commit_state(state, cur)
         return {"mode": "incremental", "base_version": cur, "view_version": v}
-
-
-class MaterializedDistinct:
-    """Incrementally-maintained EXACT per-group COUNT(DISTINCT key) over
-    an APPEND-ONLY base table — the classic pain point of incremental
-    rollups (distincts don't sum; naive re-aggregation rescans the
-    corpus). State is one fixed-size bitmap (≤ 4 KB, Spark's
-    ``bitmap_construct_agg``) per (group, key-bucket): each refresh
-    bitmaps ONLY the files new manifests introduced
-    (``read_incremental``) and ORs them into the stored state — set
-    semantics make replayed or duplicated keys idempotent, and the
-    merge input is |state| + |delta buckets| rows, never the base.
-
-    Deletes are structurally unsupported (bitmaps don't subtract), so
-    the refresh VERIFIES the base history is append-only between the
-    cursor and the current snapshot and raises otherwise — rebuild with
-    a fresh view after a replace/delete. The cursor commits atomically
-    in the view manifest (``mvd@<base_version>``), exactly like
-    :class:`MaterializedAggregate`.
-
-    ``read()`` returns ``(group_cols…, distinct_count)`` by popcounting
-    the stored bitmaps — a |state|-sized aggregation."""
-
-    def __init__(
-        self,
-        wh: SnapshotWarehouse,
-        base_table: str,
-        key_col: str,
-        group_cols: Sequence[str],
-        view_table: str | None = None,
-    ):
-        self.wh = wh
-        self.base_table = base_table
-        self.key_col = key_col
-        self.group_cols = list(group_cols)
-        self.view_table = view_table or f"{base_table}__mvd"
-
-    def refreshed_version(self) -> int | None:
-        v = self.wh.current_version(self.view_table)
-        if v is None:
-            return None
-        op = self.wh._manifest(self.view_table, v)["op"]
-        if not op.startswith("mvd@"):
-            raise ValueError(
-                f"{self.view_table} v{v} is not a MaterializedDistinct "
-                f"commit (op={op!r})"
-            )
-        return int(op.split("@", 1)[1])
-
-    def _bitmap_delta(self, rows: DataFrame) -> DataFrame:
-        return (
-            rows.select(
-                *self.group_cols,
-                F.expr(f"bitmap_bucket_number({self.key_col})").alias("__bkt"),
-                F.expr(f"bitmap_bit_position({self.key_col})").alias("__pos"),
-            )
-            .groupBy(*self.group_cols, "__bkt")
-            .agg(F.expr("bitmap_construct_agg(__pos)").alias("__bm"))
-        )
-
-    def refresh(self) -> dict:
-        cur = self.wh.current_version(self.base_table)
-        if cur is None:
-            raise FileNotFoundError(f"no snapshots for {self.base_table}")
-        last = self.refreshed_version()
-        if last == cur:
-            return {"mode": "noop", "base_version": cur}
-        if last is None:
-            delta = self._bitmap_delta(self.wh.read(self.base_table))
-            state, mode = delta, "full"
-        else:
-            for v in range(last + 1, cur + 1):
-                op = self.wh._manifest(self.base_table, v)["op"]
-                if op != "append":
-                    raise ValueError(
-                        f"{self.base_table} v{v} op={op!r}: bitmap-distinct "
-                        "views require an append-only base (bitmaps cannot "
-                        "subtract) — rebuild a fresh view after rewrites"
-                    )
-            delta = self._bitmap_delta(
-                self.wh.read_incremental(self.base_table, last)
-            )
-            state = (
-                self.wh.read(self.view_table)
-                .unionByName(delta)
-                .groupBy(*self.group_cols, "__bkt")
-                .agg(F.expr("bitmap_or_agg(__bm)").alias("__bm"))
-            )
-            mode = "incremental"
-        files = self.wh._write_batch(state, self.view_table, None)
-        v = self.wh._commit(self.view_table, files, f"mvd@{cur}")
-        return {"mode": mode, "base_version": cur, "view_version": v}
-
-    def read(self) -> DataFrame:
-        return (
-            self.wh.read(self.view_table)
-            .groupBy(*self.group_cols)
-            .agg(F.sum(F.expr("bitmap_count(__bm)")).alias("distinct_count"))
-        )

@@ -44,7 +44,7 @@ on).
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
-from datetime import datetime, timedelta
+from datetime import datetime
 from typing import Any
 
 import numpy as np

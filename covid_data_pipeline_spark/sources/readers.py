@@ -29,64 +29,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_csv_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """CSV scan that splits clean rows from malformed ones instead of
-    silently nulling or failing the job (PERMISSIVE parse + captured
-    corrupt-record column). Returns ``(good, quarantine)``: ``good``
-    carries the declared schema; ``quarantine`` carries the raw offending
-    line for replay/debugging. At 100 TB a single bad line must never
-    kill the run NOR vanish — the quarantine table is what makes ingest
-    auditable. Spark requires the parsed CSV to be cached/materialized
-    before filtering on the corrupt column (SPARK-38523); we cache the
-    narrow parse, and callers should unpersist after both sides are
-    written.
-    """
-    full = T.StructType(schema.fields + [T.StructField(corrupt_col, T.StringType())])
-    parsed = (
-        spark.read.option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .schema(full)
-        .csv(path)
-        .cache()
-    )
-    good = parsed.filter(parsed[corrupt_col].isNull()).drop(corrupt_col)
-    quarantine = parsed.filter(parsed[corrupt_col].isNotNull()).select(
-        parsed[corrupt_col].alias("raw_line")
-    )
-    return good, quarantine
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    multiline: bool = False,
-) -> DataFrame:
-    """JSON-lines scan (north-star source list: "CSV/JSON sources").
-    As with CSV, pass ``schema`` in production — inference double-reads.
-    ``multiline=True`` for whole-file JSON documents (one doc per file;
-    not splittable — keep files small or prefer JSONL at scale)."""
-    reader = spark.read.option("multiLine", str(multiline).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — the other splittable columnar format a lakehouse
-    ingests (Hive-era warehouses hand ORC over all the time). Same
-    pushdown/pruning contract as parquet: predicates and required
-    columns reach the native reader, hive-style partition dirs prune."""
-    return spark.read.orc(path)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,

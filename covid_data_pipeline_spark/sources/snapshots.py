@@ -618,8 +618,7 @@ class SnapshotWarehouse:
         repartition + within-partition sort lays rows out in key order,
         so output files get disjoint footer envelopes and
         :meth:`read_pruned` / engine row-group skipping become
-        effective again — the fix `maintenance.clustering_overlap`
-        prescribes when overlap has decayed. Combine with
+        effective again once overlap has decayed. Combine with
         ``target_file_rows`` to bound file size; the range exchange is
         one shuffle of the table, the price of re-clustering.
 
@@ -763,9 +762,8 @@ class SnapshotWarehouse:
 
         Planning is a driver-side footer sweep — O(files) metadata
         reads, KBs each, exactly what an Iceberg manifest scan does —
-        and pairs with clustered writes
-        (``operators/scale.py::write_zordered``, :meth:`compact` with
-        a sort): on a sorted table the envelopes are disjoint and a
+        and pairs with clustered writes (:meth:`compact` with a sort or
+        a z-order): on a sorted table the envelopes are disjoint and a
         point/range read touches O(matching) files instead of all of
         them. Hive-partition pruning is NOT re-implemented here —
         partitioned reads recover partition dirs natively and Spark

@@ -438,46 +438,6 @@ def test_quantized_topk_recall_vs_exact(spark, sf_dir):
     assert hits / total >= 0.8, f"quantized recall {hits}/{total}"
 
 
-def test_incremental_lsh_equals_from_scratch(spark, sf_dir):
-    """corpus pairs ∪ incremental(delta) pairs == from-scratch pairs on
-    the full set — the invariant that lets a daily run skip
-    corpus-vs-corpus recomparison entirely."""
-    from covid_data_pipeline_spark.harness.tables import table
-    from covid_data_pipeline_spark.operators.dedup import (
-        incremental_lsh_pairs,
-        lsh_candidate_pairs,
-        with_minhash,
-    )
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    signed = with_minhash(docs, num_hashes=16).persist()
-    corpus = signed.filter(F.col("doc_id") < 400)
-    delta = signed.filter(F.col("doc_id") >= 400)
-
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(
-            signed, num_hashes=16, bands=4, max_bucket_size=None
-        ).collect()
-    }
-    old = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(
-            corpus, num_hashes=16, bands=4, max_bucket_size=None
-        ).collect()
-    }
-    inc = {
-        (r["id_a"], r["id_b"])
-        for r in incremental_lsh_pairs(
-            corpus, delta, num_hashes=16, bands=4, max_bucket_size=None
-        ).collect()
-    }
-    assert old | inc == full
-    # every incremental pair touches a delta doc
-    assert all(a >= 400 or b >= 400 for a, b in inc)
-    signed.unpersist()
-
-
 def test_knn_graph_lsh_recall_vs_exact(spark, sf_dir):
     from covid_data_pipeline_spark.operators.similarity import (
         knn_graph_exact,
@@ -913,30 +873,6 @@ def test_margin_cancels_hub_bias(spark):
     # the genuine pair's margin clears the hub's by a real gap
     hub_margins = [m for (a, b), m in pairs.items() if a == 0 or b == 0]
     assert all(pairs[(1, 2)] > m for m in hub_margins)
-
-
-def test_optimal_lsh_params_properties():
-    import pytest
-
-    from covid_data_pipeline_spark.operators.dedup import optimal_lsh_params
-
-    b50, r50 = optimal_lsh_params(0.5, 128)
-    b90, r90 = optimal_lsh_params(0.9, 128)
-    assert b50 * r50 <= 128 and b90 * r90 <= 128
-    # higher thresholds need more selective bands (more rows per band)
-    assert r90 > r50
-    # FN-averse weighting favors MORE bands (higher collision curve)
-    b_bal, _ = optimal_lsh_params(0.8, 128, fp_weight=0.5)
-    b_fn, _ = optimal_lsh_params(0.8, 128, fp_weight=0.1)
-    assert b_fn > b_bal
-    # tuned params drive the real operator: the S-curve midpoint at the
-    # threshold stays meaningful (collision prob at s=t in (0.3, 0.9))
-    for t in (0.5, 0.7, 0.9):
-        b, r = optimal_lsh_params(t, 128)
-        p = 1.0 - (1.0 - t**r) ** b
-        assert 0.3 < p < 0.95
-    with pytest.raises(ValueError):
-        optimal_lsh_params(1.5, 128)
 
 
 def test_media_phash_neardup_pairs(spark):

@@ -8,11 +8,13 @@ workload runs. Tests reach a reference path through a private seam
 instead (a monkeypatched helper or constant). The allow-list holds the
 flags left on purpose.
 
-Likewise a public top-level function or class of the package that no
-code outside the tests names is code only its own tests run. Registered
-queries (``harness/queries_*``) are reached through the registry and are
-not scanned as definitions. ``UNREACHED_OK`` holds the names left on
-purpose, each with its reason."""
+Likewise a public top-level function, class or constant of the package
+that no code outside the tests names is code only its own tests run.
+Registered queries (``harness/queries_*``) are reached through the
+registry and are not scanned as definitions. ``UNREACHED_OK`` holds the
+names left on purpose, each with its reason.
+
+And no package module imports a name it never uses."""
 
 from __future__ import annotations
 
@@ -33,7 +35,6 @@ ALLOWED = {
     ("resize_images", "fake"),
 }
 
-_PENDING = "pending: unreached, to get a caller or be deleted"
 UNREACHED_OK = {
     # Reference twins that tests compare an operator against.
     "asof_join_cogroup": "reference twin of asof_join (test_asof_props)",
@@ -48,20 +49,6 @@ UNREACHED_OK = {
     "land_url": "S5 landing: fetch a daily CSV into the landing zone",
     "read_jdbc": "S4 JDBC scan of the population source",
     "IcebergWarehouse": "§1.1 Iceberg tables, gated on the runtime jar",
-    # This list may only shrink.
-    "IncrementalCurator": _PENDING,
-    "MaterializedDistinct": _PENDING,
-    "build_dataset_card": _PENDING,
-    "file_health_report": _PENDING,
-    "clustering_overlap": _PENDING,
-    "write_bucketed": _PENDING,
-    "write_zordered": _PENDING,
-    "write_hilbert": _PENDING,
-    "optimal_lsh_params": _PENDING,
-    "cluster_profile": _PENDING,
-    "read_csv_quarantine": _PENDING,
-    "read_json": _PENDING,
-    "read_orc": _PENDING,
 }
 
 
@@ -128,28 +115,63 @@ def test_no_flag_is_set_only_by_tests():
 
 
 def _public_defs() -> set[str]:
-    """Public top-level functions and classes of the package, registered
-    query modules and ``__init__`` re-exports left out."""
+    """Public top-level functions, classes and assigned names of the
+    package, registered query modules and ``__init__`` re-exports left
+    out."""
     names = set()
     for path in PACKAGE.rglob("*.py"):
         if path.name == "__init__.py" or path.name.startswith("queries_"):
             continue
         for node in _parse(path).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if not node.name.startswith("_"):
-                    names.add(node.name)
+                bound = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                bound = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            else:
+                continue
+            names.update(n for n in bound if not n.startswith("_"))
     return names
 
 
+def _foreign_imports(tree: ast.Module) -> set[str]:
+    """Names the file binds by importing from outside the package
+    (``np``, ``F``, ``pq``)."""
+    bound = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            bound |= {
+                a.asname or a.name.split(".")[0]
+                for a in node.names
+                if a.name.split(".")[0] != PACKAGE.name
+            }
+        elif isinstance(node, ast.ImportFrom):
+            if node.level == 0 and node.module.split(".")[0] != PACKAGE.name:
+                bound |= {a.asname or a.name for a in node.names}
+    return bound
+
+
+def _root(node: ast.expr) -> ast.expr:
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node
+
+
 def _referenced(files) -> set[str]:
-    """Every name, attribute and imported name the files use."""
+    """Every name read, attribute and imported name the files use. An
+    attribute of a module imported from outside the package
+    (``pq.read_table``) names that module's member, not ours."""
     found = set()
     for path in files:
-        for node in ast.walk(_parse(path)):
-            if isinstance(node, ast.Name):
+        tree = _parse(path)
+        foreign = _foreign_imports(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
                 found.add(node.id)
             elif isinstance(node, ast.Attribute):
-                found.add(node.attr)
+                root = _root(node)
+                if not (isinstance(root, ast.Name) and root.id in foreign):
+                    found.add(node.attr)
             elif isinstance(node, ast.alias):
                 found.add(node.name.rsplit(".", 1)[-1])
     return found
@@ -171,3 +193,32 @@ def test_no_public_name_only_tests_reach():
     assert UNREACHED_OK.keys() <= unreached, (
         "an allow-listed name is gone or has a caller: take it off UNREACHED_OK"
     )
+
+
+def _unused_imports(path: pathlib.Path) -> list[str]:
+    """Top-level imports of one module that bind a name the module never
+    reads, except on a line marked ``# noqa: F401``."""
+    tree = _parse(path)
+    lines = path.read_text().splitlines()
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    unused = []
+    for node in tree.body:
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        for a in node.names:
+            marked = {lines[node.lineno - 1], lines[a.lineno - 1]}
+            if any("# noqa: F401" in line for line in marked):
+                continue
+            name = a.asname or a.name.split(".")[0]
+            if name not in used:
+                unused.append(f"{path.relative_to(ROOT)}:{a.lineno} {name}")
+    return unused
+
+
+def test_no_package_module_imports_an_unused_name():
+    modules = [p for p in PACKAGE.rglob("*.py") if p.name != "__init__.py"]
+    assert modules, "no package modules found: the scan is broken"
+    unused = [u for p in sorted(modules) for u in _unused_imports(p)]
+    assert unused == [], "imports bound but never used: delete them"

@@ -527,8 +527,9 @@ def test_haversine_pinned_59n_pair_set(spark):
 
 def test_hilbert_key_matches_python_reference(spark):
     """Spark's F.aggregate fold vs the classic xy2d loop, across a
-    dense small grid and the 18-bit domain corners; bijectivity on the
-    4x4 grid pins the curve shape itself."""
+    dense small grid and the 18-bit domain corners; a NULL coordinate
+    gives a NULL key, never key 0; bijectivity on the 4x4 grid pins the
+    curve shape itself."""
     from covid_data_pipeline_spark.operators.geo import hilbert_key
 
     def rot(n, x, y, rx, ry):
@@ -550,13 +551,18 @@ def test_hilbert_key_matches_python_reference(spark):
 
     rows = [(x, y) for x in range(8) for y in range(8)] + [
         (200_000, 123_456), (262_143, 0), (0, 262_143), (262_143, 262_143),
+        (None, 5), (7, None),
     ]
     df = spark.createDataFrame(rows, "x BIGINT, y BIGINT")
     got = {
         (r["x"], r["y"]): r["h"]
         for r in df.withColumn("h", hilbert_key("x", "y", bits=18)).collect()
     }
-    assert all(h == xy2d(18, x, y) for (x, y), h in got.items())
+    assert len(got) == len(rows)
+    assert all(
+        h == (None if x is None or y is None else xy2d(18, x, y))
+        for (x, y), h in got.items()
+    )
     # 2-bit curve is the canonical U: bijective over the 4x4 grid
     df2 = spark.createDataFrame(
         [(x, y) for x in range(4) for y in range(4)], "x BIGINT, y BIGINT"
@@ -568,52 +574,3 @@ def test_hilbert_key_matches_python_reference(spark):
 
     with pytest.raises(ValueError):
         hilbert_key("x", "y", bits=0)
-
-
-def test_hilbert_np_twin_bit_identical_and_write(spark, tmp_path):
-    """The Arrow-vectorized Hilbert twin must produce bit-identical
-    keys to the F.aggregate fold (incl. NULL-coordinate rows -> NULL
-    key), and write_hilbert must produce range-disjoint files whose
-    rows sort by the key."""
-    from covid_data_pipeline_spark.operators.geo import (
-        hilbert_key,
-        hilbert_keys_np,
-        write_hilbert,
-    )
-
-    df = spark.range(0, 20_000).select(
-        ((F.xxhash64("id") % 262_144 + 262_144) % 262_144).alias("x"),
-        ((F.xxhash64("id", F.lit(3)) % 262_144 + 262_144) % 262_144
-         ).alias("y"),
-    ).unionByName(
-        spark.createDataFrame(
-            [(None, 5), (7, None), (262_143, 262_143), (0, 0)],
-            "x BIGINT, y BIGINT",
-        )
-    )
-    both = hilbert_keys_np(df, "x", "y", bits=18, out_col="h_np").withColumn(
-        "h_fold", hilbert_key("x", "y", bits=18)
-    )
-    mismatch = both.where(
-        ~F.col("h_np").eqNullSafe(F.col("h_fold"))
-    ).count()
-    assert mismatch == 0
-    # both paths NULL out NULL-coordinate rows (never alias to key 0)
-    assert both.where(F.col("h_np").isNull()).count() == 2
-    assert both.where(F.col("h_fold").isNull()).count() == 2
-
-    path = str(tmp_path / "hil")
-    write_hilbert(df.dropna(), path, "x", "y", num_files=8, bits=18)
-    back = spark.read.parquet(path)
-    assert back.count() == 20_002
-    # per-file key ranges are disjoint (range partitioning by the key)
-    from covid_data_pipeline_spark.operators.geo import hilbert_key as hk
-    ranges = sorted(
-        (r["lo"], r["hi"])
-        for r in back.withColumn("h", hk("x", "y", 18))
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-        .collect()
-    )
-    for (l1, h1), (l2, h2) in zip(ranges, ranges[1:]):
-        assert h1 <= l2, (h1, l2)

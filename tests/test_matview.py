@@ -211,45 +211,3 @@ def test_randomized_commit_fuzz(spark, wh):
             wh.rollback("sales", rng.choice(vs))
         mv.refresh()
         _assert_equals_full(mv, wh, spark)
-
-
-def test_materialized_distinct_incremental(spark, wh):
-    from covid_data_pipeline_spark.sources.matview import MaterializedDistinct
-
-    def batch(pairs):
-        return spark.createDataFrame(pairs, "grp string, user_id bigint")
-
-    mvd = MaterializedDistinct(
-        wh, "visits", key_col="user_id", group_cols=["grp"]
-    )
-    wh.append(batch([("a", 1), ("a", 2), ("a", 2), ("b", 1)]), "visits")
-    assert mvd.refresh()["mode"] == "full"
-    got = {r["grp"]: r["distinct_count"] for r in mvd.read().collect()}
-    assert got == {"a": 2, "b": 1}
-
-    # append with overlap: replayed keys are idempotent (set semantics),
-    # genuinely new keys count once; keys can be large (bucketed bitmaps)
-    wh.append(
-        batch([("a", 2), ("a", 3), ("b", 70_000), ("c", 5)]), "visits"
-    )
-    assert mvd.refresh()["mode"] == "incremental"
-    got = {r["grp"]: r["distinct_count"] for r in mvd.read().collect()}
-    assert got == {"a": 3, "b": 2, "c": 1}
-    # matches a full COUNT(DISTINCT) recompute
-    full = {
-        r["grp"]: r["n"]
-        for r in wh.read("visits")
-        .groupBy("grp")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert got == full
-
-    assert mvd.refresh()["mode"] == "noop"
-
-    # a rewrite on the base is rejected (bitmaps cannot subtract)
-    wh.replace(batch([("a", 1)]), "visits")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="append-only"):
-        mvd.refresh()

@@ -1,5 +1,5 @@
-"""Scale machinery: salted aggregation/join equivalence and the
-bucketed-join no-exchange plan property."""
+"""Scale machinery: salted aggregation/join equivalence, compaction, the
+Morton key, skew profiling and rendezvous sharding."""
 
 from __future__ import annotations
 
@@ -9,12 +9,7 @@ from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.harness.tables import table
 from covid_data_pipeline_spark.observe import spark_jobs
-from covid_data_pipeline_spark.operators.scale import (
-    salted_join,
-    salted_sum,
-    write_bucketed,
-)
-from tests.test_plans import plan_of
+from covid_data_pipeline_spark.operators.scale import salted_join, salted_sum
 
 
 def _skewed(spark):
@@ -85,38 +80,6 @@ def test_compact_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     assert len(after_files) < len(before_files) / 4
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    spark.sql("CREATE DATABASE IF NOT EXISTS buckets_test")
-    spark.sql("USE buckets_test")
-    try:
-        o = table(spark, sf_dir, "orders")
-        c = table(spark, sf_dir, "customer")
-        write_bucketed(o, "orders_b", ["o_custkey"], num_buckets=8)
-        write_bucketed(
-            c.withColumnRenamed("c_custkey", "o_custkey"),
-            "customer_b",
-            ["o_custkey"],
-            num_buckets=8,
-        )
-        ob, cb = spark.table("orders_b"), spark.table("customer_b")
-        # Force SMJ so the (absence of an) exchange is observable.
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = ob.join(cb, on="o_custkey")
-            plan = plan_of(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # bucketing replaced the shuffle
-            assert joined.count() == o.join(
-                c, o.o_custkey == c.c_custkey
-            ).count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS buckets_test CASCADE")
-        spark.sql("USE default")
-
-
 def test_morton_key_matches_python_reference(spark):
     from covid_data_pipeline_spark.operators.scale import morton_key
 
@@ -132,47 +95,6 @@ def test_morton_key_matches_python_reference(spark):
     got = df.select("x", "y", morton_key("x", "y").alias("z")).collect()
     for r in got:
         assert r["z"] == py_morton(r["x"], r["y"]), (r["x"], r["y"])
-
-
-def test_zorder_write_narrows_file_stats_on_both_columns(spark, tmp_path):
-    """Z-ordered files must each cover a narrow range of BOTH columns —
-    the property that lets parquet min/max stats prune a scan filtered
-    on either one. Checked against real footer statistics."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from covid_data_pipeline_spark.operators.scale import write_zordered
-
-    n = 1 << 14
-    side = 1 << 7  # 128x128 grid, row-major ids
-    df = spark.range(n).select(
-        (F.col("id") % side).alias("x"), (F.col("id") / side).cast("long").alias("y")
-    )
-    path = str(tmp_path / "zorder")
-    write_zordered(df, path, "x", "y", num_files=16, bits=8)
-
-    spans_x, spans_y = [], []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins_x, maxs_x, mins_y, maxs_y = [], [], [], []
-        for rg in range(md.num_row_groups):
-            row = md.row_group(rg)
-            cols = {row.column(c).path_in_schema: row.column(c) for c in range(row.num_columns)}
-            mins_x.append(cols["x"].statistics.min)
-            maxs_x.append(cols["x"].statistics.max)
-            mins_y.append(cols["y"].statistics.min)
-            maxs_y.append(cols["y"].statistics.max)
-        spans_x.append(max(maxs_x) - min(mins_x))
-        spans_y.append(max(maxs_y) - min(mins_y))
-    # 16 files over a 128x128 Z-curve: each file ~a 32x64 tile. A plain
-    # row-major sort would give span_x = 127 in EVERY file. Require both
-    # dims well under the full domain on average.
-    assert sum(spans_x) / len(spans_x) < 80
-    assert sum(spans_y) / len(spans_y) < 80
-    # And a single-column predicate prunes: files whose x-range excludes
-    # x<16 exist (so a scan for x<16 skips them entirely).
-    assert any(s < 40 for s in spans_x)
 
 
 def test_compact_recovers_from_crashed_swap(spark, sf_dir, tmp_path):

@@ -1,4 +1,5 @@
-"""Source readers and landing ingest: JSON round-trip, URL landing, and
+"""Source readers and landing ingest: URL landing, format round trips,
+warehouse writes and schema records, the featurizer's session conf, and
 the synthetic events source's option check."""
 
 from __future__ import annotations
@@ -11,10 +12,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from covid_data_pipeline_spark.harness.tables import table
 from covid_data_pipeline_spark.observe import spark_jobs
 from covid_data_pipeline_spark.sources.ingest import land_url, landing_key
-from covid_data_pipeline_spark.sources.readers import read_csv, read_json
+from covid_data_pipeline_spark.sources.readers import read_csv
 from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
 from covid_data_pipeline_spark.sources.writers import SCHEMA_FILE, Warehouse
 
@@ -54,16 +54,6 @@ def test_land_url_then_spark_reads(spark, tmp_path):
     assert sorted(map(tuple, df.collect())) == [(1, "x"), (2, "y")]
 
 
-def test_cluster_profile_shapes(spark):
-    from covid_data_pipeline_spark.session import cluster_profile
-
-    prof = cluster_profile(executors=1000, cores_per_executor=4)
-    assert prof["spark.sql.shuffle.partitions"] == "8000"
-    # Every key must be a real Spark conf (settable without error).
-    for k in prof:
-        assert k.startswith("spark.")
-
-
 def test_land_url_missing_source_raises(tmp_path):
     with pytest.raises(Exception):
         land_url(
@@ -96,78 +86,27 @@ def test_land_url_failed_copy_leaves_nothing_readable(spark, tmp_path, monkeypat
     assert sorted(p.name for p in landing.rglob("*") if p.is_file()) == ["2021-03-07.csv"]
 
 
-def test_json_roundtrip_with_schema(spark, sf_dir, tmp_path):
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    path = str(tmp_path / "docs_json")
-    d.write.mode("overwrite").json(path)
-    back = read_json(spark, path, schema=d.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, d.collect()))
-
-
-def test_json_inference_matches_declared(spark, sf_dir, tmp_path):
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang")
-    path = str(tmp_path / "docs_json2")
-    d.write.mode("overwrite").json(path)
-    inferred = read_json(spark, path)
-    assert set(inferred.columns) == {"doc_id", "lang"}
-    assert inferred.count() == d.count()
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from covid_data_pipeline_spark.sources.readers import read_orc
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    path = str(tmp_path / "docs_orc")
-    d.write.mode("overwrite").orc(path)
-    back = read_orc(spark, path)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, d.collect()))
-    # Predicate + projection reach the ORC scan.
-    q = back.filter(back.lang == "en").select("doc_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "lang" in plan.split("PushedFilters")[1][:120]
-
-
-def test_csv_quarantine_splits_bad_rows(spark, tmp_path):
-    import pyspark.sql.types as T
-
-    from covid_data_pipeline_spark.sources.readers import read_csv_quarantine
-
-    p = tmp_path / "mixed.csv"
-    p.write_text(
-        "id,qty,price\n"
-        "1,3,9.5\n"
-        "2,notanumber,1.0\n"
-        "3,7,2.25\n"
-        "4,5\n"  # too few columns -> malformed (Spark quarantines short rows)
-        "5,8,oops\n"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("qty", T.LongType()),
-            T.StructField("price", T.DoubleType()),
-        ]
-    )
-    good, bad = read_csv_quarantine(spark, str(p), schema)
-    good_ids = sorted(r["id"] for r in good.collect())
-    bad_lines = sorted(r["raw_line"] for r in bad.collect())
-    assert good_ids == [1, 3]
-    assert bad_lines == ["2,notanumber,1.0", "4,5", "5,8,oops"]
-    assert good.columns == ["id", "qty", "price"]
-
-
 def test_fake_featurize_emits_fixed_dim_vectors(spark):
     """MEDIA_SCHEMA rows → fake featurize: one fixed-dim vector and the
-    payload's byte count per row."""
+    payload's byte count per row. Building and collecting leave the
+    session's Arrow batch size as it was: every later Arrow UDF in the
+    session reads it."""
     from covid_data_pipeline_spark.operators.multimodal import (
         MEDIA_SCHEMA,
         decode_and_featurize_images,
     )
 
-    media = spark.createDataFrame(
-        [(1, b"payload-one", None), (2, b"payload-two", None)], MEDIA_SCHEMA
-    )
-    feats = decode_and_featurize_images(media, fake=True).collect()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        media = spark.createDataFrame(
+            [(1, b"payload-one", None), (2, b"payload-two", None)], MEDIA_SCHEMA
+        )
+        feats = decode_and_featurize_images(media, fake=True).collect()
+        assert spark.conf.get(key) == "1000"
+    finally:
+        spark.conf.set(key, previous)
     assert len(feats) == 2
     assert all(len(f["features"]) == 8 for f in feats)
     assert {f["n_bytes"] for f in feats} == {11}
