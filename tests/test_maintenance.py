@@ -1,53 +1,55 @@
-"""Table-health maintenance reports: small-file histogram + footer
-clustering overlap (metadata-only passes)."""
+"""Table maintenance on ``SnapshotWarehouse``: a sorted compaction turns
+overlapping file envelopes into disjoint ones, so footer skipping prunes."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
 
-from covid_data_pipeline_spark.sources.maintenance import (
-    clustering_overlap,
-    file_health_report,
-)
+import pyarrow.parquet as pq
+
+from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
 
 
-def test_file_health_flags_fragmented_table(spark, tmp_path):
-    frag = str(tmp_path / "frag")
-    spark.range(10_000).repartition(40).write.mode("overwrite").parquet(frag)
-    rep = file_health_report(frag, small_file_bytes=1 * 1024 * 1024)
-    assert rep["n_files"] == 40
-    assert rep["small_file_byte_pct"] == 100.0  # all bytes in tiny files
-    compact = str(tmp_path / "compact")
-    spark.range(10_000).coalesce(1).write.mode("overwrite").parquet(compact)
-    rep2 = file_health_report(compact, small_file_bytes=1024)  # 1 KB bar
-    assert rep2["n_files"] == 1
-    assert rep2["small_file_byte_pct"] == 0.0
-    assert file_health_report(str(tmp_path / "missing"))["n_files"] == 0
+def _envelopes(sw, table, column):
+    """(min, max) of ``column`` per alive file, from the parquet footers."""
+    files, _ = sw.prune_files(table, column)  # no bounds: every file
+    out = []
+    for rel in files:
+        md = pq.ParquetFile(os.path.join(sw.path(table), "data", rel)).metadata
+        stats = [
+            md.row_group(rg).column(ci).statistics
+            for rg in range(md.num_row_groups)
+            for ci in range(md.num_columns)
+            if md.row_group(rg).column(ci).path_in_schema == column
+        ]
+        out.append((min(s.min for s in stats), max(s.max for s in stats)))
+    return sorted(out)
+
+
+def _overlapping_pairs(envs):
+    return sum(
+        1
+        for i, (lo_a, hi_a) in enumerate(envs)
+        for lo_b, hi_b in envs[i + 1 :]
+        if lo_a <= hi_b and lo_b <= hi_a
+    )
 
 
 def test_clustering_overlap_sorted_vs_shuffled(spark, tmp_path):
-    sorted_dir = str(tmp_path / "sorted")
-    (
-        spark.range(100_000)
-        .repartitionByRange(8, "id")
-        .sortWithinPartitions("id")
-        .write.mode("overwrite")
-        .parquet(sorted_dir)
-    )
-    shuffled_dir = str(tmp_path / "shuffled")
-    (
-        spark.range(100_000)
-        .select(F.col("id"))
-        .repartition(8)  # round-robin: every file spans the full range
-        .write.mode("overwrite")
-        .parquet(shuffled_dir)
-    )
-    good = clustering_overlap(sorted_dir, "id")
-    bad = clustering_overlap(shuffled_dir, "id")
-    assert good["n_files"] == 8 and bad["n_files"] == 8
-    # range-partitioned + sorted: disjoint envelopes, everything prunable
-    assert good["overlap_pct"] == 0.0
-    assert good["prunable"] == 8
-    # round-robin: every file overlaps every other
-    assert bad["overlap_pct"] == 100.0
-    assert bad["prunable"] == 0
+    sw = SnapshotWarehouse(spark, str(tmp_path / "wh"))
+    # round-robin: every file spans the full range
+    sw.append(spark.range(10_000).repartition(8), "t")
+    bad = _envelopes(sw, "t", "id")
+    assert len(bad) == 8
+    assert _overlapping_pairs(bad) == 8 * 7 // 2  # every file overlaps every other
+    kept, total = sw.prune_files("t", "id", lo=0, hi=100)
+    assert len(kept) == total == 8  # nothing prunable
+
+    # range-partitioned + sorted rewrite: disjoint envelopes
+    sw.compact("t", target_file_rows=1_250, sort_by=["id"])
+    good = _envelopes(sw, "t", "id")
+    assert len(good) >= 8
+    assert _overlapping_pairs(good) == 0
+    kept, total = sw.prune_files("t", "id", lo=0, hi=100)
+    assert total == len(good) and len(kept) == 1
+    assert sw.read_pruned("t", "id", lo=0, hi=100).count() == 101

@@ -97,6 +97,53 @@ def test_morton_key_matches_python_reference(spark):
         assert r["z"] == py_morton(r["x"], r["y"]), (r["x"], r["y"])
 
 
+def test_zorder_write_narrows_file_stats_on_both_columns(spark, tmp_path):
+    """Z-ordered files (``SnapshotWarehouse.compact(zorder_by=...)``,
+    laid out by ``morton_key``) must each cover a narrow range of BOTH
+    columns — the property that lets parquet min/max stats prune a scan
+    filtered on either one. Checked against real footer statistics."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from covid_data_pipeline_spark.sources.snapshots import SnapshotWarehouse
+
+    n = 1 << 14
+    side = 1 << 7  # 128x128 grid, row-major ids
+    df = spark.range(n).select(
+        (F.col("id") % side).alias("x"), (F.col("id") / side).cast("long").alias("y")
+    )
+    sw = SnapshotWarehouse(spark, str(tmp_path / "wh"))
+    sw.append(df.coalesce(1), "zorder")
+    sw.compact("zorder", zorder_by=["x", "y"], zorder_bits=8, target_file_rows=n // 16)
+    files, total = sw.prune_files("zorder", "x")  # no bounds: every file
+    assert len(files) == total >= 16
+
+    spans_x, spans_y = [], []
+    for rel in files:
+        md = pq.ParquetFile(os.path.join(sw.path("zorder"), "data", rel)).metadata
+        mins_x, maxs_x, mins_y, maxs_y = [], [], [], []
+        for rg in range(md.num_row_groups):
+            row = md.row_group(rg)
+            cols = {row.column(c).path_in_schema: row.column(c) for c in range(row.num_columns)}
+            mins_x.append(cols["x"].statistics.min)
+            maxs_x.append(cols["x"].statistics.max)
+            mins_y.append(cols["y"].statistics.min)
+            maxs_y.append(cols["y"].statistics.max)
+        spans_x.append(max(maxs_x) - min(mins_x))
+        spans_y.append(max(maxs_y) - min(mins_y))
+    # 16 files over a 128x128 Z-curve: each file ~a 32x32 tile. A plain
+    # row-major sort would give span_x = 127 in EVERY file. Require both
+    # dims well under the full domain on average.
+    assert sum(spans_x) / len(spans_x) < 80
+    assert sum(spans_y) / len(spans_y) < 80
+    # And a single-column predicate prunes: files whose x-range excludes
+    # x<16 exist (so a scan for x<16 skips them entirely).
+    assert any(s < 40 for s in spans_x)
+    kept, _ = sw.prune_files("zorder", "x", hi=15)
+    assert len(kept) < total
+
+
 def test_compact_recovers_from_crashed_swap(spark, sf_dir, tmp_path):
     import os
     import shutil
