@@ -344,9 +344,8 @@ def minhash_dedup(
 
     The signed relation (shingle hashes + signature) feeds four subplans
     (both sides of the banded self-join, both verify fetches); it is
-    persisted so the shingle/signature projection runs once per row. At
-    warehouse scale, stage it to a table instead (checkpoint) — the
-    persist is the single-job equivalent.
+    local-checkpointed so the shingle/signature projection runs once
+    per row. At warehouse scale, stage it to a table instead.
 
     ``portable=True`` routes hashing through the md5-prefix scheme: the
     WHOLE pipeline (shingle hashes → affine permutations → band folds →

@@ -95,10 +95,16 @@ def curate_documents(
     #    keep-join below (Catalyst does not share subtrees). persist(),
     #    NOT localCheckpoint: a lazy checkpoint truncates the plan the
     #    Observation metrics ride on (stage counts report 0 — caught by
-    #    test_observation_metrics_match_recomputed_counts); the cached
-    #    relation is the post-dedup (id, text) slice, small relative to
-    #    the corpus, and session-lifetime callers can clear it via
-    #    spark.catalog.clearCache().
+    #    test_observation_metrics_match_recomputed_counts). An eager
+    #    localCheckpoint keeps the metrics (traced curation_corpus: 18
+    #    jobs, rows 5000/5000/5000/4759/4659, as with persist) but is
+    #    slower: over 4 interleaved curation_corpus pairs at local[4]
+    #    (ABBENCH_r17_persist.json) persist won 3 and tied 1 on
+    #    ops_per_s (median 0.212 against 0.186) and won all 4 on
+    #    op_p50_s (4.13-5.12 s against 5.03-5.48 s). The cached relation is the post-dedup
+    #    (id, text) slice, small relative to the corpus, but nothing
+    #    unpersists it: that leak is still open, and a caller with a
+    #    long-lived session must clear it via spark.catalog.clearCache().
     exact = exact.persist()
     pairs = minhash_dedup(
         exact,

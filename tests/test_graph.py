@@ -51,7 +51,7 @@ def test_long_cycle_converges_within_log_rounds(spark, monkeypatch):
     ring = [(i, (i + 1) % n) for i in range(n)]
     stats: dict = {}
     got = _labels(
-        connected_components(_edges(spark, ring), max_iter=14, stats=stats)
+        connected_components(_edges(spark, ring), stats=stats)
     )
     assert got == {i: 0 for i in range(n)}
     assert 1 <= stats["rounds"] <= 14
@@ -66,16 +66,19 @@ def test_labels_stable_under_partitioning(spark):
     assert a == b
 
 
-def test_small_graph_job_budget(spark):
-    """A small graph is labelled by the driver finish: building CC over
-    a checkpointed 300-edge graph starts at most 2 Spark jobs (with the
-    constant at 0, the star rounds, their probes and the exceptAll
-    confirmation start 20)."""
+def test_small_graph_job_budget(spark, monkeypatch):
+    """Building CC over a checkpointed 300-edge graph. At the default
+    constant the driver finish labels it in at most 2 Spark jobs. With
+    the constant at 0, the pre-contraction, 3 star rounds and the
+    exceptAll confirmation take at most 16: each round's convergence
+    probe rides its checkpoint's job."""
     e = _edges(spark, [(i, (i * 7 + 3) % 200) for i in range(300)])
     e = e.repartition(4).localCheckpoint()
-    comps, jobs = spark_jobs(spark, lambda: connected_components(e))
-    assert jobs <= 2
-    assert comps.count() == 300
+    for finish_edges, budget in ((graph._LOCAL_FINISH_EDGES, 2), (0, 16)):
+        monkeypatch.setattr(graph, "_LOCAL_FINISH_EDGES", finish_edges)
+        comps, jobs = spark_jobs(spark, lambda: connected_components(e))
+        assert jobs <= budget, finish_edges
+        assert comps.count() == 300
 
 
 def test_largest_components_head(spark):
