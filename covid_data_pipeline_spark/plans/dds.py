@@ -5,6 +5,11 @@ Reference: process_covid_dds.py — sha2 surrogate key over (country, year)
 left join ODS×dim keeping unmatched rows with NULL key (:60-73), DQ
 null-count warning (:75-77) — logged after the fact partition overwrite
 (:81-92), from an Observation on that write instead of a second count.
+
+The two writes are two functions. ``process_dim`` reads population
+alone, so ``run_day`` runs it on every day (as the reference does,
+before its ODS skip guard at :51-54) beside raw → ods. ``process_dds``
+joins the day's ODS slice to the dim ``process_dim`` wrote.
 """
 
 from __future__ import annotations
@@ -62,20 +67,21 @@ def build_fact_day(ods_day: DataFrame, dim: DataFrame) -> DataFrame:
     return joined.select(*[F.col(c) for c in FACT_COLUMNS])
 
 
+def process_dim(spark: SparkSession, wh: Warehouse) -> None:
+    """Rebuild ``DIM_TABLE`` wholesale from the population table."""
+    wh.replace(build_dim_location(wh.read(S.POPULATION_TABLE)), S.DIM_TABLE)
+
+
 def process_dds(
     spark: SparkSession, wh: Warehouse, report_date: str
 ) -> tuple[int, int]:
-    """DDS stage: rebuild dim wholesale, build the day's fact slice,
-    overwrite its partition. Returns ``(rows, missing)``: the fact rows
-    written (0 if the ODS day is empty) and those with a NULL
-    location_key.
+    """DDS stage: build the day's fact slice over ``DIM_TABLE`` (written
+    by :func:`process_dim`) and overwrite its partition. Returns
+    ``(rows, missing)``: the fact rows written (0 if the ODS day is
+    empty) and those with a NULL location_key.
 
     One Observation on the fact write counts both (the skip guard and the
     DQ warning), so neither re-runs the join before the write."""
-    population = wh.read(S.POPULATION_TABLE)
-    dim = build_dim_location(population)
-    wh.replace(dim, S.DIM_TABLE)
-
     ods_day = wh.read(S.ODS_TABLE).filter(
         F.col("report_date") == F.lit(report_date).cast("date")
     )

@@ -2,19 +2,22 @@
 JHU-style fixtures (both header epochs), golden-value assertions,
 idempotent re-runs, mart and alerts across a missing day, the run
 report's row counts, the empty-day skip guard (on both warehouse backends),
-the JDBC alert sink and the per-day job budget."""
+the JDBC alert sink, the per-day job budget, and ``run_day``'s two
+branches: that they overlap, and how an error in either ends the day."""
 
 from __future__ import annotations
 
 import logging
 import os
 import re
+import threading
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from covid_data_pipeline_spark.observe import spark_jobs
-from covid_data_pipeline_spark.plans import alerts
+from covid_data_pipeline_spark.plans import alerts, runner
 from covid_data_pipeline_spark.plans import schemas as S
 from covid_data_pipeline_spark.plans.alerts import build_alerts
 from covid_data_pipeline_spark.plans.mart import process_mart
@@ -289,17 +292,27 @@ def _data_files(wh, table):
     }
 
 
+def _dim_rows(wh):
+    cols = ("location_key", "country_name", "population_year")
+    return sorted(map(tuple, wh.read(S.DIM_TABLE).select(*cols).collect()))
+
+
 def test_empty_day_skips_every_layer(pipeline, spark):
     """A day with no raw rows stops at the ods guard, whose Observation
-    counts the (empty) write, and leaves no data file anywhere."""
+    counts the (empty) write, and leaves no data file in ods, fact, mart
+    or alerts. The dim is rebuilt beside ods on every day, as the
+    reference replaces it before its skip guard, so it is rewritten with
+    the same rows."""
     wh, _ = pipeline
     tables = (S.ODS_TABLE, S.FACT_TABLE, S.MART_TABLE, S.ALERTS_TABLE)
     before = {t: _data_files(wh, t) for t in tables}
+    dim_before = _dim_rows(wh)
     result = run_day(spark, wh, "2021-05-05")
     assert result.stages == {"ods": False}
     assert result.new_alerts == 0
     assert result.rows == {"ods": 0}
     assert {t: _data_files(wh, t) for t in tables} == before
+    assert _dim_rows(wh) == dim_before and dim_before
 
 
 def test_layer_counts_outside_run_day(pipeline, spark):
@@ -322,18 +335,74 @@ def test_medallion_tables_read_as_inferred(pipeline, spark):
         assert_reads_as_inferred(spark, wh, t)
 
 
-# Spark jobs of a fixture-day re-run (ods → dds → mart → alerts, no
+# Spark jobs of a fixture-day re-run (dim, ods → dds → mart → alerts, no
 # landing): one write per layer plus its AQE stages; table reads run
 # none (schema records). Measured as 13 on 2, 4 and 16 local cores. A
 # probe that re-runs a layer's plan before its write, a plan per alert
-# spec, or a read that infers its schema again, exceeds it.
+# spec, or a read that infers its schema again, exceeds it. Fewer means
+# jobs escaped the caller's job tag: a side branch started on a thread
+# that does not inherit it.
 RERUN_JOB_BUDGET = 13
 
 
 def test_rerun_day_job_budget(pipeline, spark):
     wh, _ = pipeline
     _, jobs = spark_jobs(spark, lambda: run_day(spark, wh, DAYS[2]))
-    assert 0 < jobs <= RERUN_JOB_BUDGET
+    assert jobs == RERUN_JOB_BUDGET
+
+
+def test_run_day_overlaps_its_branches(spark, monkeypatch):
+    """The dim runs beside ods and alerts beside the mart: each stub
+    returns only once its partner has started, so run_day would break
+    the barrier if it ran them one after another. No Spark work."""
+    first, second = threading.Barrier(2, timeout=10), threading.Barrier(2, timeout=10)
+
+    def meets(barrier, value):
+        def stub(*args, **kwargs):
+            barrier.wait()
+            return value
+
+        return stub
+
+    monkeypatch.setattr(runner, "process_dim", meets(first, None))
+    monkeypatch.setattr(runner, "process_ods", meets(first, 5))
+    monkeypatch.setattr(runner, "process_dds", lambda *a: (5, 1))
+    monkeypatch.setattr(runner, "process_mart", meets(second, 4))
+    monkeypatch.setattr(runner, "run_all_alerts", meets(second, 3))
+    result = run_day(spark, None, DAYS[0])
+    assert result.rows == {"ods": 5, "fact": 5, "fact_missing_key": 1, "mart": 4}
+    assert result.new_alerts == 3
+
+
+def test_run_day_branch_errors_join_both_threads(spark, tmp_path, caplog):
+    """An error in either branch is raised after both have stopped: with
+    no population table, the day raises the dim's read error once raw →
+    ods is done; with an unreadable CSV, it raises the raw error once the
+    dim is written; with both, it raises the raw error and logs the
+    dim's. No thread outlives the call."""
+    paths = write_day_csvs(str(tmp_path))
+    baseline = threading.active_count()
+
+    wh = Warehouse(spark, str(tmp_path / "no_population"))
+    with pytest.raises(AnalysisException, match="country_population"):
+        run_day(spark, wh, DAYS[0], csv_path=paths[DAYS[0]])
+    assert threading.active_count() == baseline
+    assert wh.exists(S.ODS_TABLE) and not wh.exists(S.DIM_TABLE)
+
+    wh = Warehouse(spark, str(tmp_path / "unreadable_csv"))
+    bootstrap_population(spark, wh, population_df(spark))
+    with pytest.raises(AnalysisException, match="no_such_day.csv"):
+        run_day(spark, wh, DAYS[0], csv_path=str(tmp_path / "no_such_day.csv"))
+    assert threading.active_count() == baseline
+    assert wh.exists(S.DIM_TABLE) and not wh.exists(S.RAW_TABLE)
+
+    wh = Warehouse(spark, str(tmp_path / "both"))
+    with caplog.at_level(logging.ERROR, logger=runner.__name__):
+        with pytest.raises(AnalysisException, match="no_such_day.csv"):
+            run_day(spark, wh, DAYS[0], csv_path=str(tmp_path / "no_such_day.csv"))
+    [record] = [r for r in caplog.records if r.name == runner.__name__]
+    assert "country_population" in str(record.exc_info[1])
+    assert threading.active_count() == baseline
 
 
 def test_build_alerts_is_one_window_no_union(pipeline, spark):
